@@ -2281,9 +2281,9 @@ object DuckDialect {
   )
 
   /** Enrich a failed `sql`-stage error with the dialect hint, if one of
-    * the known DuckDB-isms is present. `masked` must be the
-    * string-literal-masked SQL (GraftSqlParser.maskQuotes) so literals
-    * can't false-positive.
+    * the known DuckDB-isms is present. `masked` must be the masked SQL
+    * (GraftSqlParser.SqlText) so literals, comments and quoted
+    * identifiers can't false-positive.
     */
   def hintFor(masked: String): Option[String] =
     constructHints.collectFirst { case (re, hint) if re.findFirstIn(masked).isDefined => hint }

@@ -41,18 +41,209 @@ object GraftSqlParser {
     */
   def rewriteAll(sql: String,
       resolve: String => Option[Seq[String]] = _ => None): String =
-    // the outer rename wrap re-applies the idempotent fn renames to
-    // text REWRITTEN BY rewriteDotCall (x.log() emits log(x), which the
-    // inner rename pass has already run past). `resolve` (relation →
-    // columns, session-backed where the caller has one) feeds the
-    // grouping-alias shadowing check only.
+    // the three pure fn renames run once, AFTER rewriteDotCall, so the
+    // calls it emits (x.log() → log(x)) are renamed too. `resolve`
+    // (relation → columns, session-backed where the caller has one)
+    // feeds the grouping-alias shadowing check only.
     rewriteGroupingAliases(resolve = resolve, depth = 0, sql = rewriteDateDiffFn(rewriteRegexpReplaceFn(rewriteLogFn(
-    rewriteDotCall(rewriteMixedIntervalFrame(rewriteFrameExclude(rewriteNamedWindows(rewriteDateDiffFn(rewriteRegexpReplaceFn(rewriteExtractEpoch(rewriteFormatFn(rewritePrintfFn(rewriteIgnoreNulls(rewriteAggOrderBy(rewriteSample(rewriteQuantified(rewriteQualify(
+    rewriteDotCall(rewriteMixedIntervalFrame(rewriteFrameExclude(rewriteNamedWindows(rewriteExtractEpoch(rewriteFormatFn(rewritePrintfFn(rewriteIgnoreNulls(rewriteAggOrderBy(rewriteSample(rewriteQuantified(rewriteQualify(
       rewriteDistinctOn(rewriteStructPack(rewriteStructInsert(
         rewriteExclude(rewriteAsof(rewritePositional(rewriteSubscript(rewriteSlice(
-          rewriteGlob(rewriteSimilarTo(rewriteDecimalDivLiterals(rewriteIntDiv(rewritePow(rewriteCaret(rewriteLogFn(rewriteFilterOver(rewriteJsonOps(rewriteJsonExtractFns(rewriteIntegralCastRound(rewriteBlobType(
+          rewriteGlob(rewriteSimilarTo(rewriteDecimalDivLiterals(rewriteIntDiv(rewritePow(rewriteCaret(rewriteFilterOver(rewriteJsonOps(rewriteJsonExtractFns(rewriteIntegralCastRound(rewriteBlobType(
             rewriteListLiteral(rewriteStructLiteral(rewriteComprehension(
-              rewriteFromFirst(rewriteRawLiterals(sql)))))))))))))))))))))))))))))))))))))))))))
+              rewriteFromFirst(rewriteRawLiterals(sql))))))))))))))))))))))))))))))))))))))))
+
+  /** One DuckDB-rules lex of a statement — the structure every dialect
+    * rewrite reads. `mask` is `sql` with the CONTENTS of single-quoted
+    * literals and of backtick and double-quoted identifiers replaced
+    * by '_' (the quote characters stay; a doubled quote is the escape,
+    * backslashes are not) and `--` / `/* */` comments, markers
+    * included, replaced by spaces (newlines kept). Positions are
+    * preserved, so whatever a rewrite finds in the mask splices back
+    * into `sql` by index, and no rewrite fires inside a literal, a
+    * comment or a quoted identifier. One state machine, so quotes and
+    * comments shadow each other the way the parser sees them: `--`
+    * inside a literal is text, `'` inside a comment is not a quote.
+    * `( [ {` are matched per kind in one table; the cursor helpers
+    * walk it instead of re-counting depth.
+    */
+  private[graft] final class SqlText private (val sql: String) {
+    val mask: String = {
+      val a = sql.toCharArray
+      var i = 0
+      while (i < a.length) {
+        val c = a(i)
+        if (c == '\'' || c == '"' || c == '`') {
+          i += 1
+          var open = true
+          while (open && i < a.length) {
+            if (a(i) != c) { a(i) = '_'; i += 1 }
+            else if (i + 1 < a.length && a(i + 1) == c) { a(i) = '_'; a(i + 1) = '_'; i += 2 }
+            else { open = false; i += 1 }
+          }
+        } else if (c == '-' && i + 1 < a.length && a(i + 1) == '-') {
+          while (i < a.length && a(i) != '\n' && a(i) != '\r') { a(i) = ' '; i += 1 }
+        } else if (c == '/' && i + 1 < a.length && a(i + 1) == '*') {
+          a(i) = ' '; a(i + 1) = ' '; i += 2
+          while (i < a.length && !(a(i) == '*' && i + 1 < a.length && a(i + 1) == '/')) {
+            if (a(i) != '\n' && a(i) != '\r') a(i) = ' '
+            i += 1
+          }
+          if (i < a.length) { a(i) = ' '; a(i + 1) = ' '; i += 2 }
+        } else i += 1
+      }
+      new String(a)
+    }
+
+    private lazy val partner: Array[Int] = {
+      val p = Array.fill(mask.length)(-1)
+      val open = Array.fill(3)(List.empty[Int])
+      for (i <- 0 until mask.length) {
+        val k = "([{".indexOf(mask.charAt(i))
+        if (k >= 0) open(k) = i :: open(k)
+        else {
+          val kc = ")]}".indexOf(mask.charAt(i))
+          if (kc >= 0 && open(kc).nonEmpty) {
+            p(i) = open(kc).head; p(open(kc).head) = i
+            open(kc) = open(kc).tail
+          }
+        }
+      }
+      p
+    }
+
+    def length: Int = mask.length
+    def apply(i: Int): Char = mask.charAt(i)
+
+    /** The bracket matching the `( [ {` or `) ] }` at `i`; -1 when it
+      * is unmatched or not a bracket.
+      */
+    def matching(i: Int): Int = if (i < 0 || i >= length) -1 else partner(i)
+    def closeOf(open: Int): Option[Int] = Some(matching(open)).filter(_ > open)
+    def openOf(close: Int): Option[Int] = Some(matching(close)).filter(o => o >= 0 && o < close)
+
+    def skipWs(i: Int): Int = {
+      var k = i
+      while (k < length && mask.charAt(k).isWhitespace) k += 1
+      k
+    }
+    /** Index just past the last non-blank char before `end`. */
+    def skipWsBack(end: Int): Int = {
+      var k = end
+      while (k > 0 && mask.charAt(k - 1).isWhitespace) k -= 1
+      k
+    }
+
+    def isWordChar(i: Int): Boolean =
+      i >= 0 && i < length && (mask.charAt(i).isLetterOrDigit || mask.charAt(i) == '_')
+    def isWordStart(i: Int): Boolean =
+      i < length && mask.charAt(i).isLetter && !isWordChar(i - 1)
+    /** The upper-cased word starting at `first` ("" when none). */
+    def wordAt(first: Int): String = {
+      var e = first
+      while (isWordChar(e)) e += 1
+      if (e <= first) "" else mask.substring(first, e).toUpperCase
+    }
+    /** The upper-cased word ending at `last` (inclusive) — "" unless a
+      * letter sits there (keyword lookups, not identifiers).
+      */
+    def wordEndingAt(last: Int): String = {
+      if (last < 0 || !mask.charAt(last).isLetter) return ""
+      var b = last
+      while (isWordChar(b - 1)) b -= 1
+      mask.substring(b, last + 1).toUpperCase
+    }
+    /** Start of the (dotted) identifier chain ending at `last`. */
+    def chainStart(last: Int): Int = {
+      var k = last
+      while (isWordChar(k) || (k >= 0 && mask.charAt(k) == '.')) k -= 1
+      k + 1
+    }
+
+    /** The innermost '(' enclosing `pos`, -1 at top level. */
+    def enclosing(pos: Int): Int = {
+      var i = pos - 1
+      while (i >= 0) {
+        val c = mask.charAt(i)
+        if (c == '(') return i
+        val o = if (c == ')' || c == ']' || c == '}') matching(i) else -1
+        i = (if (o >= 0) o else i) - 1
+      }
+      -1
+    }
+
+    /** Walk [from, until) at bracket depth 0 relative to `from`:
+      * returns the first position where `stop` holds, else the first
+      * close bracket the range didn't open (the enclosing block ends
+      * there), else `until`. Bracket groups are skipped whole; an
+      * unmatched open swallows the rest.
+      */
+    def walk0(from: Int, until: Int = length)(stop: Int => Boolean): Int = {
+      var i = from
+      while (i < until) {
+        val c = mask.charAt(i)
+        if (c == ')' || c == ']' || c == '}') return i
+        if (stop(i)) return i
+        if (c == '(' || c == '[' || c == '{') i = if (partner(i) < 0) until else partner(i) + 1
+        else i += 1
+      }
+      until
+    }
+    /** [[walk0]] stopping at the first depth-0 word `p` accepts. */
+    def word0(from: Int, until: Int = length)(p: String => Boolean): Int =
+      walk0(from, until)(i => isWordStart(i) && p(wordAt(i)))
+    /** Matches of `re` in mask[from, until) that start at depth 0
+      * (match offsets are relative to `from`).
+      */
+    def findAll0(re: scala.util.matching.Regex, from: Int = 0,
+        until: Int = length): Seq[scala.util.matching.Regex.Match] = {
+      val ms = re.findAllMatchIn(mask.substring(from, until)).toSeq
+      if (ms.isEmpty) ms
+      else {
+        val top = scala.collection.mutable.BitSet()
+        walk0(from, until) { i => top += i - from; false }
+        ms.filter(m => top(m.start))
+      }
+    }
+    /** Position of the first depth-0 match of `re` in mask[from, until). */
+    def find0(re: scala.util.matching.Regex, from: Int = 0, until: Int = length): Option[Int] =
+      findAll0(re, from, until).headOption.map(_.start + from)
+    /** [from, until) split at depth-0 commas, as spans. */
+    def spans0(from: Int = 0, until: Int = length): Seq[(Int, Int)] = {
+      val out = Seq.newBuilder[(Int, Int)]
+      var last = from
+      walk0(from, until) { i =>
+        if (mask.charAt(i) == ',') { out += ((last, i)); last = i + 1 }
+        false
+      }
+      (out += ((last, until))).result()
+    }
+    /** sql[from, until) split at depth-0 commas. */
+    def split0(from: Int = 0, until: Int = length): Seq[String] =
+      spans0(from, until).map { case (a, b) => sql.substring(a, b) }
+    /** `sql` with each mask match of `re` that `f` maps replaced. */
+    def replaceAll(re: scala.util.matching.Regex)(
+        f: scala.util.matching.Regex.Match => Option[String]): String = {
+      val sb = new java.lang.StringBuilder
+      var last = 0
+      re.findAllMatchIn(mask).foreach { m =>
+        f(m).foreach { r => sb.append(sql, last, m.start).append(r); last = m.end }
+      }
+      if (last == 0) sql else sb.append(sql, last, sql.length).toString
+    }
+  }
+
+  private[graft] object SqlText {
+    private val last = new ThreadLocal[SqlText]
+    /** The lex of `sql`. A rewrite that finds nothing returns its input
+      * String, so the next pass reuses this lex instead of re-lexing.
+      */
+    def apply(sql: String): SqlText = {
+      val t = last.get
+      if (t != null && (t.sql eq sql)) t
+      else { val n = new SqlText(sql); last.set(n); n }
+    }
+  }
 
   /** DuckDB single-quoted string literals are RAW — no backslash
     * escapes (`'\d'` is backslash-d) — while Spark's parser unescapes
@@ -64,38 +255,19 @@ object GraftSqlParser {
     * later rewrites: a literal's TEXT is the Spark-escaped form of the
     * raw original — rewrites that move literal text verbatim stay
     * correct; only one (GLOB) interprets backslashes inside literal
-    * content, where glob patterns don't carry them in practice.
-    * Comments and quote-doubling (`''`) are tracked like maskQuotes.
+    * content, where glob patterns don't carry them in practice. In the
+    * mask a `'` is always a literal delimiter, so literal content is
+    * whatever sits between an odd and an even one.
     */
   def rewriteRawLiterals(sql: String): String = {
     if (sql.indexOf('\\') < 0) return sql
+    val mask = SqlText(sql).mask
     val sb = new java.lang.StringBuilder(sql.length + 16)
-    var i = 0
-    var inQ = false
-    var inLine = false
-    var inBlock = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      val next = if (i + 1 < sql.length) sql.charAt(i + 1) else '\u0000'
-      if (inQ) {
-        if (c == '\\') { sb.append("\\\\"); i += 1 }
-        else if (c == '\'' && next == '\'') { sb.append("''"); i += 2 }
-        else {
-          if (c == '\'') inQ = false
-          sb.append(c); i += 1
-        }
-      } else if (inLine) {
-        if (c == '\n' || c == '\r') inLine = false
-        sb.append(c); i += 1
-      } else if (inBlock) {
-        if (c == '*' && next == '/') { sb.append("*/"); inBlock = false; i += 2 }
-        else { sb.append(c); i += 1 }
-      } else if (c == '-' && next == '-') { sb.append("--"); inLine = true; i += 2 }
-      else if (c == '/' && next == '*') { sb.append("/*"); inBlock = true; i += 2 }
-      else {
-        if (c == '\'') inQ = true
-        sb.append(c); i += 1
-      }
+    var inLit = false
+    for (i <- 0 until sql.length) {
+      if (mask.charAt(i) == '\'') inLit = !inLit
+      else if (inLit && sql.charAt(i) == '\\') sb.append('\\')
+      sb.append(sql.charAt(i))
     }
     sb.toString
   }
@@ -147,63 +319,29 @@ object GraftSqlParser {
     * expressions — anything else keeps the guided error.
     */
   def rewriteQuantified(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = QuantOpRe.findAllMatchIn(masked).find { mm =>
+    val t = SqlText(sql)
+    val m = QuantOpRe.findAllMatchIn(t.mask).find { mm =>
       // require a subquery head inside the paren
       raw"(?is)^\s*(SELECT|WITH|FROM)\b".r
-        .findFirstIn(masked.substring(mm.end)).isDefined
+        .findFirstIn(t.mask.substring(mm.end)).isDefined
     }.getOrElse(return sql)
-    // subquery extent: balance from the open paren at m.end - 1
-    var d = 1
-    var i = m.end
-    while (i < masked.length && d > 0) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (d != 0) return sql
-    val subq = sql.substring(m.end, i - 1).trim
+    val close = t.closeOf(m.end - 1).getOrElse(return sql)
+    val subq = sql.substring(m.end, close).trim
     // left operand extent (backward scan)
-    var ls = m.start - 1
-    while (ls >= 0 && masked.charAt(ls).isWhitespace) ls -= 1
+    val ls = t.skipWsBack(m.start) - 1
     if (ls < 0) return sql
-    def identStart(k0: Int): Int = {
-      var k = k0
-      while (k >= 0 && (masked.charAt(k).isLetterOrDigit ||
-        masked.charAt(k) == '_' || masked.charAt(k) == '.')) k -= 1
-      k + 1
-    }
     val leftStart: Int =
-      if (masked.charAt(ls) == ')') {
-        var d2 = 1
-        var k = ls - 1
-        while (k >= 0 && d2 > 0) {
-          masked.charAt(k) match {
-            case ')' => d2 += 1
-            case '(' => d2 -= 1
-            case _ =>
-          }
-          if (d2 > 0) k -= 1
-        }
-        if (d2 != 0) return sql
-        identStart(k - 1) // include a function-name chain, if any
-      } else if (masked.charAt(ls).isLetterOrDigit || masked.charAt(ls) == '_') {
-        identStart(ls)
-      } else return sql // unsupported operand shape → guided error stays
+      if (t(ls) == ')') // include a function-name chain, if any
+        t.chainStart(t.openOf(ls).getOrElse(return sql) - 1)
+      else if (t.isWordChar(ls)) t.chainStart(ls)
+      else return sql // unsupported operand shape → guided error stays
     // The backward scan claims ONE term; if the char before it is an
     // expression-continuing operator (`a || b > ALL …`, `a + b > ALL …`)
     // the true left operand is the whole compound and claiming just `b`
     // would rewrite silently wrong (e.g. `a || (CASE …)` string-concats
     // a boolean). Those shapes keep the guided error.
-    val beforeLeft: Int = {
-      var p = leftStart - 1
-      while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
-      p
-    }
-    if (beforeLeft >= 0 && "|+-*/%^&<>=!~:".indexOf(masked.charAt(beforeLeft)) >= 0)
+    val beforeLeft = t.skipWsBack(leftStart) - 1
+    if (beforeLeft >= 0 && "|+-*/%^&<>=!~:".indexOf(t(beforeLeft)) >= 0)
       return sql
     val x = sql.substring(leftStart, m.start).trim
     val op = m.group(1) match { case "!=" => "<>"; case o => o }
@@ -267,7 +405,7 @@ object GraftSqlParser {
             s"WHEN $nullCnt > 0 THEN NULL " +
             s"WHEN ($x) IS NULL THEN NULL ELSE FALSE END)"
     }
-    rewriteQuantified(sql.substring(0, leftStart) + replacement + sql.substring(i))
+    rewriteQuantified(sql.substring(0, leftStart) + replacement + sql.substring(close + 1))
   }
 
   /** Inline NAMED windows that carry a frame-EXCLUDE clause (r14):
@@ -287,105 +425,57 @@ object GraftSqlParser {
     * <extension> )`. Extensions carrying their own parens are not
     * claimed (none of the frame grammar needs them).
     */
-  /** Parse the SELECT-level `WINDOW name AS ( … )[, …]` clause into
-    * (name, spec) pairs — positions-free twin of the EXCLUDE flow's
-    * inline parse, shared by the r16 extension-reference inlining.
+  /** Parse the SELECT-level `WINDOW name AS ( … )[, …]` clause: its
+    * [start, end) span and (name, spec) pairs — shared by the EXCLUDE
+    * inlining and the r16 extension-reference inlining. None when
+    * absent or malformed (left for Spark's parser).
     */
-  private def namedWindowDefs(sql: String, masked: String): Seq[(String, String)] = {
-    val wm = raw"(?i)\bWINDOW\s+".r.findAllMatchIn(masked).toSeq
-      .find { m =>
-        val before = masked.substring(0, m.start)
-        !raw"(?i)(OVER|AS)\s*$$".r.findFirstIn(before).isDefined
-      }.getOrElse(return Nil)
-    var pos = wm.end
-    val defs = scala.collection.mutable.ArrayBuffer[(String, String)]()
+  private def namedWindowDefs(t: SqlText): Option[(Int, Int, Seq[(String, String)])] = {
+    val wm = raw"(?i)\bWINDOW\s+".r.findAllMatchIn(t.mask).find { m =>
+      // the SELECT-level WINDOW clause, not a function named window
+      raw"(?i)(OVER|AS)\s*$$".r.findFirstIn(t.mask.substring(0, m.start)).isEmpty
+    }.getOrElse(return None)
     val DefHead = raw"(?is)^([A-Za-z_]\w*)\s+AS\s*\(".r
-    var ok = true
-    while (ok) {
-      DefHead.findFirstMatchIn(masked.substring(pos)) match {
-        case Some(dm) =>
-          var d = 1
-          var i = pos + dm.end
-          while (i < masked.length && d > 0) {
-            masked.charAt(i) match {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ =>
-            }
-            i += 1
-          }
-          if (d != 0) return Nil
-          defs += ((dm.group(1), sql.substring(pos + dm.end, i - 1).trim))
-          val rest = masked.substring(i)
-          val comma = raw"^\s*,\s*".r.findFirstMatchIn(rest)
-          if (comma.isDefined) pos = i + comma.get.end else ok = false
-        case None => return defs.toSeq
-      }
+    val defs = Seq.newBuilder[(String, String)]
+    var pos = wm.end
+    var more = true
+    while (more) {
+      val dm = DefHead.findFirstMatchIn(t.mask.substring(pos)).getOrElse(return None)
+      val close = t.closeOf(pos + dm.end - 1).getOrElse(return None)
+      defs += ((dm.group(1), t.sql.substring(pos + dm.end, close).trim))
+      val comma = raw"^\s*,\s*".r.findFirstMatchIn(t.mask.substring(close + 1))
+      more = comma.isDefined
+      pos = close + 1 + comma.map(_.end).getOrElse(0)
     }
-    defs.toSeq
+    Some((wm.start, pos, defs.result()))
   }
 
   def rewriteNamedWindows(sql: String): String = {
-    val masked0 = maskQuotes(sql)
+    val t = SqlText(sql)
+    val clause = namedWindowDefs(t)
     // named-window EXTENSION references: inline `OVER ( name ext )`
     // for every SELECT-level WINDOW definition
-    if (raw"(?i)\bWINDOW\s+[A-Za-z_]\w*\s+AS\s*\(".r.findFirstIn(masked0).isDefined) {
-      namedWindowDefs(sql, masked0).foreach { case (n, s) =>
-        val extRe =
-          (raw"(?is)\bOVER\s*\(\s*" + java.util.regex.Pattern.quote(n) +
-            raw"\s+([^()]*[^()\s])\s*\)").r
-        extRe.findFirstMatchIn(masked0).foreach { em =>
-          val ext = sql.substring(em.start(1), em.end(1))
-          return rewriteNamedWindows(sql.substring(0, em.start) +
-            s"OVER ( $s $ext )" + sql.substring(em.end))
-        }
+    clause.foreach(_._3.foreach { case (n, s) =>
+      val extRe =
+        (raw"(?is)\bOVER\s*\(\s*" + java.util.regex.Pattern.quote(n) +
+          raw"\s+([^()]*[^()\s])\s*\)").r
+      extRe.findFirstMatchIn(t.mask).foreach { em =>
+        val ext = sql.substring(em.start(1), em.end(1))
+        return rewriteNamedWindows(sql.substring(0, em.start) +
+          s"OVER ( $s $ext )" + sql.substring(em.end))
       }
-    }
-    val masked = masked0
+    })
     if (raw"(?i)\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES)\b".r
-        .findFirstIn(masked).isEmpty) return sql
-    val wm = raw"(?i)\bWINDOW\s+".r.findAllMatchIn(masked).toSeq
-      .find { m =>
-        // the SELECT-level WINDOW clause, not a function named window
-        val before = masked.substring(0, m.start)
-        !raw"(?i)(OVER|AS)\s*$$".r.findFirstIn(before).isDefined
-      }.getOrElse(return sql)
-    // parse `name AS ( … ) [, name AS ( … )]*`
-    var pos = wm.end
-    val defs = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    val DefHead = raw"(?is)^([A-Za-z_]\w*)\s+AS\s*\(".r
-    var ok = true
-    var clauseEnd = pos
-    while (ok) {
-      DefHead.findFirstMatchIn(masked.substring(pos)) match {
-        case Some(dm) =>
-          var d = 1
-          var i = pos + dm.end
-          while (i < masked.length && d > 0) {
-            masked.charAt(i) match {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ =>
-            }
-            i += 1
-          }
-          if (d != 0) return sql // unbalanced — leave for Spark's parser
-          defs += ((dm.group(1), sql.substring(pos + dm.end, i - 1).trim))
-          clauseEnd = i
-          val rest = masked.substring(i)
-          val comma = raw"^\s*,\s*".r.findFirstMatchIn(rest)
-          if (comma.isDefined) pos = i + comma.get.end else ok = false
-        case None => return sql
-      }
-    }
+        .findFirstIn(t.mask).isEmpty) return sql
+    val (clauseStart, clauseEnd, defs) = clause.getOrElse(return sql)
     val (inlined, kept) = defs.partition(d =>
       raw"(?i)\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\b".r
-        .findFirstIn(maskQuotes(d._2)).isDefined)
+        .findFirstIn(SqlText(d._2).mask).isDefined)
     if (inlined.isEmpty) return sql
     val newClause =
       if (kept.isEmpty) ""
       else " WINDOW " + kept.map { case (n, s) => s"$n AS ($s)" }.mkString(", ") + " "
-    var out = sql.substring(0, wm.start) + newClause + sql.substring(clauseEnd)
+    var out = sql.substring(0, clauseStart) + newClause + sql.substring(clauseEnd)
     inlined.foreach { case (n, s) =>
       out = raw"(?i)\bOVER\s+${java.util.regex.Pattern.quote(n)}\b".r
         .replaceAllIn(out,
@@ -411,85 +501,50 @@ object GraftSqlParser {
     * hour) is unrepresentable as one Spark bound type and stays loud.
     */
   def rewriteMixedIntervalFrame(sql: String): String = {
-    val masked = maskQuotes(sql)
     val daySecs = Map("DAY" -> 86400L, "HOUR" -> 3600L, "MINUTE" -> 60L, "SECOND" -> 1L)
     val ymMonths = Map("YEAR" -> 12L, "MONTH" -> 1L)
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- MixedIntervalFrameRe.findAllMatchIn(masked)) {
+    SqlText(sql).replaceAll(MixedIntervalFrameRe) { m =>
       val (n1, u1, d1) = (m.group(1).toLong, m.group(2).toUpperCase, m.group(3).toUpperCase)
       val (n2, u2, d2) = (m.group(4).toLong, m.group(5).toUpperCase, m.group(6).toUpperCase)
-      val repl: Option[String] =
-        if (u1 == u2) None
-        else if (daySecs.contains(u1) && daySecs.contains(u2))
-          Some(s"RANGE BETWEEN INTERVAL '${n1 * daySecs(u1)}' SECOND $d1 " +
-            s"AND INTERVAL '${n2 * daySecs(u2)}' SECOND $d2")
-        else if (ymMonths.contains(u1) && ymMonths.contains(u2))
-          Some(s"RANGE BETWEEN INTERVAL '${n1 * ymMonths(u1)}' MONTH $d1 " +
-            s"AND INTERVAL '${n2 * ymMonths(u2)}' MONTH $d2")
-        else None // class mix — no single Spark bound type; stays loud
-      repl.foreach { r =>
-        sb.append(sql.substring(last, m.start)).append(r)
-        last = m.end
-      }
+      if (u1 == u2) None
+      else if (daySecs.contains(u1) && daySecs.contains(u2))
+        Some(s"RANGE BETWEEN INTERVAL '${n1 * daySecs(u1)}' SECOND $d1 " +
+          s"AND INTERVAL '${n2 * daySecs(u2)}' SECOND $d2")
+      else if (ymMonths.contains(u1) && ymMonths.contains(u2))
+        Some(s"RANGE BETWEEN INTERVAL '${n1 * ymMonths(u1)}' MONTH $d1 " +
+          s"AND INTERVAL '${n2 * ymMonths(u2)}' MONTH $d2")
+      else None // class mix — no single Spark bound type; stays loud
     }
-    if (last == 0) sql else { sb.append(sql.substring(last)); sb.toString }
   }
 
   def rewriteFrameExclude(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = FrameExcludeRe.findFirstMatchIn(masked).getOrElse(return sql)
+    val t = SqlText(sql)
+    val m = FrameExcludeRe.findFirstMatchIn(t.mask).getOrElse(return sql)
     val mode = m.group(1).toUpperCase.replaceAll(raw"\s+", " ")
     if (mode == "NO OTHERS") // the default, in both engines
       return rewriteFrameExclude(sql.substring(0, m.start) + ")" + sql.substring(m.end))
     val close = m.end - 1
-    // backward to the OVER-paren's open
-    var d = 1
-    var i = close - 1
-    while (i >= 0 && d > 0) {
-      masked.charAt(i) match {
-        case ')' => d += 1
-        case '(' => d -= 1
-        case _ =>
-      }
-      if (d > 0) i -= 1
-    }
-    if (d != 0) frameExcludeFail("unbalanced window parens")
-    val specOpen = i
+    val specOpen = t.openOf(close).getOrElse(frameExcludeFail("unbalanced window parens"))
     val spec = sql.substring(specOpen + 1, m.start).trim
     // the word before the open paren must be OVER (named windows keep
     // the guided error — the clause lives in a WINDOW definition there)
-    var j = specOpen - 1
-    while (j >= 0 && masked.charAt(j).isWhitespace) j -= 1
-    if (j < 3 || !wordEndingAt(masked, j).equalsIgnoreCase("OVER"))
+    val overEnd = t.skipWsBack(specOpen) - 1
+    if (overEnd < 3 || t.wordEndingAt(overEnd) != "OVER")
       frameExcludeFail("not an inline OVER (...) window")
-    j -= "OVER".length
-    while (j >= 0 && masked.charAt(j).isWhitespace) j -= 1
-    if (j < 0 || masked.charAt(j) != ')')
+    val argsClose = t.skipWsBack(overEnd - 3) - 1
+    if (argsClose < 0 || t(argsClose) != ')')
       frameExcludeFail("no aggregate call before OVER")
-    val argsClose = j
-    d = 1; j -= 1
-    while (j >= 0 && d > 0) {
-      masked.charAt(j) match {
-        case ')' => d += 1
-        case '(' => d -= 1
-        case _ =>
-      }
-      if (d > 0) j -= 1
-    }
-    if (d != 0) frameExcludeFail("unbalanced aggregate parens")
-    val argsOpen = j
+    val argsOpen = t.openOf(argsClose).getOrElse(frameExcludeFail("unbalanced aggregate parens"))
     val args = sql.substring(argsOpen + 1, argsClose).trim
-    var k = argsOpen - 1
-    while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-    if (k < 0 || !(masked.charAt(k).isLetterOrDigit || masked.charAt(k) == '_'))
+    val k = t.skipWsBack(argsOpen) - 1
+    if (!t.isWordChar(k))
       frameExcludeFail("no aggregate name before the argument list")
     var b = k
-    while (b >= 0 && (masked.charAt(b).isLetterOrDigit || masked.charAt(b) == '_')) b -= 1
+    while (t.isWordChar(b)) b -= 1
     val fn = sql.substring(b + 1, k + 1).toLowerCase
     val fnStart = b + 1
     // frame analysis: can it contain the current row / the peer group?
-    val specMasked = maskQuotes(spec)
+    val specMasked = SqlText(spec).mask
     val frameM = raw"(?is)\b(ROWS|RANGE|GROUPS)\s+(?:BETWEEN\s+(.*?)\s+AND\s+(.*)|(.*))$$".r
       .findFirstMatchIn(specMasked)
     def frameBounds(fm: scala.util.matching.Regex.Match): (String, String) = {
@@ -577,12 +632,9 @@ object GraftSqlParser {
     * `graft_date_diff` (DuckDB's boundary-crossing semantics); Spark's
     * own unquoted forms (`date_diff(DAY, a, b)`) pass through native.
     */
-  def rewriteDateDiffFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = DateDiffFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    rewriteDateDiffFn(sql.substring(0, m.start(1)) + "graft_date_diff" +
-      sql.substring(m.end(1)))
-  }
+  def rewriteDateDiffFn(sql: String): String =
+    SqlText(sql).replaceAll(DateDiffFnRe)(m =>
+      Some("graft_date_diff" + sql.substring(m.end(1), m.end)))
 
   private val DotCallRe = raw"\.\s*([A-Za-z_]\w*)\s*\(".r
 
@@ -598,9 +650,9 @@ object GraftSqlParser {
     * bare names); documented edge.
     */
   def rewriteDotCall(sql: String): String = {
-    val masked = maskQuotes(sql)
-    DotCallRe.findAllMatchIn(masked).foreach { m =>
-      sliceBaseStart(masked, m.start).foreach { bs =>
+    val t = SqlText(sql)
+    DotCallRe.findAllMatchIn(t.mask).foreach { m =>
+      sliceBaseStart(t, m.start).foreach { bs =>
         // a bare-identifier base that is PART of the dotted name
         // (x.y.fn()) claims the whole qualified chain via the base
         // scan, so nothing special needed; but skip when the "base"
@@ -608,25 +660,12 @@ object GraftSqlParser {
         // (e.g. `OVER (...)`, handled by requiring the char before
         // '(' to be the match's ident, which it is by construction)
         val base = sql.substring(bs, m.start).trim
-        if (base.nonEmpty) {
+        if (base.nonEmpty) t.closeOf(m.end - 1).foreach { j =>
           val fn = m.group(1)
-          // find the call's matching close paren
-          var d = 1
-          var j = m.end
-          while (j < masked.length && d > 0) {
-            masked.charAt(j) match {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ =>
-            }
-            if (d > 0) j += 1
-          }
-          if (d == 0) {
-            val args = sql.substring(m.end, j).trim
-            val call =
-              if (args.isEmpty) s"$fn($base)" else s"$fn($base, $args)"
-            return rewriteDotCall(sql.substring(0, bs) + call + sql.substring(j + 1))
-          }
+          val args = sql.substring(m.end, j).trim
+          val call =
+            if (args.isEmpty) s"$fn($base)" else s"$fn($base, $args)"
+          return rewriteDotCall(sql.substring(0, bs) + call + sql.substring(j + 1))
         }
       }
     }
@@ -645,12 +684,8 @@ object GraftSqlParser {
     * through the registry too, so overriding the name would change
     * semantics under every internal quality operator.
     */
-  def rewriteRegexpReplaceFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = RegexpReplaceFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    rewriteRegexpReplaceFn(sql.substring(0, m.start) + "duck_regexp_replace(" +
-      sql.substring(m.end))
-  }
+  def rewriteRegexpReplaceFn(sql: String): String =
+    SqlText(sql).replaceAll(RegexpReplaceFnRe)(_ => Some("duck_regexp_replace("))
 
   private val ExtractEpochRe = raw"(?i)(?<![\w.])EXTRACT\s*\(\s*EPOCH\s+FROM\b".r
 
@@ -659,11 +694,8 @@ object GraftSqlParser {
     * head to the registered `epoch(` (DOUBLE seconds, DuckDB's type),
     * leaving the operand and closing paren in place.
     */
-  def rewriteExtractEpoch(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = ExtractEpochRe.findFirstMatchIn(masked).getOrElse(return sql)
-    rewriteExtractEpoch(sql.substring(0, m.start) + "epoch(" + sql.substring(m.end))
-  }
+  def rewriteExtractEpoch(sql: String): String =
+    SqlText(sql).replaceAll(ExtractEpochRe)(_ => Some("epoch("))
 
   private val IgnoreNullsInsideRe = raw"(?is)\b(IGNORE|RESPECT)\s+NULLS\s*\)".r
 
@@ -675,13 +707,9 @@ object GraftSqlParser {
     * same as DuckDB outside window functions).
     */
   def rewriteIgnoreNulls(sql: String): String = {
-    val masked = maskQuotes(sql)
-    IgnoreNullsInsideRe.findAllMatchIn(masked).foreach { m =>
-      val close = m.end - 1 // position of ')'
-      var a = close + 1
-      while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
-      if (a < masked.length && masked.charAt(a).isLetter &&
-        wordStartingAt(masked, a).equalsIgnoreCase("OVER")) {
+    val t = SqlText(sql)
+    IgnoreNullsInsideRe.findAllMatchIn(t.mask).foreach { m =>
+      if (t.wordAt(t.skipWs(m.end)) == "OVER") {
         val modifier = sql.substring(m.start(1), m.end(1)).toUpperCase + " NULLS"
         val rewritten = sql.substring(0, m.start).stripSuffix(" ") +
           ") " + modifier + " " + sql.substring(m.end)
@@ -716,12 +744,10 @@ object GraftSqlParser {
     * format strings still fail with guidance to printf.
     */
   def rewriteFormatFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = FormatFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    val close = closeOf(masked, m.end).getOrElse(return sql)
-    val inner = sql.substring(m.end, close - 1)
-    val innerMasked = masked.substring(m.end, close - 1)
-    val args = splitTopLevel(inner, innerMasked).map(_.trim)
+    val t = SqlText(sql)
+    val m = FormatFnRe.findFirstMatchIn(t.mask).getOrElse(return sql)
+    val close = t.closeOf(m.end - 1).getOrElse(return sql)
+    val args = t.split0(m.end, close).map(_.trim)
     if (args.isEmpty) formatFail("no arguments")
     val fmtM = raw"(?s)^'((?:[^']|'')*)'$$".r.findFirstMatchIn(args.head)
       .getOrElse(formatFail("the format string must be a single literal"))
@@ -767,7 +793,7 @@ object GraftSqlParser {
     val replacement =
       if (parts.result().isEmpty) "''"
       else s"concat(${parts.result().mkString(", ")})"
-    rewriteFormatFn(sql.substring(0, m.start) + replacement + sql.substring(close))
+    rewriteFormatFn(sql.substring(0, m.start) + replacement + sql.substring(close + 1))
   }
 
   private val PrintfFnRe = raw"(?i)(?<![\w.])printf\s*\(".r
@@ -801,12 +827,10 @@ object GraftSqlParser {
     * argument indexing".
     */
   def rewritePrintfFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = PrintfFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    val close = closeOf(masked, m.end).getOrElse(return sql)
-    val inner = sql.substring(m.end, close - 1)
-    val innerMasked = masked.substring(m.end, close - 1)
-    val args = splitTopLevel(inner, innerMasked).map(_.trim)
+    val t = SqlText(sql)
+    val m = PrintfFnRe.findFirstMatchIn(t.mask).getOrElse(return sql)
+    val close = t.closeOf(m.end - 1).getOrElse(return sql)
+    val args = t.split0(m.end, close).map(_.trim)
     if (args.isEmpty) printfFail("no arguments")
     val fmtM = raw"(?s)^'((?:[^']|'')*)'$$".r.findFirstMatchIn(args.head)
       .getOrElse(printfFail("the format string must be a single literal"))
@@ -939,7 +963,7 @@ object GraftSqlParser {
     val replacement =
       if (parts.result().isEmpty) "''"
       else s"concat(${parts.result().mkString(", ")})"
-    rewritePrintfFn(sql.substring(0, m.start) + replacement + sql.substring(close))
+    rewritePrintfFn(sql.substring(0, m.start) + replacement + sql.substring(close + 1))
   }
 
   private val AggOrderByFnRe =
@@ -970,39 +994,24 @@ object GraftSqlParser {
     * must order by total keys, same as any oracle.
     */
   def rewriteAggOrderBy(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val hit = AggOrderByFnRe.findAllMatchIn(masked).flatMap { m =>
-      closeOf(masked, m.end).flatMap { close =>
-        val innerMasked = masked.substring(m.end, close - 1)
+    val t = SqlText(sql)
+    val hit = AggOrderByFnRe.findAllMatchIn(t.mask).flatMap { m =>
+      t.closeOf(m.end - 1).flatMap { close =>
         // depth-0 ORDER BY inside the call arguments
-        var d = 0; var at = -1; var k = 0
-        while (k < innerMasked.length && at < 0) {
-          val c = innerMasked.charAt(k)
-          if (c == '(') { d += 1; k += 1 }
-          else if (c == ')') { d -= 1; k += 1 }
-          else if (d == 0 && (c == 'O' || c == 'o') &&
-            (k == 0 || (!innerMasked.charAt(k - 1).isLetterOrDigit && innerMasked.charAt(k - 1) != '_')) &&
-            raw"(?is)^ORDER\s+BY\b".r.findFirstIn(innerMasked.substring(k)).isDefined) at = k
-          else k += 1
-        }
-        if (at < 0) None else Some((m, close, at))
+        t.find0(raw"(?is)\bORDER\s+BY\b".r, m.end, close).map(ob => (m, close, ob - m.end))
       }
-    }.toSeq.headOption
+    }.nextOption()
     hit match {
       case None => sql
       case Some((m, close, obAt)) =>
         val fn = sql.substring(m.start(1), m.end(1)).toLowerCase
-        val inner = sql.substring(m.end, close - 1)
-        val innerMasked = masked.substring(m.end, close - 1)
+        val inner = sql.substring(m.end, close)
         // Window (OVER) use is a TERMINAL disposition, not a parity
         // gap: DuckDB 1.0.0 itself rejects the form ("Parser Error:
         // ORDER BY is not implemented for window functions!", probed
         // r17 for first/last/string_agg/array_agg with and without a
         // window-spec ORDER BY) — both engines refuse loudly.
-        var a = close
-        while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
-        if (a < masked.length && masked.charAt(a).isLetter &&
-          wordStartingAt(masked, a).equalsIgnoreCase("OVER"))
+        if (t.wordAt(t.skipWs(close + 1)) == "OVER")
           aggOrderByFail(fn, "window (OVER) use — DuckDB rejects this too " +
             "(its parser: ORDER BY is not implemented for window functions); " +
             "order inside the window spec")
@@ -1013,7 +1022,7 @@ object GraftSqlParser {
           distinct = true; argsPart = argsPart.substring(dm.end)
         }
         // per-key (expr, desc, nullsFirst) with DuckDB's NULLS LAST default
-        val keys = splitTopLevel(orderPart, maskQuotes(orderPart)).map { it0 =>
+        val keys = SqlText(orderPart).split0().map { it0 =>
           var e = it0.trim; var desc = false; var nullsFirst = false
           raw"(?is)\s+NULLS\s+(FIRST|LAST)\s*$$".r.findFirstMatchIn(e).foreach { nm =>
             nullsFirst = nm.group(1).equalsIgnoreCase("FIRST")
@@ -1042,7 +1051,7 @@ object GraftSqlParser {
             s"named_struct($fields, '__v', ($value)))" +
             s", (l, r) -> CASE $cmp ELSE 0 END), s -> $v)"
         }
-        val args = splitTopLevel(argsPart, maskQuotes(argsPart))
+        val args = SqlText(argsPart).split0()
         val nArgs = args.size
         val replacement = fn match {
           case "string_agg" | "group_concat" =>
@@ -1076,7 +1085,7 @@ object GraftSqlParser {
             } else
               s"element_at(${sortedStruct(argsPart)}, ${if (isFirst) 1 else -1})"
         }
-        rewriteAggOrderBy(sql.substring(0, m.start) + replacement + sql.substring(close))
+        rewriteAggOrderBy(sql.substring(0, m.start) + replacement + sql.substring(close + 1))
     }
   }
 
@@ -1114,104 +1123,77 @@ object GraftSqlParser {
     * an identity on that text in any call order).
     */
   def rewriteStructLiteral(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val readSpans = ReadFnRe.findAllMatchIn(masked)
-      .flatMap(mm => closeOf(masked, mm.end).map(c => (mm.start, c))).toSeq
+    val t = SqlText(sql)
+    val readSpans = ReadFnRe.findAllMatchIn(t.mask)
+      .flatMap(mm => t.closeOf(mm.end - 1).map(c => (mm.start, c + 1))).toSeq
     var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '{' && !readSpans.exists(s => i > s._1 && i < s._2)) {
-        var p = i
-        while (p > 0 && masked.charAt(p - 1).isWhitespace) p -= 1
-        val isMap = p >= 3 && masked.substring(0, p).toUpperCase.endsWith("MAP")
+    while (i < t.length) {
+      if (t(i) == '{' && !readSpans.exists(s => i > s._1 && i < s._2)) {
+        val p = t.skipWsBack(i)
+        val isMap = p >= 3 && t.mask.substring(0, p).toUpperCase.endsWith("MAP")
         // a standalone MAP word (not an identifier merely ENDING in
         // "map", e.g. `heatmap {…}` — that shape stays a guided error)
         val isMapWord = isMap && (p == 3 || {
-          val ch = masked.charAt(p - 4)
+          val ch = t(p - 4)
           !ch.isLetterOrDigit && ch != '_' && ch != '.' && ch != '"' && ch != '`'
         })
-        var j = i + 1
-        var depth = 1
-        while (j < masked.length && depth > 0) {
-          masked.charAt(j) match {
-            case '{' => depth += 1
-            case '}' => depth -= 1
-            case _ =>
-          }
-          if (depth > 0) j += 1
-        }
-        if (depth == 0 && !isMap) {
-          val bodyRaw = sql.substring(i + 1, j)
-          val bodyMasked = masked.substring(i + 1, j)
-          val items = splitReadArgs(bodyRaw, bodyMasked)
-          val ItemRe = raw"(?s)^\s*'((?:[^']|'')*)'\s*:\s*(\S.*)$$".r
-          val pairs = items.map { it =>
-            ItemRe.findFirstMatchIn(it).map(im =>
-              (im.group(1).replace("''", "'"), im.group(2).trim))
-          }
-          if (items.nonEmpty && pairs.forall(_.isDefined)) {
-            val args = pairs.flatten
-              .map { case (k, v) => s"'${k.replace("'", "''")}', $v" }
-              .mkString(", ")
-            return rewriteStructLiteral(sql.substring(0, i) +
-              s"named_struct($args)" + sql.substring(j + 1))
-          }
-        }
-        if (depth == 0 && isMapWord) {
-          val bodyRaw = sql.substring(i + 1, j)
-          val bodyMasked = masked.substring(i + 1, j)
-          val mapExprOpt: Option[String] =
-            if (bodyRaw.trim.isEmpty) Some("map()")
-            else splitMapPairs(bodyRaw, bodyMasked).map { prs =>
-              "map(" + prs.map { case (k, v) => s"$k, $v" }.mkString(", ") + ")"
+        t.closeOf(i).foreach { j =>
+          if (!isMap) {
+            val items = t.split0(i + 1, j).map(_.trim).filter(_.nonEmpty)
+            val ItemRe = raw"(?s)^\s*'((?:[^']|'')*)'\s*:\s*(\S.*)$$".r
+            val pairs = items.map { it =>
+              ItemRe.findFirstMatchIn(it).map(im =>
+                (im.group(1).replace("''", "'"), im.group(2).trim))
             }
-          mapExprOpt match {
-            case Some(mapExpr) =>
-              val wordStart = p - 3
+            if (items.nonEmpty && pairs.forall(_.isDefined)) {
+              val args = pairs.flatten
+                .map { case (k, v) => s"'${k.replace("'", "''")}', $v" }
+                .mkString(", ")
+              return rewriteStructLiteral(sql.substring(0, i) +
+                s"named_struct($args)" + sql.substring(j + 1))
+            }
+          }
+          if (isMapWord) {
+            val mapExprOpt: Option[String] =
+              if (sql.substring(i + 1, j).trim.isEmpty) Some("map()")
+              else splitMapPairs(t, i + 1, j).map { prs =>
+                "map(" + prs.map { case (k, v) => s"$k, $v" }.mkString(", ") + ")"
+              }
+            mapExprOpt.foreach { mapExpr =>
               // immediate index subscript (no top-level slice colon)?
-              var q = j + 1
-              while (q < masked.length && masked.charAt(q).isWhitespace) q += 1
-              val sub: Option[(Int, Int)] =
-                if (q < masked.length && masked.charAt(q) == '[') {
-                  var m = q + 1
-                  var dd = 0
-                  var colon = false
-                  var close = -1
-                  while (m < masked.length && close < 0) {
-                    masked.charAt(m) match {
-                      case '[' | '(' | '{' => dd += 1
-                      case ']' if dd > 0 => dd -= 1
-                      case ')' | '}' => dd -= 1
-                      case ']' => close = m
-                      case ':' if dd == 0 =>
-                        val isCast =
-                          (m + 1 < masked.length && masked.charAt(m + 1) == ':') ||
-                            masked.charAt(m - 1) == ':'
-                        if (!isCast) colon = true
-                      case _ =>
-                    }
-                    m += 1
-                  }
-                  if (close >= 0 && !colon &&
-                    sql.substring(q + 1, close).trim.nonEmpty) Some((q, close))
-                  else None
-                } else None
+              val q = t.skipWs(j + 1)
+              val sub = (if (q < t.length && t(q) == '[') t.closeOf(q) else None)
+                .filter(close => colons0(t, q + 1, close).isEmpty &&
+                  sql.substring(q + 1, close).trim.nonEmpty)
               val (endPos, newText) = sub match {
-                case Some((open, close)) =>
-                  val key = sql.substring(open + 1, close).trim
+                case Some(close) =>
+                  val key = sql.substring(q + 1, close).trim
                   (close, s"(CASE WHEN map_contains_key($mapExpr, $key) " +
                     s"THEN array(element_at($mapExpr, $key)) ELSE array() END)")
                 case None => (j, mapExpr)
               }
-              return rewriteStructLiteral(sql.substring(0, wordStart) +
+              return rewriteStructLiteral(sql.substring(0, p - 3) +
                 newText + sql.substring(endPos + 1))
-            case None => // malformed body → guided error
+            } // malformed body → guided error
           }
+          i = j // skip the unclaimed group
         }
-        if (depth == 0) i = j // skip the unclaimed group
       }
       i += 1
     }
     sql
+  }
+
+  /** Depth-0 single `:` positions in mask[from, until) — slice or
+    * key/value colons; a `::` cast never counts.
+    */
+  private def colons0(t: SqlText, from: Int, until: Int): Seq[Int] = {
+    val out = Seq.newBuilder[Int]
+    t.walk0(from, until) { i =>
+      if (t(i) == ':' && !t.mask.startsWith("::", i) && (i == 0 || t(i - 1) != ':')) out += i
+      false
+    }
+    out.result()
   }
 
   /** Split a MAP-literal body into (key, value) expression pairs: items
@@ -1221,41 +1203,11 @@ object GraftSqlParser {
     * error. Keys are arbitrary expressions (DuckDB allows `MAP {1:
     * 'x'}`), so no quoting is imposed here.
     */
-  private def splitMapPairs(raw: String, masked: String): Option[Seq[(String, String)]] = {
-    val spans = Seq.newBuilder[(Int, Int)]
-    var d = 0
-    var last = 0
-    var k = 0
-    while (k < masked.length) {
-      masked.charAt(k) match {
-        case '(' | '{' | '[' => d += 1
-        case ')' | '}' | ']' => d -= 1
-        case ',' if d == 0 => spans += ((last, k)); last = k + 1
-        case _ =>
-      }
-      k += 1
-    }
-    spans += ((last, masked.length))
-    val pairs = spans.result().map { case (s, e) =>
-      var c = -1
-      var dd = 0
-      var m = s
-      while (m < e) {
-        masked.charAt(m) match {
-          case '(' | '{' | '[' => dd += 1
-          case ')' | '}' | ']' => dd -= 1
-          case ':' if dd == 0 && c < 0 =>
-            val isCast = (m + 1 < e && masked.charAt(m + 1) == ':') ||
-              (m > s && masked.charAt(m - 1) == ':')
-            if (!isCast) c = m
-          case _ =>
-        }
-        m += 1
-      }
-      if (c < 0) None
-      else {
-        val k0 = raw.substring(s, c).trim
-        val v0 = raw.substring(c + 1, e).trim
+  private def splitMapPairs(t: SqlText, from: Int, until: Int): Option[Seq[(String, String)]] = {
+    val pairs = t.spans0(from, until).map { case (s, e) =>
+      colons0(t, s, e).headOption.flatMap { c =>
+        val k0 = t.sql.substring(s, c).trim
+        val v0 = t.sql.substring(c + 1, e).trim
         if (k0.isEmpty || v0.isEmpty) None else Some((k0, v0))
       }
     }
@@ -1273,49 +1225,29 @@ object GraftSqlParser {
     * becomes `array()`; nesting handles by rescan.
     */
   def rewriteListLiteral(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
     var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
+    while (i < t.length) {
+      if (t(i) == '[') {
         // literal position?
-        var p = i
-        while (p > 0 && masked.charAt(p - 1).isWhitespace) p -= 1
+        val p = t.skipWsBack(i)
         val literalPos =
           if (p == 0) true
           else {
-            val c = masked.charAt(p - 1)
+            val c = t(p - 1)
             if (c == ')' || c == ']' || c == '\'' || c == '`' || c == '.') false
             else if (c.isLetterOrDigit || c == '_' || c == '$') {
               var w = p - 1
-              while (w > 0 && { val x = masked.charAt(w - 1)
+              while (w > 0 && { val x = t(w - 1)
                 x.isLetterOrDigit || x == '_' || x == '$' }) w -= 1
-              PreLiteralKeywords.contains(masked.substring(w, p).toUpperCase)
+              PreLiteralKeywords.contains(t.mask.substring(w, p).toUpperCase)
             } else true // operator / '(' / ',' / etc.
           }
-        if (literalPos) {
-          // matching ']' by bracket depth
-          var j = i + 1
-          var depth = 1
-          while (j < masked.length && depth > 0) {
-            masked.charAt(j) match {
-              case '[' => depth += 1
-              case ']' => depth -= 1
-              case _ =>
-            }
-            if (depth > 0) j += 1
-          }
-          if (depth == 0) {
-            val body = masked.substring(i + 1, j)
-            def topLevelHas(re: scala.util.matching.Regex): Boolean =
-              re.findAllMatchIn(body).exists { m =>
-                val pre = body.substring(0, m.start)
-                pre.count(_ == '(') == pre.count(_ == ')') &&
-                  pre.count(_ == '[') == pre.count(_ == ']')
-              }
-            if (!topLevelHas(raw":".r) && !topLevelHas(raw"(?i)\bFOR\b".r))
-              return rewriteListLiteral(sql.substring(0, i) +
-                "array(" + sql.substring(i + 1, j) + ")" + sql.substring(j + 1))
-          }
+        if (literalPos) t.closeOf(i).foreach { j =>
+          val bodyStop = t.walk0(i + 1, j)(k => t(k) == ':' || t.isWordStart(k) && t.wordAt(k) == "FOR")
+          if (bodyStop == j)
+            return rewriteListLiteral(sql.substring(0, i) +
+              "array(" + sql.substring(i + 1, j) + ")" + sql.substring(j + 1))
         }
       }
       i += 1
@@ -1329,67 +1261,37 @@ object GraftSqlParser {
     * adjacent postfix call-parens, subscripts and dot-chains. None when
     * nothing parseable starts there.
     */
-  private def primaryEnd(masked: String, from: Int): Option[Int] = {
-    var i = from
-    def ws(): Unit = while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
-    ws()
-    if (i < masked.length && (masked.charAt(i) == '-' || masked.charAt(i) == '+')) {
-      i += 1; ws()
-    }
-    if (i >= masked.length) return None
+  private def primaryEnd(t: SqlText, from: Int): Option[Int] = {
+    var i = t.skipWs(from)
+    if (i < t.length && (t(i) == '-' || t(i) == '+')) i = t.skipWs(i + 1)
+    if (i >= t.length) return None
     def wordEnd(b: Int): Int = {
       var k = b
-      while (k < masked.length && { val c = masked.charAt(k)
+      while (k < t.length && { val c = t(k)
         c.isLetterOrDigit || c == '_' || c == '$' }) k += 1
       k
     }
-    val c = masked.charAt(i)
-    if (c == '(') i = closeOf(masked, i + 1).getOrElse(return None)
-    else if (c == '\'') {
-      var b = i + 1
-      while (b < masked.length && masked.charAt(b) != '\'') b += 1
-      if (b >= masked.length) return None
-      i = b + 1
-    } else if (c == '`') {
-      var b = i + 1
-      while (b < masked.length && masked.charAt(b) != '`') b += 1
-      if (b >= masked.length) return None
-      i = b + 1
-    } else if (c.isLetterOrDigit || c == '_' || c == '$') {
+    // index past the quote closing the run opened at `open`
+    def quotedEnd(open: Int): Option[Int] =
+      Some(t.mask.indexOf(t(open), open + 1)).filter(_ >= 0).map(_ + 1)
+    val c = t(i)
+    if (c == '(') i = t.closeOf(i).getOrElse(return None) + 1
+    else if (c == '\'' || c == '`') i = quotedEnd(i).getOrElse(return None)
+    else if (c.isLetterOrDigit || c == '_' || c == '$') {
       i = wordEnd(i)
       // decimal / scientific tail of a number literal
-      if (i < masked.length && masked.charAt(i) == '.' &&
-        i + 1 < masked.length && masked.charAt(i + 1).isDigit)
-        i = wordEnd(i + 1)
+      if (i + 1 < t.length && t(i) == '.' && t(i + 1).isDigit) i = wordEnd(i + 1)
     } else return None
     // postfix chain: adjacent '(' call, '[' subscript, '.' member
     var scanning = true
-    while (scanning && i < masked.length) {
-      masked.charAt(i) match {
-        case '(' => i = closeOf(masked, i + 1).getOrElse(return None)
-        case '[' =>
-          var d = 1
-          var b = i + 1
-          while (b < masked.length && d > 0) {
-            masked.charAt(b) match {
-              case '[' => d += 1
-              case ']' => d -= 1
-              case _ =>
-            }
-            b += 1
-          }
-          if (d > 0) return None
-          i = b
-        case '.' if i + 1 < masked.length && {
-          val n = masked.charAt(i + 1)
+    while (scanning && i < t.length) {
+      t(i) match {
+        case '(' | '[' => i = t.closeOf(i).getOrElse(return None) + 1
+        case '.' if i + 1 < t.length && {
+          val n = t(i + 1)
           n.isLetter || n == '_' || n == '`'
         } =>
-          if (masked.charAt(i + 1) == '`') {
-            var b = i + 2
-            while (b < masked.length && masked.charAt(b) != '`') b += 1
-            if (b >= masked.length) return None
-            i = b + 1
-          } else i = wordEnd(i + 1)
+          i = if (t(i + 1) == '`') quotedEnd(i + 1).getOrElse(return None) else wordEnd(i + 1)
         case _ => scanning = false
       }
     }
@@ -1401,29 +1303,17 @@ object GraftSqlParser {
     * after an operator / '(' / ',' / a clause keyword). Builds on
     * [[sliceBaseStart]]'s backwards primary scan.
     */
-  private def primaryStartWithSign(masked: String, pos: Int): Option[Int] = {
-    val j = sliceBaseStart(masked, pos).getOrElse(return None)
-    var k = j
-    while (k > 0 && masked.charAt(k - 1).isWhitespace) k -= 1
-    if (k > 0 && (masked.charAt(k - 1) == '-' || masked.charAt(k - 1) == '+')) {
-      var p = k - 1
-      while (p > 0 && masked.charAt(p - 1).isWhitespace) p -= 1
-      val unary = p == 0 || {
-        val prev = masked.charAt(p - 1)
-        "(,*/%+-<>=|&".contains(prev) || {
-          // a word before the sign: unary iff it is a KEYWORD, not an
-          // identifier (SELECT -2 vs a - 2)
-          prev.isLetterOrDigit && {
-            var w = p - 1
-            while (w > 0 && { val x = masked.charAt(w - 1)
-              x.isLetterOrDigit || x == '_' }) w -= 1
-            Set("SELECT", "WHEN", "THEN", "ELSE", "CASE", "AND", "OR",
-              "NOT", "IN", "ON", "BY", "WHERE", "HAVING", "RETURN",
-              "BETWEEN", "LIMIT", "OFFSET", "AS")
-              .contains(masked.substring(w, p).toUpperCase)
-          }
-        }
-      }
+  private def primaryStartWithSign(t: SqlText, pos: Int): Option[Int] = {
+    val j = sliceBaseStart(t, pos).getOrElse(return None)
+    val k = t.skipWsBack(j)
+    if (k > 0 && (t(k - 1) == '-' || t(k - 1) == '+')) {
+      val p = t.skipWsBack(k - 1)
+      // a word before the sign: unary iff it is a KEYWORD, not an
+      // identifier (SELECT -2 vs a - 2)
+      val unary = p == 0 || "(,*/%+-<>=|&".contains(t(p - 1)) ||
+        Set("SELECT", "WHEN", "THEN", "ELSE", "CASE", "AND", "OR",
+          "NOT", "IN", "ON", "BY", "WHERE", "HAVING", "RETURN",
+          "BETWEEN", "LIMIT", "OFFSET", "AS").contains(t.wordEndingAt(p - 1))
       if (unary) return Some(k - 1)
     }
     Some(j)
@@ -1491,25 +1381,45 @@ object GraftSqlParser {
     * corrupt a projection).
     */
   def rewriteBlobType(sql: String): String = {
-    val masked = maskQuotes(sql)
     // `::TYPE` spellings: BLOB family → BINARY, VARCHAR family → STRING
     // (r15; the parameterized VARCHAR(n) form is Spark's own and stays)
     val re = raw"(?i)::\s*(BLOB|BYTEA|VARBINARY|VARCHAR|BPCHAR)\b(?!\s*\()".r
-    val ms = re.findAllMatchIn(masked).toSeq
-    val step1 = if (ms.isEmpty) sql else {
-      val sb = new StringBuilder
-      var pos = 0
-      ms.foreach { m =>
-        val to = m.group(1).toUpperCase match {
-          case "VARCHAR" | "BPCHAR" => "STRING"
-          case _ => "BINARY"
+    rewriteCastTypeNames(SqlText(sql).replaceAll(re) { m =>
+      Some("::" + (m.group(1).toUpperCase match {
+        case "VARCHAR" | "BPCHAR" => "STRING"
+        case _ => "BINARY"
+      }))
+    })
+  }
+
+  /** Each CAST/TRY_CAST call with its close paren and the LAST depth-0
+    * ` AS ` of its body (the type token follows it).
+    */
+  private def castBodies(t: SqlText): Iterator[(scala.util.matching.Regex.Match, Int, Int)] =
+    raw"(?i)\b(?:TRY_)?CAST\s*\(".r.findAllMatchIn(t.mask).flatMap { m =>
+      t.closeOf(m.end - 1).flatMap { close =>
+        var asPos = -1
+        t.walk0(m.end, close) { i =>
+          if (t.isWordStart(i) && t.wordAt(i) == "AS") asPos = i
+          false
         }
-        sb.append(sql.substring(pos, m.start)).append("::").append(to)
-        pos = m.end
+        if (asPos < 0) None else Some((m, close, asPos))
       }
-      sb.append(sql.substring(pos)).toString
     }
-    rewriteCastTypeNames(step1)
+
+  /** Apply (position, text) insertions right-to-left. */
+  private def insertAll(sql: String, ins: Seq[(Int, String)]): String =
+    ins.sortBy(-_._1).foldLeft(sql) { case (acc, (p, s0)) =>
+      acc.substring(0, p) + s0 + acc.substring(p)
+    }
+
+  /** The value of `s` when it is exactly one single-quoted literal. */
+  private def singleLiteral(s: String): Option[String] = {
+    val x = s.trim
+    if (x.length >= 2 && x.head == '\'' && x.last == '\'' &&
+      !SqlText(x).mask.drop(1).dropRight(1).contains('\''))
+      Some(x.substring(1, x.length - 1).replace("''", "'"))
+    else None
   }
 
   /** `CAST(expr AS <ducktype>)` with a DuckDB-only type name (r15):
@@ -1535,48 +1445,16 @@ object GraftSqlParser {
     "FLOAT4", "FLOAT8", "DATETIME")
 
   private def rewriteCastTypeNames(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val CastRe = raw"(?i)\b(?:TRY_)?CAST\s*\(".r
     // (typeStart, closeParen, replacement)
-    val repls = Seq.newBuilder[(Int, Int, String)]
-    CastRe.findAllMatchIn(masked).foreach { m =>
-      closeOf(masked, m.end).foreach { close =>
-        val bodyMasked = masked.substring(m.end, close - 1)
-        // last top-level ' AS ' of this cast's body
-        var depth = 0
-        var asPos = -1
-        var i = 0
-        while (i < bodyMasked.length) {
-          bodyMasked.charAt(i) match {
-            case '(' | '[' => depth += 1
-            case ')' | ']' => depth -= 1
-            case c if depth == 0 && (c == 'A' || c == 'a') &&
-              i + 2 < bodyMasked.length &&
-              (i == 0 || (!bodyMasked.charAt(i - 1).isLetterOrDigit && bodyMasked.charAt(i - 1) != '_')) &&
-              bodyMasked.regionMatches(true, i, "AS", 0, 2) &&
-              !bodyMasked.charAt(i + 2).isLetterOrDigit && bodyMasked.charAt(i + 2) != '_' =>
-              asPos = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (asPos >= 0) {
-          val typeStart = m.end + asPos + 2
-          val typeText = sql.substring(typeStart, close - 1).trim
-          if (duckOnlyCastTypes.contains(typeText.toUpperCase)) {
-            val mapped = try Some(duckTypeToSpark(typeText))
-            catch { case _: graft.functions.expressions.DuckDialectException => None }
-            mapped.filter(!_.equalsIgnoreCase(typeText)).foreach { t =>
-              repls += ((typeStart, close - 1, " " + t))
-            }
-          }
-        }
-      }
-    }
-    val rs = repls.result()
-    if (rs.isEmpty) sql
-    else rs.sortBy(-_._1).foldLeft(sql) { case (acc, (a, b, t)) =>
-      acc.substring(0, a) + t + acc.substring(b)
+    val repls = castBodies(SqlText(sql)).flatMap { case (_, close, asPos) =>
+      val typeText = sql.substring(asPos + 2, close).trim
+      if (!duckOnlyCastTypes.contains(typeText.toUpperCase)) None
+      else (try Some(duckTypeToSpark(typeText))
+        catch { case _: graft.functions.expressions.DuckDialectException => None })
+        .filter(!_.equalsIgnoreCase(typeText)).map(ty => (asPos + 2, close, " " + ty))
+    }.toSeq
+    repls.sortBy(-_._1).foldLeft(sql) { case (acc, (a, b, ty)) =>
+      acc.substring(0, a) + ty + acc.substring(b)
     }
   }
 
@@ -1599,55 +1477,20 @@ object GraftSqlParser {
     * applied right-to-left, so NESTED casts wrap correctly.
     */
   def rewriteIntegralCastRound(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val CastRe = raw"(?i)\b(?:TRY_)?CAST\s*\(".r
-    val inserts = Seq.newBuilder[(Int, String)]
-    CastRe.findAllMatchIn(masked).foreach { m =>
-      closeOf(masked, m.end).foreach { close =>
-        val bodyMasked = masked.substring(m.end, close - 1)
-        var depth = 0
-        var asPos = -1
-        var i = 0
-        while (i < bodyMasked.length) {
-          bodyMasked.charAt(i) match {
-            case '(' | '[' => depth += 1
-            case ')' | ']' => depth -= 1
-            case c if depth == 0 && (c == 'A' || c == 'a') &&
-              i + 2 < bodyMasked.length &&
-              (i == 0 || (!bodyMasked.charAt(i - 1).isLetterOrDigit && bodyMasked.charAt(i - 1) != '_')) &&
-              bodyMasked.regionMatches(true, i, "AS", 0, 2) &&
-              !bodyMasked.charAt(i + 2).isLetterOrDigit && bodyMasked.charAt(i + 2) != '_' =>
-              asPos = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (asPos >= 0) {
-          val typeText = sql.substring(m.end + asPos + 2, close - 1).trim
-          // idempotency: an expr that is ALREADY exactly one
-          // duck_iround(...) call (a prior pass's wrap) skips
-          val exprMasked = bodyMasked.substring(0, asPos)
-          val alreadyWrapped =
-            raw"(?is)^\s*duck_iround\s*\(".r.findFirstMatchIn(exprMasked) match {
-              case Some(wm) =>
-                closeOf(exprMasked, wm.end)
-                  .exists(e => exprMasked.substring(e).trim.isEmpty)
-              case None => false
-            }
-          if (integralCastTypes.contains(typeText.toUpperCase) && !alreadyWrapped) {
-            inserts += ((m.end, "duck_iround("))
-            inserts += ((m.end + asPos, ") "))
-          }
-        }
-      }
-    }
-    val ins = inserts.result()
-    val step1 =
-      if (ins.isEmpty) sql
-      else ins.sortBy(-_._1).foldLeft(sql) { case (acc, (p, t)) =>
-        acc.substring(0, p) + t + acc.substring(p)
-      }
-    rewriteIntegralDoubleColon(step1)
+    val t = SqlText(sql)
+    val inserts = castBodies(t).flatMap { case (m, close, asPos) =>
+      val typeText = sql.substring(asPos + 2, close).trim
+      // idempotency: an expr that is ALREADY exactly one
+      // duck_iround(...) call (a prior pass's wrap) skips
+      val alreadyWrapped =
+        raw"(?is)^\s*duck_iround\s*\(".r.findFirstMatchIn(t.mask.substring(m.end, asPos))
+          .flatMap(wm => t.closeOf(m.end + wm.end - 1))
+          .exists(e => e < asPos && t.mask.substring(e + 1, asPos).trim.isEmpty)
+      if (integralCastTypes.contains(typeText.toUpperCase) && !alreadyWrapped)
+        Seq((m.end, "duck_iround("), (asPos, ") "))
+      else Nil
+    }.toSeq
+    rewriteIntegralDoubleColon(insertAll(sql, inserts))
   }
 
   /** The `expr::BIGINT` spelling of the same rounding divergence: wrap
@@ -1659,50 +1502,22 @@ object GraftSqlParser {
     * would claim the inner type token).
     */
   private def rewriteIntegralDoubleColon(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
     val re = (raw"(?i)::\s*(" + integralCastTypes.mkString("|") + raw")\b").r
-    val inserts = Seq.newBuilder[(Int, String)]
-    re.findAllMatchIn(masked).foreach { m =>
-      var e = m.start - 1
-      while (e >= 0 && masked.charAt(e).isWhitespace) e -= 1
-      if (e >= 0 && masked.charAt(e) != '\'' && masked.charAt(e) != '"') {
-        def identStart(k0: Int): Int = {
-          var k = k0
-          while (k >= 0 && (masked.charAt(k).isLetterOrDigit ||
-            masked.charAt(k) == '_' || masked.charAt(k) == '.')) k -= 1
-          k + 1
-        }
-        val start: Int =
-          if (masked.charAt(e) == ')' || masked.charAt(e) == ']') {
-            val closer = masked.charAt(e)
-            val opener = if (closer == ')') '(' else '['
-            var d = 1
-            var k = e - 1
-            while (k >= 0 && d > 0) {
-              val c = masked.charAt(k)
-              if (c == closer) d += 1 else if (c == opener) d -= 1
-              if (d > 0) k -= 1
-            }
-            if (d != 0) -1 else identStart(k - 1)
-          } else if (masked.charAt(e).isLetterOrDigit || masked.charAt(e) == '_')
-            identStart(e)
-          else -1
-        // skip chained casts (`x::INT::BIGINT` backscan would claim the
-        // inner type token) and already-wrapped operands (idempotency)
-        val alreadyWrapped = start >= 0 &&
-          masked.regionMatches(true, start, "duck_iround", 0, 11)
-        if (start >= 0 && !alreadyWrapped &&
-          !(start >= 1 && masked.charAt(start - 1) == ':')) {
-          inserts += ((start, "duck_iround("))
-          inserts += ((m.start, ")"))
-        }
-      }
-    }
-    val ins = inserts.result()
-    if (ins.isEmpty) sql
-    else ins.sortBy(-_._1).foldLeft(sql) { case (acc, (p, t)) =>
-      acc.substring(0, p) + t + acc.substring(p)
-    }
+    val inserts = re.findAllMatchIn(t.mask).flatMap { m =>
+      val e = t.skipWsBack(m.start) - 1
+      val start =
+        if (e < 0 || t(e) == '\'' || t(e) == '"') -1
+        else if (t(e) == ')' || t(e) == ']') t.openOf(e).map(o => t.chainStart(o - 1)).getOrElse(-1)
+        else if (t.isWordChar(e)) t.chainStart(e)
+        else -1
+      // skip chained casts (`x::INT::BIGINT` backscan would claim the
+      // inner type token) and already-wrapped operands (idempotency)
+      if (start < 0 || t.mask.regionMatches(true, start, "duck_iround", 0, 11) ||
+        (start >= 1 && t(start - 1) == ':')) Nil
+      else Seq((start, "duck_iround("), (m.start, ")"))
+    }.toSeq
+    insertAll(sql, inserts)
   }
 
   private val JsonExtractFnRe =
@@ -1719,11 +1534,10 @@ object GraftSqlParser {
     * per-path extractions). Non-literal paths stay unresolved (loud).
     */
   def rewriteJsonExtractFns(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = JsonExtractFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    val close = closeOf(masked, m.end).getOrElse(return sql)
-    val argsRaw = sql.substring(m.end, close - 1)
-    val args = splitReadArgs(argsRaw, masked.substring(m.end, close - 1))
+    val t = SqlText(sql)
+    val m = JsonExtractFnRe.findFirstMatchIn(t.mask).getOrElse(return sql)
+    val close = t.closeOf(m.end - 1).getOrElse(return sql)
+    val args = t.split0(m.end, close).map(_.trim).filter(_.nonEmpty)
     if (args.length != 2) return sql
     val fn = m.group(1).toLowerCase
     val textual = fn == "json_extract_string" || fn == "json_extract_path_text"
@@ -1747,14 +1561,9 @@ object GraftSqlParser {
       // in DuckDB) can't map onto Spark's JSON path — the arrow
       // machinery raises its guided error (never a silent traversal)
     }
-    def pathSteps(arg: String): Option[Seq[String]] = {
-      val t = arg.trim
-      if (raw"^-?\d+$$".r.findFirstIn(t).isDefined) Some(Seq(t))
-      else if (t.length >= 2 && t.head == '\'' && t.last == '\'' &&
-        !maskQuotes(t).drop(1).dropRight(1).contains('\''))
-        stepsOf(t.substring(1, t.length - 1).replace("''", "'"))
-      else None
-    }
+    def pathSteps(arg: String): Option[Seq[String]] =
+      if (raw"^-?\d+$$".r.findFirstIn(arg.trim).isDefined) Some(Seq(arg.trim))
+      else singleLiteral(arg).flatMap(stepsOf)
     def chain(ss: Seq[String]): String = {
       val mid = ss.init.map(s => s"-> $s").mkString(" ")
       s"(( $base ) $mid ${if (textual) "->>" else "->"} ${ss.last})"
@@ -1768,49 +1577,43 @@ object GraftSqlParser {
       else raw"(?is)^array\s*\((.*)\)$$".r.findFirstMatchIn(pathArg).map(_.group(1))
     val replOpt: Option[String] = listInner match {
       case Some(inner) =>
-        val parts = splitReadArgs(inner, maskQuotes(inner))
-        val all = parts.map(pathSteps)
+        val all = SqlText(inner).split0().map(_.trim).filter(_.nonEmpty).map(pathSteps)
         if (all.exists(_.isEmpty) || all.isEmpty) None
         else Some(all.flatten.map(chain).mkString("array(", ", ", ")"))
       case None => pathSteps(pathArg).map(chain)
     }
     replOpt match {
       case Some(repl) =>
-        rewriteJsonExtractFns(sql.substring(0, m.start) + repl + sql.substring(close))
+        rewriteJsonExtractFns(sql.substring(0, m.start) + repl + sql.substring(close + 1))
       case None => sql
     }
   }
 
   def rewriteJsonOps(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"a ->> JSON chain couldn't be rewritten ($why) — use " +
           "get_json_object(col, '$.path') directly (Spark's JSON path form)")
-    val ArrowRe = raw"->>?".r
     var searchFrom = 0
-    while (searchFrom < masked.length) {
-      val m = ArrowRe.findFirstMatchIn(masked.substring(searchFrom))
-        .getOrElse(return sql)
-      val first = searchFrom + m.start
+    while (searchFrom < t.length) {
+      val first = t.mask.indexOf("->", searchFrom)
+      if (first < 0) return sql
       // base primary ends just before the first arrow
-      var be = first
-      while (be > 0 && masked.charAt(be - 1).isWhitespace) be -= 1
-      val bs = primaryStartWithSign(masked, be)
+      val be = t.skipWsBack(first)
+      val bs = primaryStartWithSign(t, be)
       // walk the whole chain: (arrow, arg)*
       var pos = first
       var ops = List.empty[(String, Int, Int)] // (op, argStart, argEnd)
       var chaining = true
       while (chaining) {
-        val op = if (masked.startsWith("->>", pos)) "->>" else "->"
+        val op = if (t.mask.startsWith("->>", pos)) "->>" else "->"
         val argStart = pos + op.length
-        primaryEnd(masked, argStart) match {
+        primaryEnd(t, argStart) match {
           case Some(ae) =>
             ops :+= ((op, argStart, ae))
-            var k = ae
-            while (k < masked.length && masked.charAt(k).isWhitespace) k += 1
-            if (k < masked.length - 1 && masked.charAt(k) == '-' &&
-              masked.charAt(k + 1) == '>') pos = k
+            val k = t.skipWs(ae)
+            if (t.mask.startsWith("->", k)) pos = k
             else chaining = false
           case None =>
             // no parseable right operand (e.g. `x -> (expr)` lambda
@@ -1829,33 +1632,19 @@ object GraftSqlParser {
       }
       // is the word ending just before '(' at index `paren` a known HOF?
       def hofOwns(paren: Int): Boolean = {
-        var k = paren - 1
-        while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-        val e0 = k + 1
-        while (k >= 0 && (masked.charAt(k).isLetterOrDigit || masked.charAt(k) == '_')) k -= 1
-        k + 1 < e0 && lambdaHofs.contains(masked.substring(k + 1, e0).toLowerCase)
+        val e0 = t.skipWsBack(paren)
+        var k = e0 - 1
+        while (t.isWordChar(k)) k -= 1
+        k + 1 < e0 && lambdaHofs.contains(t.mask.substring(k + 1, e0).toLowerCase)
       }
       // lambda position: base starts an argument of a HOF call —
       // `transform(l, x -> 'a')` is a constant-valued lambda, not JSON
       val lambdaContext = bs.exists { b0 =>
-        var k = b0 - 1
-        while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
+        val k = t.skipWsBack(b0) - 1
         if (k < 0) false
-        else masked.charAt(k) match {
+        else t(k) match {
           case '(' => hofOwns(k)
-          case ',' =>
-            var depth = 0
-            var q = k - 1
-            var open = -1
-            while (open < 0 && q >= 0) {
-              masked.charAt(q) match {
-                case ')' => depth += 1
-                case '(' => if (depth == 0) open = q else depth -= 1
-                case _ =>
-              }
-              q -= 1
-            }
-            open >= 0 && hofOwns(open)
+          case ',' => val open = t.enclosing(k); open >= 0 && hofOwns(open)
           case _ => false
         }
       }
@@ -1934,28 +1723,22 @@ object GraftSqlParser {
     * non-literal pattern failed valid identifier SQL).
     */
   def rewriteGlob(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
     // only claim GLOB when a string literal follows: `glob` is NOT a
     // reserved word in Spark, so `SELECT glob FROM files` must keep
     // parsing as an identifier (ADVICE r10)
-    val m = raw"(?i)\b(NOT\s+)?GLOB\b".r.findAllMatchIn(masked).find { cand =>
-      var j = cand.end
-      while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-      j < masked.length && masked.charAt(j) == '\''
+    val m = raw"(?i)\b(NOT\s+)?GLOB\b".r.findAllMatchIn(t.mask).find { cand =>
+      t.mask.startsWith("'", t.skipWs(cand.end))
     }.getOrElse(return sql)
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"a GLOB couldn't be rewritten ($why) — convert the glob to a regex " +
           "and use RLIKE '^...$' (star → .*, ? → ., [...] classes verbatim)")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
-    val ls = primaryStartWithSign(masked, lpos).getOrElse(fail("left operand unclaimed"))
-    val re = primaryEnd(masked, m.end).getOrElse(fail("no pattern operand"))
-    val patRaw = sql.substring(m.end, re).trim
-    if (!(patRaw.length >= 2 && patRaw.head == '\'' && patRaw.last == '\'' &&
-      !maskQuotes(patRaw).drop(1).dropRight(1).contains('\'')))
-      fail("the pattern must be a string literal")
-    val pat = patRaw.substring(1, patRaw.length - 1).replace("''", "'")
+    val lpos = t.skipWsBack(m.start)
+    val ls = primaryStartWithSign(t, lpos).getOrElse(fail("left operand unclaimed"))
+    val re = primaryEnd(t, m.end).getOrElse(fail("no pattern operand"))
+    val pat = singleLiteral(sql.substring(m.end, re))
+      .getOrElse(fail("the pattern must be a string literal"))
     // double the regex backslashes: Spark's string literals unescape
     // \x sequences, so '\.' would reach RLIKE as a bare '.'
     val rx = globToRegex(pat).replace("\\", "\\\\").replace("'", "''")
@@ -1974,17 +1757,16 @@ object GraftSqlParser {
     * unescape `\x`, DuckDB's don't); computed patterns pass through.
     */
   def rewriteSimilarTo(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = raw"(?i)\b(NOT\s+)?SIMILAR\s+TO\b".r.findFirstMatchIn(masked)
+    val t = SqlText(sql)
+    val m = raw"(?i)\b(NOT\s+)?SIMILAR\s+TO\b".r.findFirstMatchIn(t.mask)
       .getOrElse(return sql)
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"a SIMILAR TO couldn't be rewritten ($why) — use " +
           "regexp_full_match(expr, pattern) directly")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
-    val ls = primaryStartWithSign(masked, lpos).getOrElse(fail("left operand unclaimed"))
-    val re = primaryEnd(masked, m.end).getOrElse(fail("no pattern operand"))
+    val lpos = t.skipWsBack(m.start)
+    val ls = primaryStartWithSign(t, lpos).getOrElse(fail("left operand unclaimed"))
+    val re = primaryEnd(t, m.end).getOrElse(fail("no pattern operand"))
     // the pattern text moves VERBATIM — rewriteRawLiterals already ran,
     // so a literal's text is the Spark-escaped form of the raw original
     val pat = sql.substring(m.end, re).trim
@@ -2004,20 +1786,10 @@ object GraftSqlParser {
     * sign attached. An occurrence whose operands can't be claimed
     * raises a guided error rather than mangling the statement.
     */
-  def rewritePow(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = raw"\*\*".r.findFirstMatchIn(masked).getOrElse(return sql)
-    def fail(): Nothing = throw new graft.functions.expressions.DuckDialectException(
+  def rewritePow(sql: String): String =
+    binaryOpToCall(sql, raw"\*\*".r, "power",
       "a ** exponent operand couldn't be claimed — write power(a, b) directly " +
         "(Spark's ^ is bitwise XOR, not exponent)")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
-    val ls = primaryStartWithSign(masked, lpos).getOrElse(fail())
-    val re = primaryEnd(masked, m.end).getOrElse(fail())
-    val l = sql.substring(ls, lpos).trim
-    val r = sql.substring(m.end, re).trim
-    rewritePow(sql.substring(0, ls) + s"power($l, $r)" + sql.substring(re))
-  }
 
   /** DuckDB `^` is EXPONENTIATION — Spark's `^` is bitwise XOR, the
     * worst kind of silent divergence (`2 ^ 3` = 8.0 vs 1). Probed
@@ -2026,19 +1798,30 @@ object GraftSqlParser {
     * — identical to `**`, so the rewrite mirrors [[rewritePow]].
     * DuckDB's `xor(a, b)` function covers the bitwise meaning.
     */
-  def rewriteCaret(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = raw"\^".r.findFirstMatchIn(masked).getOrElse(return sql)
-    def fail(): Nothing = throw new graft.functions.expressions.DuckDialectException(
+  def rewriteCaret(sql: String): String =
+    binaryOpToCall(sql, raw"\^".r, "power",
       "a ^ exponent operand couldn't be claimed — write power(a, b) " +
         "(DuckDB's ^ is exponent; for bitwise XOR use xor(a, b))")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
-    val ls = primaryStartWithSign(masked, lpos).getOrElse(fail())
-    val re = primaryEnd(masked, m.end).getOrElse(fail())
+
+  /** Rewrite the leftmost mask match of the binary operator `opRe` to
+    * `fn(l, r)` and rescan (left associativity). The right operand is
+    * one signed primary; `leftStart` claims the left operand ending at
+    * a position. An operand that can't be claimed raises `failMsg`
+    * rather than mangling the statement.
+    */
+  private def binaryOpToCall(sql: String, opRe: scala.util.matching.Regex,
+      fn: String, failMsg: String,
+      leftStart: (SqlText, Int) => Option[Int] = primaryStartWithSign): String = {
+    val t = SqlText(sql)
+    val m = opRe.findFirstMatchIn(t.mask).getOrElse(return sql)
+    def fail(): Nothing = throw new graft.functions.expressions.DuckDialectException(failMsg)
+    val lpos = t.skipWsBack(m.start)
+    val ls = leftStart(t, lpos).getOrElse(fail())
+    val re = primaryEnd(t, m.end).getOrElse(fail())
     val l = sql.substring(ls, lpos).trim
     val r = sql.substring(m.end, re).trim
-    rewriteCaret(sql.substring(0, ls) + s"power($l, $r)" + sql.substring(re))
+    binaryOpToCall(sql.substring(0, ls) + s"$fn($l, $r)" + sql.substring(re),
+      opRe, fn, failMsg, leftStart)
   }
 
   private val LogFnRe = raw"(?i)(?<![\w.])log\s*\(".r
@@ -2050,11 +1833,8 @@ object GraftSqlParser {
     * the Scala functions API resolves `log` through the registry too,
     * and internal operators (DSIR, TF-IDF, Gumbel keys) want ln.
     */
-  def rewriteLogFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = LogFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    rewriteLogFn(sql.substring(0, m.start) + "duck_log(" + sql.substring(m.end))
-  }
+  def rewriteLogFn(sql: String): String =
+    SqlText(sql).replaceAll(LogFnRe)(_ => Some("duck_log("))
 
   private val FilterOverRe = raw"(?is)\bFILTER\s*\(\s*WHERE\b".r
 
@@ -2068,57 +1848,23 @@ object GraftSqlParser {
     * (the CASE wrap covers one argument).
     */
   def rewriteFilterOver(sql: String): String = {
-    val masked = maskQuotes(sql)
-    FilterOverRe.findAllMatchIn(masked).foreach { m =>
-      // find the FILTER(...) close
-      var d = 1
-      var i = masked.indexOf('(', m.start) + 1
-      while (i < masked.length && d > 0) {
-        masked.charAt(i) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        if (d > 0) i += 1
-      }
-      if (d == 0) {
-        val filterClose = i
-        var j = filterClose + 1
-        while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-        if (j < masked.length && masked.charAt(j).isLetter &&
-          wordStartingAt(masked, j).equalsIgnoreCase("OVER")) {
+    val t = SqlText(sql)
+    FilterOverRe.findAllMatchIn(t.mask).foreach { m =>
+      val filterOpen = t.mask.indexOf('(', m.start)
+      t.closeOf(filterOpen).foreach { filterClose =>
+        if (t.wordAt(t.skipWs(filterClose + 1)) == "OVER") {
           def fail(why: String): Nothing =
             throw new graft.functions.expressions.DuckDialectException(
               s"FILTER over a window function couldn't be rewritten ($why) — " +
                 "inline the predicate: agg(CASE WHEN pred THEN expr END) OVER (...)")
-          val pred = sql.substring(masked.indexOf('(', m.start) + 1, filterClose)
+          val pred = sql.substring(filterOpen + 1, filterClose)
             .replaceAll(raw"(?is)^\s*WHERE\b", "").trim
           // backward: the aggregate call directly before FILTER
-          var k = m.start - 1
-          while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-          if (k < 0 || masked.charAt(k) != ')') fail("no aggregate call before FILTER")
-          val argsClose = k
-          d = 1; k -= 1
-          while (k >= 0 && d > 0) {
-            masked.charAt(k) match {
-              case ')' => d += 1
-              case '(' => d -= 1
-              case _ =>
-            }
-            if (d > 0) k -= 1
-          }
-          if (d != 0) fail("unbalanced aggregate parens")
-          val argsOpen = k
+          val argsClose = t.skipWsBack(m.start) - 1
+          if (argsClose < 0 || t(argsClose) != ')') fail("no aggregate call before FILTER")
+          val argsOpen = t.openOf(argsClose).getOrElse(fail("unbalanced aggregate parens"))
           val args = sql.substring(argsOpen + 1, argsClose).trim
-          val argsMasked = masked.substring(argsOpen + 1, argsClose)
-          // single argument only (no depth-0 comma)
-          var dd = 0
-          argsMasked.foreach {
-            case '(' => dd += 1
-            case ')' => dd -= 1
-            case ',' if dd == 0 => fail("multi-argument aggregate")
-            case _ =>
-          }
+          if (t.spans0(argsOpen + 1, argsClose).size > 1) fail("multi-argument aggregate")
           val wrapped =
             if (args == "*") s"(CASE WHEN ($pred) THEN 1 END)"
             else s"(CASE WHEN ($pred) THEN ($args) END)"
@@ -2156,7 +1902,7 @@ object GraftSqlParser {
     */
   def rewriteDecimalDivLiterals(sql: String): String = {
     if (sql.indexOf('/') < 0) return sql
-    val masked = maskQuotes(sql)
+    val masked = SqlText(sql).mask
     val leftRe = raw"(?<![\w.$$])(\d+\.\d+)(?![\w.]|[eE][+-]?\d)\s*/(?![/*])".r
     val rightRe = raw"/(?![/*])\s*(\d+\.\d+)(?![\w.]|[eE][+-]?\d)".r
     val spans = (leftRe.findAllMatchIn(masked).map(m => (m.start(1), m.end(1))) ++
@@ -2172,35 +1918,29 @@ object GraftSqlParser {
     }
   }
 
-  def rewriteIntDiv(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = raw"//".r.findFirstMatchIn(masked).getOrElse(return sql)
-    def fail(): Nothing = throw new graft.functions.expressions.DuckDialectException(
+  def rewriteIntDiv(sql: String): String =
+    binaryOpToCall(sql, raw"//".r, "graft_ddiv",
       "a // division operand couldn't be claimed — write a div b (integer " +
-        "truncating division) or floor(a / b) directly")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
-    // left operand: the whole preceding multiplicative chain
-    var ls = primaryStartWithSign(masked, lpos).getOrElse(fail())
-    var chaining = true
-    while (chaining) {
-      var k = ls
-      while (k > 0 && masked.charAt(k - 1).isWhitespace) k -= 1
-      if (k > 0 && "*/%".contains(masked.charAt(k - 1)) &&
-        !(k > 1 && masked.charAt(k - 2) == '/')) {
-        var q = k - 1
-        while (q > 0 && masked.charAt(q - 1).isWhitespace) q -= 1
-        primaryStartWithSign(masked, q) match {
-          case Some(s) => ls = s
-          case None => chaining = false
-        }
-      } else chaining = false
+        "truncating division) or floor(a / b) directly", mulChainStart)
+
+  /** Start of the multiplicative chain ending at `pos` — `//`'s left
+    * operand (`3 * 5 // 2` claims `3 * 5`).
+    */
+  private def mulChainStart(t: SqlText, pos: Int): Option[Int] =
+    primaryStartWithSign(t, pos).map { s0 =>
+      var ls = s0
+      var chaining = true
+      while (chaining) {
+        val k = t.skipWsBack(ls)
+        if (k > 0 && "*/%".contains(t(k - 1)) && !(k > 1 && t(k - 2) == '/'))
+          primaryStartWithSign(t, t.skipWsBack(k - 1)) match {
+            case Some(s1) => ls = s1
+            case None => chaining = false
+          }
+        else chaining = false
+      }
+      ls
     }
-    val re = primaryEnd(masked, m.end).getOrElse(fail())
-    val l = sql.substring(ls, lpos).trim
-    val r = sql.substring(m.end, re).trim
-    rewriteIntDiv(sql.substring(0, ls) + s"graft_ddiv($l, $r)" + sql.substring(re))
-  }
 
   /** Rewrite DuckDB list comprehensions (r10 — previously a guided
     * error): `[expr FOR v IN list]` → `list_transform(list, v -> expr)`
@@ -2217,70 +1957,35 @@ object GraftSqlParser {
     * `l[i]` and slices `l[a:b]` never match — no top-level FOR.
     */
   def rewriteComprehension(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
     // find the FIRST '[' whose body carries a top-level FOR
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
-        // matching ']' by bracket depth ('(' depth tracked so a bracket
-        // inside a nested call still counts — both are balanced)
-        var j = i + 1
-        var depth = 1
-        while (j < masked.length && depth > 0) {
-          masked.charAt(j) match {
-            case '[' => depth += 1
-            case ']' => depth -= 1
-            case _ =>
-          }
-          if (depth > 0) j += 1
+    for (i <- 0 until t.length if t(i) == '[') t.closeOf(i).foreach { j =>
+      val forPos = t.word0(i + 1, j)(_ == "FOR")
+      if (forPos < j && t.wordAt(forPos) == "FOR") {
+        val exprRaw = sql.substring(i + 1, forPos).trim
+        val inM = raw"(?is)^\s*([A-Za-z_]\w*)\s+IN\b".r
+          .findFirstMatchIn(t.mask.substring(forPos + 3, j)).getOrElse(
+            throw new graft.functions.expressions.DuckDialectException(
+              "list comprehension couldn't be parsed — expected " +
+                "[expr FOR var IN list [IF cond]]"))
+        val v = inM.group(1)
+        val restStart = forPos + 3 + inM.end
+        val ifPos = t.word0(restStart, j)(_ == "IF")
+        val (listRaw, condRaw) =
+          if (ifPos < j && t.wordAt(ifPos) == "IF")
+            (sql.substring(restStart, ifPos).trim, Some(sql.substring(ifPos + 2, j).trim))
+          else (sql.substring(restStart, j).trim, None)
+        val expr = rewriteComprehension(exprRaw)
+        val lst = rewriteComprehension(listRaw)
+        val src = condRaw match {
+          case Some(c) =>
+            s"list_filter($lst, $v -> ${rewriteComprehension(c)})"
+          case None => lst
         }
-        if (depth == 0) {
-          val body = masked.substring(i + 1, j)
-          // top-level keyword positions inside the body
-          def topLevel(re: scala.util.matching.Regex): List[Int] =
-            re.findAllMatchIn(body).filter { m =>
-              val pre = body.substring(0, m.start)
-              pre.count(_ == '(') == pre.count(_ == ')') &&
-                pre.count(_ == '[') == pre.count(_ == ']')
-            }.map(_.start).toList
-          topLevel(raw"(?i)\bFOR\b".r) match {
-            case forPos :: _ =>
-              val exprRaw = sql.substring(i + 1, i + 1 + forPos).trim
-              val afterFor = body.substring(forPos + 3)
-              val inM = raw"(?is)^\s*([A-Za-z_]\w*)\s+IN\b".r
-                .findFirstMatchIn(afterFor).getOrElse(
-                  throw new graft.functions.expressions.DuckDialectException(
-                    "list comprehension couldn't be parsed — expected " +
-                      "[expr FOR var IN list [IF cond]]"))
-              val v = inM.group(1)
-              val restStart = forPos + 3 + inM.end
-              val rest = body.substring(restStart) // masked
-              val restRaw = sql.substring(i + 1 + restStart, j)
-              val ifPos = raw"(?i)\bIF\b".r.findAllMatchIn(rest).find { m =>
-                val pre = rest.substring(0, m.start)
-                pre.count(_ == '(') == pre.count(_ == ')') &&
-                  pre.count(_ == '[') == pre.count(_ == ']')
-              }.map(_.start)
-              val (listRaw, condRaw) = ifPos match {
-                case Some(pos) =>
-                  (restRaw.substring(0, pos).trim, Some(restRaw.substring(pos + 2).trim))
-                case None => (restRaw.trim, None)
-              }
-              val expr = rewriteComprehension(exprRaw)
-              val lst = rewriteComprehension(listRaw)
-              val src = condRaw match {
-                case Some(c) =>
-                  s"list_filter($lst, $v -> ${rewriteComprehension(c)})"
-                case None => lst
-              }
-              val replacement = s"list_transform($src, $v -> $expr)"
-              return rewriteComprehension(
-                sql.substring(0, i) + replacement + sql.substring(j + 1))
-            case Nil =>
-          }
-        }
+        val replacement = s"list_transform($src, $v -> $expr)"
+        return rewriteComprehension(
+          sql.substring(0, i) + replacement + sql.substring(j + 1))
       }
-      i += 1
     }
     sql
   }
@@ -2297,35 +2002,18 @@ object GraftSqlParser {
     * sampling and every later rewrite see ordinary SQL.
     */
   def rewriteFromFirst(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val head = raw"(?is)^\s*FROM\s".r.findFirstMatchIn(masked).getOrElse(return sql)
+    val t = SqlText(sql)
+    val head = raw"(?is)^\s*FROM\s".r.findFirstMatchIn(t.mask).getOrElse(return sql)
     // depth-0 SELECT ends the table expression (if present)
-    var selPos = -1
-    var d = 0
-    val SelectRe = raw"(?i)\bSELECT\b".r
-    SelectRe.findAllMatchIn(masked).foreach { m =>
-      if (selPos < 0) {
-        d = masked.substring(0, m.start).count(_ == '(') -
-          masked.substring(0, m.start).count(_ == ')')
-        if (d == 0) selPos = m.start
-      }
-    }
-    if (selPos < 0) return "SELECT * " + sql.substring(head.start)
+    val selPos = t.find0(raw"(?i)\bSELECT\b".r)
+      .getOrElse(return "SELECT * " + sql.substring(head.start))
     val tableExpr = sql.substring(head.end - 1, selPos).trim
-    val after = sql.substring(selPos + "SELECT".length)
-    val afterMasked = masked.substring(selPos + "SELECT".length)
+    val listStart = selPos + "SELECT".length
     // select list ends at the first depth-0 clause keyword
-    var cut = -1
-    ClauseKwRe.findAllMatchIn(afterMasked).foreach { m =>
-      if (cut < 0) {
-        val dd = afterMasked.substring(0, m.start).count(_ == '(') -
-          afterMasked.substring(0, m.start).count(_ == ')')
-        if (dd == 0) cut = m.start
-      }
+    val (selectList, tail) = t.find0(ClauseKwRe, listStart) match {
+      case None => (sql.substring(listStart).trim, "")
+      case Some(cut) => (sql.substring(listStart, cut).trim, sql.substring(cut).trim)
     }
-    val (selectList, tail) =
-      if (cut < 0) (after.trim, "")
-      else (after.substring(0, cut).trim, after.substring(cut).trim)
     s"SELECT $selectList FROM $tableExpr" + (if (tail.nonEmpty) s" $tail" else "")
   }
 
@@ -2344,27 +2032,18 @@ object GraftSqlParser {
     * whose base the scan cannot claim are left alone (→ guided error).
     */
   def rewriteSlice(sql: String): String = {
-    val masked = maskQuotes(sql)
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
-        sliceSpan(masked, i) match {
-          case Some((colon, close)) =>
-            sliceBaseStart(masked, i) match {
-              case Some(bs) =>
-                val base = sql.substring(bs, i)
-                val bTxt = sql.substring(i + 1, colon).trim
-                val eTxt = sql.substring(colon + 1, close).trim
-                val b = if (bTxt.isEmpty) "NULL" else bTxt
-                val e = if (eTxt.isEmpty) "NULL" else eTxt
-                return rewriteSlice(sql.substring(0, bs) +
-                  s"graft_bracket_slice($base, $b, $e)" + sql.substring(close + 1))
-              case None => // unclaimable base → leave for the guided error
-            }
-          case None =>
-        }
+    val t = SqlText(sql)
+    for (i <- 0 until t.length if t(i) == '[') sliceSpan(t, i).foreach { case (colon, close) =>
+      // an unclaimable base is left for the guided error
+      sliceBaseStart(t, i).foreach { bs =>
+        val base = sql.substring(bs, i)
+        val bTxt = sql.substring(i + 1, colon).trim
+        val eTxt = sql.substring(colon + 1, close).trim
+        val b = if (bTxt.isEmpty) "NULL" else bTxt
+        val e = if (eTxt.isEmpty) "NULL" else eTxt
+        return rewriteSlice(sql.substring(0, bs) +
+          s"graft_bracket_slice($base, $b, $e)" + sql.substring(close + 1))
       }
-      i += 1
     }
     sql
   }
@@ -2384,51 +2063,24 @@ object GraftSqlParser {
     * `AS`/`::` (DuckDB array-type syntax, not a subscript).
     */
   def rewriteSubscript(sql: String): String = {
-    val masked = maskQuotes(sql)
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
-        val span = sliceSpan(masked, i) // colon inside → slice (handled)
-        if (span.isEmpty) subscriptClose(masked, i).foreach { close =>
-          val body = sql.substring(i + 1, close).trim
-          if (body.nonEmpty) sliceBaseStart(masked, i).foreach { bs =>
-            // skip type positions: `:: TYPE [n]` and `AS TYPE [n]`
-            var p = bs
-            while (p > 0 && masked.charAt(p - 1).isWhitespace) p -= 1
-            val isCastType = (p >= 2 && masked.charAt(p - 1) == ':' &&
-              masked.charAt(p - 2) == ':') ||
-              (p >= 2 && wordEndingAt(masked, p - 1).equalsIgnoreCase("AS"))
-            if (!isCastType) {
-              val base = sql.substring(bs, i)
-              return rewriteSubscript(sql.substring(0, bs) +
-                s"graft_bracket_get($base, $body)" + sql.substring(close + 1))
-            }
+    val t = SqlText(sql)
+    // a colon inside makes a slice (rewriteSlice's)
+    for (i <- 0 until t.length if t(i) == '[' && sliceSpan(t, i).isEmpty)
+      t.closeOf(i).foreach { close =>
+        val body = sql.substring(i + 1, close).trim
+        if (body.nonEmpty) sliceBaseStart(t, i).foreach { bs =>
+          // skip type positions: `:: TYPE [n]` and `AS TYPE [n]`
+          val p = t.skipWsBack(bs)
+          val isCastType = p >= 2 &&
+            ((t(p - 1) == ':' && t(p - 2) == ':') || t.wordEndingAt(p - 1) == "AS")
+          if (!isCastType) {
+            val base = sql.substring(bs, i)
+            return rewriteSubscript(sql.substring(0, bs) +
+              s"graft_bracket_get($base, $body)" + sql.substring(close + 1))
           }
         }
       }
-      i += 1
-    }
     sql
-  }
-
-  /** Matching `]` of a bracket opened at `open` (no colon requirement). */
-  private def subscriptClose(masked: String, open: Int): Option[Int] = {
-    var i = open + 1
-    var db = 0
-    var dp = 0
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '[' => db += 1
-        case ']' if db > 0 => db -= 1
-        case ']' if dp == 0 => return Some(i)
-        case ']' => return None // unbalanced parens inside
-        case '(' => dp += 1
-        case ')' => dp -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    None
   }
 
   /** (colonPos, closePos) of a slice bracket opened at `open`: the
@@ -2436,78 +2088,46 @@ object GraftSqlParser {
     * counts; two slice colons — DuckDB's step form — stay unsupported
     * → guided error).
     */
-  private def sliceSpan(masked: String, open: Int): Option[(Int, Int)] = {
-    var i = open + 1
-    var db = 0
-    var dp = 0
-    var colon = -1
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '[' => db += 1
-        case ']' if db > 0 => db -= 1
-        case ']' => return if (colon >= 0) Some((colon, i)) else None
-        case '(' => dp += 1
-        case ')' => dp -= 1
-        case ':' if db == 0 && dp == 0 =>
-          val isCast = (i + 1 < masked.length && masked.charAt(i + 1) == ':') ||
-            masked.charAt(i - 1) == ':'
-          if (!isCast) {
-            if (colon >= 0) return None
-            colon = i
-          }
-        case _ =>
+  private def sliceSpan(t: SqlText, open: Int): Option[(Int, Int)] =
+    t.closeOf(open).flatMap { close =>
+      colons0(t, open + 1, close) match {
+        case Seq(colon) => Some((colon, close))
+        case _ => None
       }
-      i += 1
     }
-    None
-  }
 
   /** Start of the primary-expression chain ending right before the `[`
     * at `brPos`; None when no sliceable base precedes (list literal,
     * keyword, clause start).
     */
-  private def sliceBaseStart(masked: String, brPos: Int): Option[Int] = {
+  private def sliceBaseStart(t: SqlText, brPos: Int): Option[Int] = {
     var j = brPos
     var any = false
     var bareIdentOnly = false
     var scanning = true
     while (scanning && j > 0) {
-      val c = masked.charAt(j - 1)
+      val c = t(j - 1)
       if (c.isLetterOrDigit || c == '_' || c == '$') {
         var b = j - 1
-        while (b > 0 && { val x = masked.charAt(b - 1)
+        while (b > 0 && { val x = t(b - 1)
           x.isLetterOrDigit || x == '_' || x == '$' }) b -= 1
         bareIdentOnly = !any
         j = b; any = true
-        if (b > 0 && masked.charAt(b - 1) == '.') j = b - 1 else scanning = false
-      } else if (c == '`') {
-        var b = j - 2
-        while (b >= 0 && masked.charAt(b) != '`') b -= 1
+        if (b > 0 && t(b - 1) == '.') j = b - 1 else scanning = false
+      } else if (c == '`' || c == '\'') {
+        val b = t.mask.lastIndexOf(c, j - 2)
         if (b < 0) return None
         bareIdentOnly = false
         j = b; any = true
-        if (b > 0 && masked.charAt(b - 1) == '.') j = b - 1 else scanning = false
-      } else if (c == '\'') {
-        var b = j - 2
-        while (b >= 0 && masked.charAt(b) != '\'') b -= 1
-        if (b < 0) return None
-        j = b; any = true; bareIdentOnly = false; scanning = false
+        if (c == '`' && b > 0 && t(b - 1) == '.') j = b - 1 else scanning = false
       } else if (c == ')' || c == ']') {
-        val openCh = if (c == ')') '(' else '['
-        var d = 1
-        var b = j - 2
-        while (b >= 0 && d > 0) {
-          val cc = masked.charAt(b)
-          if (cc == c) d += 1 else if (cc == openCh) d -= 1
-          b -= 1
-        }
-        if (d > 0) return None
+        val b = t.openOf(j - 1).getOrElse(return None) - 1
         // a ']' group is only claimable when its '[' is a SUBSCRIPT on
         // a preceding expression — a bare `[1,2,3]` is a DuckDB list
         // LITERAL, which has no Spark rewrite: leave it unclaimed so
         // the guided construct hint fires instead of a raw parse error
         // on the mangled literal (review r9)
-        if (c == ']' && (b < 0 || { val p = masked.charAt(b)
+        if (c == ']' && (b < 0 || { val p = t(b)
           !(p.isLetterOrDigit || p == '_' || p == '$' || p == '`' ||
             p == ')' || p == ']' || p == '\'') })) return None
         bareIdentOnly = false
@@ -2518,7 +2138,7 @@ object GraftSqlParser {
     else if (bareIdentOnly && Set("ARRAY", "MAP", "END", "NULL", "TRUE",
         "FALSE", "THEN", "ELSE", "WHEN", "AND", "OR", "NOT", "IN",
         "SELECT", "WHERE", "FROM", "ON", "BY")
-        .contains(wordStartingAt(masked, j))) None
+        .contains(t.wordAt(j))) None
     else Some(j)
   }
 
@@ -2530,21 +2150,9 @@ object GraftSqlParser {
     * (A `)` inside a quoted column name within the EXCLUDE list remains
     * unsupported — document as a dialect edge.)
     */
-  def rewriteExclude(sql: String): String = {
-    val ms = ExcludeRe.findAllMatchIn(maskQuotes(sql)).toList
-    if (ms.isEmpty) sql
-    else {
-      val sb = new StringBuilder
-      var last = 0
-      for (m <- ms) {
-        sb.append(sql.substring(last, m.start))
-        sb.append("* EXCEPT (").append(sql.substring(m.start(1), m.end(1))).append(")")
-        last = m.end
-      }
-      sb.append(sql.substring(last))
-      sb.toString
-    }
-  }
+  def rewriteExclude(sql: String): String =
+    SqlText(sql).replaceAll(ExcludeRe)(m =>
+      Some("* EXCEPT (" + sql.substring(m.start(1), m.end(1)) + ")"))
 
   private val QualifyRe = raw"(?i)\bQUALIFY\b".r
 
@@ -2570,11 +2178,10 @@ object GraftSqlParser {
     * fails analysis as unresolved.
     */
   def rewriteQualify(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = QualifyRe.findAllMatchIn(masked).find(m => isQualifyClause(masked, m.start, m.end))
-    m match {
+    val t = SqlText(sql)
+    QualifyRe.findAllMatchIn(t.mask).find(m => isQualifyClause(t, m.start, m.end)) match {
       case None => sql
-      case Some(q) => rewriteQualify(rewriteOneQualify(sql, masked, q.start, q.end))
+      case Some(q) => rewriteQualify(rewriteOneQualify(t, q.start, q.end))
     }
   }
 
@@ -2582,102 +2189,41 @@ object GraftSqlParser {
     * SELECT/comma/operator, or followed by an operator/comma/close)
     * is a column named "qualify", not the clause.
     */
-  private def isQualifyClause(masked: String, start: Int, end: Int): Boolean = {
-    val opChars = ",(.=<>+-*/|&".toSet
-    val prevIdx = (start - 1 to 0 by -1).find(i => !masked.charAt(i).isWhitespace)
-    val prevOk = prevIdx match {
-      case None => false // query can't start with QUALIFY
-      case Some(i) if opChars.contains(masked.charAt(i)) => false
-      case Some(i) =>
-        val w = wordEndingAt(masked, i)
-        !Set("SELECT", "DISTINCT", "ALL", "BY", "AS", "ON", "AND", "OR", "NOT",
-          "WHERE", "WHEN", "THEN", "ELSE", "CASE", "FROM", "JOIN").contains(w)
-    }
-    val nextIdx = (end until masked.length).find(i => !masked.charAt(i).isWhitespace)
-    val nextOk = nextIdx match {
-      case None => false // trailing identifier
-      case Some(i) => !",.)=<>+-*/|&".toSet.contains(masked.charAt(i))
-    }
-    prevOk && nextOk
+  private def isQualifyClause(t: SqlText, start: Int, end: Int): Boolean = {
+    // the query can't start with QUALIFY, nor end with it
+    val prev = t.skipWsBack(start) - 1
+    val prevOk = prev >= 0 && !",(.=<>+-*/|&".contains(t(prev)) &&
+      !Set("SELECT", "DISTINCT", "ALL", "BY", "AS", "ON", "AND", "OR", "NOT",
+        "WHERE", "WHEN", "THEN", "ELSE", "CASE", "FROM", "JOIN").contains(t.wordEndingAt(prev))
+    val next = t.skipWs(end)
+    prevOk && next < t.length && !",.)=<>+-*/|&".contains(t(next))
   }
 
-  private def wordEndingAt(s: String, last: Int): String = {
-    if (!s.charAt(last).isLetter) return ""
-    var b = last
-    while (b > 0 && (s.charAt(b - 1).isLetterOrDigit || s.charAt(b - 1) == '_')) b -= 1
-    s.substring(b, last + 1).toUpperCase
-  }
-
-  private def wordStartingAt(s: String, first: Int): String = {
-    var e = first
-    while (e < s.length && (s.charAt(e).isLetterOrDigit || s.charAt(e) == '_')) e += 1
-    s.substring(first, e).toUpperCase
-  }
-
-  private def rewriteOneQualify(sql: String, masked: String, qStart: Int, qEnd: Int): String = {
+  private def rewriteOneQualify(t: SqlText, qStart: Int, qEnd: Int): String = {
+    val sql = t.sql
     // block start = position after the '(' enclosing the QUALIFY (or 0)
-    val stack = scala.collection.mutable.Stack[Int]()
-    var i = 0
-    while (i < qStart) {
-      masked.charAt(i) match {
-        case '(' => stack.push(i + 1)
-        case ')' => if (stack.nonEmpty) stack.pop()
-        case _ =>
-      }
-      i += 1
-    }
-    val blockStart = if (stack.isEmpty) 0 else stack.top
+    val blockStart = t.enclosing(qStart) + 1
     // predicate runs to the next same-depth clause terminator / ')'
     val terminators = Set("ORDER", "LIMIT", "OFFSET", "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS")
-    var predEnd = masked.length
-    var dd = 0
-    i = qEnd
-    var scanning = true
-    while (i < masked.length && scanning) {
-      val c = masked.charAt(i)
-      if (c == '(') { dd += 1; i += 1 }
-      else if (c == ')') {
-        if (dd == 0) { predEnd = i; scanning = false } else { dd -= 1; i += 1 }
-      } else if (dd == 0 && c.isLetter &&
-        (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_'))) {
-        val w = wordStartingAt(masked, i)
-        if (terminators.contains(w)) { predEnd = i; scanning = false }
-        else i += math.max(w.length, 1)
-      } else i += 1
-    }
+    val predEnd = t.word0(qEnd)(terminators)
     val pred = sql.substring(qEnd, predEnd).trim
     val head = sql.substring(blockStart, qStart).trim
     if (pred.isEmpty)
       throw new graft.functions.expressions.DuckDialectException(
         "QUALIFY with an empty predicate")
-    val maskedPred = masked.substring(qEnd, predEnd)
-    val hasWindow = raw"(?i)\bOVER\b".r.findFirstIn(maskedPred).isDefined
+    val hasWindow = raw"(?i)\bOVER\b".r.findFirstIn(t.mask.substring(qEnd, predEnd)).isDefined
     val replacement =
       if (!hasWindow) s"SELECT * FROM ( $head ) WHERE ( $pred ) "
       else {
         if (raw"(?is)^\s*SELECT\s+DISTINCT\b".r
-            .findFirstIn(masked.substring(blockStart, qStart)).isDefined)
+            .findFirstIn(t.mask.substring(blockStart, qStart)).isDefined)
           throw new graft.functions.expressions.DuckDialectException(
             "QUALIFY with an inline window over SELECT DISTINCT has no mechanical " +
               "rewrite (the window must run before DISTINCT) — compute the window " +
               "column in a subquery, filter, then SELECT DISTINCT outside")
         // inject the predicate as a column before the block's own FROM
-        var j = blockStart
-        var df = 0
-        var fromPos = -1
-        while (j < qStart && fromPos < 0) {
-          val c = masked.charAt(j)
-          if (c == '(') df += 1
-          else if (c == ')') df -= 1
-          else if (df == 0 && c.isLetter &&
-            (j == 0 || (!masked.charAt(j - 1).isLetterOrDigit && masked.charAt(j - 1) != '_'))) {
-            val w = wordStartingAt(masked, j)
-            if (w == "FROM") fromPos = j
-            else j += math.max(w.length, 1) - 1
-          }
-          j += 1
-        }
-        if (fromPos < 0)
+        val fromPos = t.word0(blockStart, qStart)(_ == "FROM")
+        if (fromPos >= qStart)
           throw new graft.functions.expressions.DuckDialectException(
             "QUALIFY: could not locate the block's FROM clause for the window rewrite")
         val head2 = sql.substring(blockStart, fromPos) +
@@ -2743,11 +2289,11 @@ object GraftSqlParser {
     // depth caps pathological alias cycles (`SELECT b AS a, a AS b ...
     // ROLLUP (a)` would ping-pong forever); real queries settle in 1-2
     if (depth > 8) return sql
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
     // try each construct left-to-right; the first that yields a change
     // wins and the result recurses (so every block eventually settles)
-    for (m <- GroupingConstructRe.findAllMatchIn(masked)) {
-      rewriteOneGroupingConstruct(sql, masked, m, resolve) match {
+    for (m <- GroupingConstructRe.findAllMatchIn(t.mask)) {
+      rewriteOneGroupingConstruct(t, m, resolve) match {
         case Some(out) => return rewriteGroupingAliases(out, depth + 1, resolve)
         case None =>
       }
@@ -2762,52 +2308,20 @@ object GraftSqlParser {
     * replacements splice into the raw text by position.
     */
   private def rewriteOneGroupingConstruct(
-      sql: String, masked: String,
+      t: SqlText,
       m: scala.util.matching.Regex.Match,
       resolve: String => Option[Seq[String]]): Option[String] = {
+    val (sql, masked) = (t.sql, t.mask)
     // balanced construct span
     val open = m.end - 1
-    var i = m.end
-    var d = 1
-    while (i < masked.length && d > 0) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (d != 0) return None
-    val close = i // index AFTER the ')'
-    // enclosing SELECT: scan backward from the match at depth 0
-    var j = m.start - 1
-    var bd = 0
-    var selPos = -1
-    while (j >= 0 && selPos < 0) {
-      val c = masked.charAt(j)
-      if (c == ')') bd += 1
-      else if (c == '(') bd -= 1
-      else if (bd == 0 && c.isLetter && wordStartingAt(masked, j) == "SELECT" &&
-        (j == 0 || (!masked.charAt(j - 1).isLetterOrDigit && masked.charAt(j - 1) != '_')))
-        selPos = j
-      j -= 1
-    }
-    if (selPos < 0) return None
+    val close = t.closeOf(open).getOrElse(return None) + 1 // index AFTER the ')'
+    // enclosing SELECT: the block's last depth-0 SELECT before the match
+    val blockStart = t.enclosing(m.start) + 1
+    val selPos = t.findAll0(raw"(?i)\bSELECT\b".r, blockStart, m.start)
+      .lastOption.map(_.start + blockStart).getOrElse(return None)
     // select list = SELECT .. FROM at the same depth
-    var k = selPos + 6
-    var fd = 0
-    var fromPos = -1
-    while (k < m.start && fromPos < 0) {
-      val c = masked.charAt(k)
-      if (c == '(') fd += 1
-      else if (c == ')') fd -= 1
-      else if (fd == 0 && c.isLetter &&
-        (!masked.charAt(k - 1).isLetterOrDigit && masked.charAt(k - 1) != '_') &&
-        wordStartingAt(masked, k) == "FROM") fromPos = k
-      k += 1
-    }
-    if (fromPos < 0) return None
-    val selText = sql.substring(selPos + 6, fromPos)
+    val fromPos = t.word0(selPos + 6, m.start)(_ == "FROM")
+    if (fromPos >= m.start) return None
     val aliasRe = raw"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)$$".r
     val implicitAliasRe = raw"(?is)^(.*\S)\s+([A-Za-z_]\w*)$$".r
     // words making a trailing identifier part of the EXPRESSION, not an
@@ -2835,7 +2349,7 @@ object GraftSqlParser {
         else Some(a.toLowerCase -> e)
       }
     val aliasMapAll: Map[String, String] =
-      splitTopLevel(selText, maskQuotes(selText)).flatMap(_.trim match {
+      t.split0(selPos + 6, fromPos).flatMap(_.trim match {
         case aliasRe(e, a) => Some(a.toLowerCase -> e)
         case it => implicitAlias(it)
       }).toMap
@@ -2845,7 +2359,7 @@ object GraftSqlParser {
     // — and so does Spark, so the untouched text already agrees and
     // substituting the alias expression would silently diverge
     val shadowed: Set[String] =
-      blockFromRelation(sql, masked, selPos).flatMap(resolve)
+      blockFromRelation(t, selPos).flatMap(resolve)
         .getOrElse(Nil).map(_.toLowerCase).toSet
     val aliasMap = aliasMapAll -- shadowed
     if (aliasMap.isEmpty) return None
@@ -2891,19 +2405,10 @@ object GraftSqlParser {
     val newSpan = sb.toString
     // grouping()/grouping_id() args over the replaced aliases — block
     // scope: the enclosing SELECT to the end of its balanced region
-    var blockEnd = close
-    var ed = 0
-    while (blockEnd < masked.length && ed >= 0) {
-      masked.charAt(blockEnd) match {
-        case '(' => ed += 1
-        case ')' => ed -= 1
-        case _ =>
-      }
-      if (ed >= 0) blockEnd += 1
-    }
+    val blockEnd = t.walk0(close)(_ => false)
     val grRe = raw"(?i)\b(grouping|grouping_id)\s*\(([^()]*)\)".r
     def fixGrouping(raw0: String): String = {
-      val msk = maskQuotes(raw0)
+      val msk = SqlText(raw0).mask
       val b = new StringBuilder
       var p = 0
       for (gm <- grRe.findAllMatchIn(msk)) {
@@ -2969,38 +2474,24 @@ object GraftSqlParser {
       val t = sql0.trim
       (if (t.endsWith(";")) t.dropRight(1) else t).trim
     }
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
+    val masked = t.mask
     if (raw"(?is)^SELECT\b".r.findFirstIn(masked).isEmpty) return None
     if (raw"(?is)^SELECT\s+DISTINCT\b".r.findFirstIn(masked).isDefined) return None
     if (raw"(?i)\bOVER\b".r.findFirstIn(masked).isDefined) return None
-    if (depth0Find(masked, raw"(?i)\b(UNION|INTERSECT|EXCEPT)\b".r,
-      0, masked.length).isDefined) return None
-    val gbPos = depth0Find(masked, raw"(?i)\bGROUP\s+BY\b".r, 0, masked.length)
-      .getOrElse(return None)
+    if (t.find0(raw"(?i)\b(UNION|INTERSECT|EXCEPT)\b".r).isDefined) return None
+    val gbPos = t.find0(raw"(?i)\bGROUP\s+BY\b".r).getOrElse(return None)
     // the GROUP BY body must be EXACTLY one construct starting right at
     // the GROUP BY (mixed `GROUP BY g, ROLLUP (h)` has no pure-empty
     // set — zero rows on both engines already)
     val cm = GroupingConstructRe.findFirstMatchIn(masked.substring(gbPos))
       .filter(_.start == 0).getOrElse(return None)
     val open = gbPos + cm.end - 1
-    var i = open + 1
-    var d = 1
-    while (i < masked.length && d > 0) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (d != 0) return None
-    val close = i // index AFTER ')'
+    val close = t.closeOf(open).getOrElse(return None) + 1 // index AFTER ')'
     val kind = cm.group(1).toUpperCase.replaceAll(raw"\s+", " ")
-    val interior = sql.substring(open + 1, close - 1)
     // grand-total multiplicity: ROLLUP/CUBE always contain the empty
     // set once; explicit GROUPING SETS contain it per literal `()`
-    val setItems = splitTopLevel(interior, masked.substring(open + 1, close - 1))
-      .map(_.trim)
+    val setItems = t.split0(open + 1, close - 1).map(_.trim)
     val grandTotals =
       if (kind == "ROLLUP" || kind == "CUBE") 1
       else setItems.count(it => it == "()" || it.isEmpty)
@@ -3009,18 +2500,15 @@ object GraftSqlParser {
     val groupingExprs: Seq[String] = setItems.flatMap { it =>
       if (it.startsWith("(") && it.endsWith(")")) {
         val inner = it.substring(1, it.length - 1)
-        splitTopLevel(inner, maskQuotes(inner)).map(_.trim).filter(_.nonEmpty)
+        SqlText(inner).split0().map(_.trim).filter(_.nonEmpty)
       } else if (it.nonEmpty) Seq(it) else Nil
     }.distinct
     // clause spans
-    val fromPos = depth0Find(masked, raw"(?i)\bFROM\b".r, 0, gbPos)
-      .getOrElse(return None)
+    val fromPos = t.find0(raw"(?i)\bFROM\b".r, 0, gbPos).getOrElse(return None)
     val selList = sql.substring(6, fromPos)
-    if (raw"(?i)\bSELECT\b".r.findFirstIn(maskQuotes(selList)).isDefined) return None
+    if (raw"(?i)\bSELECT\b".r.findFirstIn(masked.substring(6, fromPos)).isDefined) return None
     val fromWhere = sql.substring(fromPos + 4, gbPos)
-    val tailMasked = masked.substring(close)
-    def tailFind(re: scala.util.matching.Regex): Option[Int] =
-      depth0Find(tailMasked, re, 0, tailMasked.length).map(_ + close)
+    def tailFind(re: scala.util.matching.Regex): Option[Int] = t.find0(re, close)
     val havingPos = tailFind(raw"(?i)\bHAVING\b".r)
     val orderPos = tailFind(raw"(?i)\bORDER\s+BY\b".r)
     val limitPos = Seq(tailFind(raw"(?i)\bLIMIT\b".r),
@@ -3043,15 +2531,7 @@ object GraftSqlParser {
       val lead = if (find.trim.head.isLetterOrDigit || find.trim.head == '_') raw"\b" else ""
       val trail = if (find.trim.last.isLetterOrDigit || find.trim.last == '_') raw"\b" else ""
       val p = ("(?i)" + lead + chunks.mkString(raw"\s*") + trail).r
-      val msk = maskQuotes(frag)
-      val sb = new StringBuilder
-      var last = 0
-      for (mm <- p.findAllMatchIn(msk)) {
-        sb.append(frag.substring(last, mm.start)).append(repl)
-        last = mm.end
-      }
-      sb.append(frag.substring(last))
-      sb.toString
+      SqlText(frag).replaceAll(p)(_ => Some(repl))
     }
     // grouping()/grouping_id() → all-aggregated constants (Spark types:
     // grouping = TINYINT, grouping_id = BIGINT)
@@ -3061,20 +2541,18 @@ object GraftSqlParser {
       var done = false
       while (!done && guard < 64) {
         guard += 1
-        val msk = maskQuotes(frag)
-        raw"(?i)\b(grouping|grouping_id)\s*\(".r.findFirstMatchIn(msk) match {
+        val ft = SqlText(frag)
+        raw"(?i)\b(grouping|grouping_id)\s*\(".r.findFirstMatchIn(ft.mask) match {
           case Some(gm) =>
-            closeOf(msk, gm.end) match {
+            ft.closeOf(gm.end - 1) match {
               case Some(e) =>
-                val nArgs = {
-                  val a = frag.substring(gm.end, e - 1).trim
-                  if (a.isEmpty) groupingExprs.size
-                  else splitTopLevel(a, maskQuotes(a)).size
-                }
+                val nArgs =
+                  if (frag.substring(gm.end, e).trim.isEmpty) groupingExprs.size
+                  else ft.spans0(gm.end, e).size
                 val const =
                   if (gm.group(1).equalsIgnoreCase("grouping")) "CAST(1 AS TINYINT)"
                   else s"CAST(${(1L << nArgs) - 1} AS BIGINT)"
-                frag = frag.substring(0, gm.start) + const + frag.substring(e)
+                frag = frag.substring(0, gm.start) + const + frag.substring(e + 1)
               case None => done = true
             }
           case None => done = true
@@ -3110,32 +2588,28 @@ object GraftSqlParser {
     Some(spec)
   }
 
-  /** Body spans of a NON-RECURSIVE top-level WITH clause:
-    * (bodyStart, bodyEnd) with [bodyStart, bodyEnd) the text INSIDE
-    * each definition's parentheses, in definition order. Empty for any
-    * other statement shape.
+  /** The definitions of a top-level WITH clause: whether it is
+    * RECURSIVE, and per definition (defStart, bodyStart, bodyClose) —
+    * [bodyStart, bodyClose) the text INSIDE its parentheses.
     */
-  private def cteBodySpans(masked: String): Seq[(Int, Int)] = {
-    val wm = raw"(?is)^\s*WITH\s+".r.findFirstMatchIn(masked)
-      .getOrElse(return Nil)
-    if (raw"(?is)^\s*WITH\s+RECURSIVE\b".r.findFirstIn(masked).isDefined)
-      return Nil
-    val out = Seq.newBuilder[(Int, Int)]
+  private def cteDefs(t: SqlText): (Boolean, Seq[(Int, Int, Int)]) = {
+    val wm = raw"(?is)^\s*WITH\s+(RECURSIVE\s+)?".r.findFirstMatchIn(t.mask)
+      .getOrElse(return (false, Nil))
+    val defRe = raw"(?s)^\s*([A-Za-z_][A-Za-z0-9_]*)\s*(\([^()]*\)\s*)?(?i:AS)\s*(?:(?i:NOT\s+MATERIALIZED)\s*|(?i:MATERIALIZED)\s*)?\(".r
+    val out = Seq.newBuilder[(Int, Int, Int)]
     var p = wm.end
     var more = true
     while (more) {
       more = false
-      val defRe = raw"(?s)^\s*([A-Za-z_][A-Za-z0-9_]*)\s*(\([^()]*\)\s*)?(?i:AS)\s*(?:(?i:NOT\s+MATERIALIZED)\s*|(?i:MATERIALIZED)\s*)?\(".r
-      defRe.findFirstMatchIn(masked.substring(p)).foreach { dm =>
-        closeOf(masked, p + dm.end).foreach { close =>
-          out += ((p + dm.end, close - 1))
-          var q = close
-          while (q < masked.length && masked.charAt(q).isWhitespace) q += 1
-          if (q < masked.length && masked.charAt(q) == ',') { p = q + 1; more = true }
+      defRe.findFirstMatchIn(t.mask.substring(p)).foreach { dm =>
+        t.closeOf(p + dm.end - 1).foreach { close =>
+          out += ((p, p + dm.end, close))
+          val q = t.skipWs(close + 1)
+          if (q < t.length && t(q) == ',') { p = q + 1; more = true }
         }
       }
     }
-    out.result()
+    (wm.group(1) != null, out.result())
   }
 
   /** CTE-scoped sites of the empty-input grouping-sets parity (r18 —
@@ -3152,31 +2626,22 @@ object GraftSqlParser {
     * body referencing an earlier same-statement CTE fails its probe's
     * analysis and falls back to plain Spark behavior.
     */
-  def emptyGroupingSetsCteSites(sql: String): Seq[(Int, Int, EmptyGroupingSpec)] = {
-    val masked = maskQuotes(sql)
-    cteBodySpans(masked).flatMap { case (bs, be) =>
-      emptyGroupingSetsSpec(sql.substring(bs, be)).map(spec => (bs, be, spec))
+  def emptyGroupingSetsCteSites(sql: String): Seq[(Int, Int, EmptyGroupingSpec)] =
+    cteDefs(SqlText(sql)) match {
+      case (false, defs) => defs.flatMap { case (_, bs, be) =>
+        emptyGroupingSetsSpec(sql.substring(bs, be)).map(spec => (bs, be, spec))
+      }
+      case _ => Nil
     }
-  }
 
   def rewriteDistinctOn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    DistinctOnRe.findFirstMatchIn(masked) match {
+    val t = SqlText(sql)
+    DistinctOnRe.findFirstMatchIn(t.mask) match {
       case None => sql
       case Some(m) =>
         val keysOpen = m.end - 1
-        var i = m.end
-        var d = 1
-        while (i < masked.length && d > 0) {
-          masked.charAt(i) match {
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (d > 0) return sql // unbalanced — let the parser report it
-        val keysClose = i - 1
+        // unbalanced — let the parser report it
+        val keysClose = t.closeOf(keysOpen).getOrElse(return sql)
         val keys = sql.substring(keysOpen + 1, keysClose).trim
         if (keys.isEmpty)
           throw new graft.functions.expressions.DuckDialectException(
@@ -3184,62 +2649,32 @@ object GraftSqlParser {
         // scan this block for its top-level ORDER BY; stop at the
         // enclosing ')' or a same-depth set operation
         val setOps = Set("UNION", "INTERSECT", "EXCEPT", "MINUS")
-        var j = keysClose + 1
-        var depth = 0
-        var orderPos = -1
-        var scanning = true
-        while (j < masked.length && scanning) {
-          val c = masked.charAt(j)
-          if (c == '(') { depth += 1; j += 1 }
-          else if (c == ')') {
-            if (depth == 0) scanning = false else { depth -= 1; j += 1 }
-          } else if (depth == 0 && c.isLetter &&
-            (j == 0 || (!masked.charAt(j - 1).isLetterOrDigit && masked.charAt(j - 1) != '_'))) {
-            val w = wordStartingAt(masked, j)
-            if (w == "ORDER") { orderPos = j; scanning = false }
-            else if (setOps.contains(w))
-              throw new graft.functions.expressions.DuckDialectException(
-                "DISTINCT ON combined with a set operation has no mechanical " +
-                  "rewrite (the ORDER BY orders the combined result, not the " +
-                  "DISTINCT ON pick) — wrap the DISTINCT ON SELECT in a subquery " +
-                  "with its own ORDER BY")
-            else j += math.max(w.length, 1)
-          } else j += 1
-        }
-        if (orderPos < 0)
+        val orderPos = t.word0(keysClose + 1)(w => w == "ORDER" || setOps(w))
+        if (setOps(t.wordAt(orderPos)))
+          throw new graft.functions.expressions.DuckDialectException(
+            "DISTINCT ON combined with a set operation has no mechanical " +
+              "rewrite (the ORDER BY orders the combined result, not the " +
+              "DISTINCT ON pick) — wrap the DISTINCT ON SELECT in a subquery " +
+              "with its own ORDER BY")
+        if (t.wordAt(orderPos) != "ORDER")
           throw new graft.functions.expressions.DuckDialectException(
             "DISTINCT ON without ORDER BY picks an arbitrary row per key — " +
               "not reproducible on a distributed engine. Add ORDER BY <keys>, " +
               "<tiebreak> to pin which row survives")
         // ORDER BY list extent: to the next same-depth LIMIT/OFFSET, the
         // enclosing ')', or end of text
-        val byM = raw"(?is)\AORDER\s+BY\b".r.findFirstMatchIn(masked.substring(orderPos))
+        val byM = raw"(?is)\AORDER\s+BY\b".r.findFirstMatchIn(t.mask.substring(orderPos))
           .getOrElse(throw new graft.functions.expressions.DuckDialectException(
             "DISTINCT ON: malformed ORDER BY clause"))
         val listStart = orderPos + byM.end
-        var k = listStart
-        depth = 0
-        var listEnd = masked.length
-        var scanning2 = true
-        while (k < masked.length && scanning2) {
-          val c = masked.charAt(k)
-          if (c == '(') { depth += 1; k += 1 }
-          else if (c == ')') {
-            if (depth == 0) { listEnd = k; scanning2 = false } else { depth -= 1; k += 1 }
-          } else if (depth == 0 && c.isLetter &&
-            (!masked.charAt(k - 1).isLetterOrDigit && masked.charAt(k - 1) != '_')) {
-            val w = wordStartingAt(masked, k)
-            if (w == "LIMIT" || w == "OFFSET") { listEnd = k; scanning2 = false }
-            else k += math.max(w.length, 1)
-          } else k += 1
-        }
+        val listEnd = t.word0(listStart)(w => w == "LIMIT" || w == "OFFSET")
         val orderList = sql.substring(listStart, listEnd).trim
+        val orderItems = t.split0(listStart, listEnd)
         if (orderList.isEmpty)
           throw new graft.functions.expressions.DuckDialectException(
             "DISTINCT ON: empty ORDER BY list")
         val ordinal = raw"(?is)^\d+(\s+(ASC|DESC))?(\s+NULLS\s+(FIRST|LAST))?$$".r
-        if (splitTopLevel(orderList, maskQuotes(orderList))
-            .exists(item => ordinal.findFirstIn(item.trim).isDefined))
+        if (orderItems.exists(item => ordinal.findFirstIn(item.trim).isDefined))
           throw new graft.functions.expressions.DuckDialectException(
             "DISTINCT ON with ordinal ORDER BY items (ORDER BY 1) isn't " +
               "rewritable — inside the generated OVER clause an integer is a " +
@@ -3257,34 +2692,17 @@ object GraftSqlParser {
         val outerOrder = {
           def canon(s: String): String = s.trim.toLowerCase.replaceAll("\\s+", " ")
           // select list = text between the key list and the block's FROM
-          var j2 = keysClose + 1
-          var df2 = 0
-          var fromPos2 = -1
-          while (j2 < orderPos && fromPos2 < 0) {
-            val c = masked.charAt(j2)
-            if (c == '(') df2 += 1
-            else if (c == ')') df2 -= 1
-            else if (df2 == 0 && c.isLetter &&
-              (!masked.charAt(j2 - 1).isLetterOrDigit && masked.charAt(j2 - 1) != '_')) {
-              val w = wordStartingAt(masked, j2)
-              if (w == "FROM") fromPos2 = j2
-              else j2 += math.max(w.length, 1) - 1
-            }
-            j2 += 1
-          }
+          val fromPos2 = t.word0(keysClose + 1, orderPos)(_ == "FROM")
           val aliasRe = raw"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)$$".r
           val aliasMap: Map[String, String] =
-            if (fromPos2 < 0) Map.empty
-            else {
-              val selText = sql.substring(keysClose + 1, fromPos2)
-              splitTopLevel(selText, maskQuotes(selText)).flatMap(_.trim match {
-                case aliasRe(e, a) => Some(canon(e) -> a)
-                case _ => None
-              }).toMap
-            }
+            if (fromPos2 >= orderPos) Map.empty
+            else t.split0(keysClose + 1, fromPos2).flatMap(_.trim match {
+              case aliasRe(e, a) => Some(canon(e) -> a)
+              case _ => None
+            }).toMap
           val itemRe =
             raw"(?is)^(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?$$".r
-          splitTopLevel(orderList, maskQuotes(orderList)).map { item =>
+          orderItems.map { item =>
             item.trim match {
               case itemRe(core, dir, nulls) =>
                 aliasMap.get(canon(core)).map(_ +
@@ -3310,47 +2728,8 @@ object GraftSqlParser {
     * the literal-masked copy), so `:=` anywhere else still raises the
     * guided named-argument error instead of being silently mangled.
     */
-  def rewriteStructPack(sql: String): String = {
-    val masked = maskQuotes(sql)
-    StructPackRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        // matching close paren of the argument list
-        var i = m.end
-        var d = 1
-        while (i < masked.length && d > 0) {
-          masked.charAt(i) match {
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (d != 0) sql // unbalanced — leave for the parser to report
-        else {
-          val inner = sql.substring(m.end, i - 1)
-          val innerMasked = masked.substring(m.end, i - 1)
-          // replace ident := at THIS call's top level only (depth 0 in
-          // the span) — a nested struct_pack is handled by recursion
-          val argRe = raw"(?s)([A-Za-z_][A-Za-z_0-9]*)\s*:=".r
-          val sb = new StringBuilder
-          var last = 0
-          for (am <- argRe.findAllMatchIn(innerMasked)) {
-            val depth = innerMasked.substring(0, am.start)
-              .count(_ == '(') - innerMasked.substring(0, am.start).count(_ == ')')
-            if (depth == 0) {
-              sb.append(inner.substring(last, am.start))
-              sb.append("'").append(am.group(1)).append("',")
-              last = am.end
-            }
-          }
-          sb.append(inner.substring(last))
-          val rewritten = sql.substring(0, m.start) + "named_struct(" +
-            sb.toString + sql.substring(i - 1)
-          rewriteStructPack(rewritten)
-        }
-    }
-  }
+  def rewriteStructPack(sql: String): String =
+    namedArgsCall(sql, StructPackRe, "named_struct")
 
   private val StructInsertRe = raw"(?i)\bstruct_insert\s*\(".r
 
@@ -3360,43 +2739,25 @@ object GraftSqlParser {
     * hood — appends/overwrites fields on the struct, probed
     * `{'a': 1, 'b': 2}`).
     */
-  def rewriteStructInsert(sql: String): String = {
-    val masked = maskQuotes(sql)
-    StructInsertRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        var i = m.end
-        var d = 1
-        while (i < masked.length && d > 0) {
-          masked.charAt(i) match {
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (d != 0) sql
-        else {
-          val inner = sql.substring(m.end, i - 1)
-          val innerMasked = masked.substring(m.end, i - 1)
-          val argRe = raw"(?s)([A-Za-z_][A-Za-z_0-9]*)\s*:=".r
-          val sb = new StringBuilder
-          var last = 0
-          for (am <- argRe.findAllMatchIn(innerMasked)) {
-            val depth = innerMasked.substring(0, am.start)
-              .count(_ == '(') - innerMasked.substring(0, am.start).count(_ == ')')
-            if (depth == 0) {
-              sb.append(inner.substring(last, am.start))
-              sb.append("'").append(am.group(1)).append("',")
-              last = am.end
-            }
-          }
-          sb.append(inner.substring(last))
-          val rewritten = sql.substring(0, m.start) + "graft_struct_insert(" +
-            sb.toString + sql.substring(i - 1)
-          rewriteStructInsert(rewritten)
-        }
+  def rewriteStructInsert(sql: String): String =
+    namedArgsCall(sql, StructInsertRe, "graft_struct_insert")
+
+  /** Rename the first call `re` finds to `to`, turning each named
+    * argument `ident :=` at THIS call's depth 0 into `'ident',` (a
+    * nested call is handled by the rescan), and repeat.
+    */
+  private def namedArgsCall(sql: String, re: scala.util.matching.Regex, to: String): String = {
+    val t = SqlText(sql)
+    val m = re.findFirstMatchIn(t.mask).getOrElse(return sql)
+    // unbalanced — leave for the parser to report
+    val close = t.closeOf(m.end - 1).getOrElse(return sql)
+    val sb = new java.lang.StringBuilder(sql.substring(0, m.start)).append(to).append('(')
+    var last = m.end
+    t.findAll0(raw"(?s)([A-Za-z_][A-Za-z_0-9]*)\s*:=".r, m.end, close).foreach { am =>
+      sb.append(sql, last, m.end + am.start).append("'").append(am.group(1)).append("',")
+      last = m.end + am.end
     }
+    namedArgsCall(sb.append(sql, last, sql.length).toString, re, to)
   }
 
   private val SampleRe =
@@ -3450,59 +2811,35 @@ object GraftSqlParser {
     * and name the FROM-subquery form, which both engines execute
     * identically (the subquery sample applies where written, probed).
     */
-  private def guardAggregatedSample(maskedHead: String): Unit = {
-    // subquery-paren depth per position: '(' followed by SELECT opens a
-    // subquery scope; function/grouping parens don't (so round(sum(x))
-    // still counts as a top-level aggregate while (SELECT count(*) …)
-    // scalar subqueries don't trigger)
-    val subDepth = new Array[Int](maskedHead.length + 1)
-    val stack = scala.collection.mutable.Stack[Boolean]()
-    var i = 0
-    while (i < maskedHead.length) {
-      subDepth(i) = stack.count(identity)
-      maskedHead.charAt(i) match {
-        case '(' =>
-          val rest = maskedHead.substring(i + 1).dropWhile(_.isWhitespace)
-          stack.push(rest.regionMatches(true, 0, "SELECT", 0, 6))
-        case ')' => if (stack.nonEmpty) stack.pop()
-        case _ =>
+  private def guardAggregatedSample(t: SqlText, from: Int, until: Int): Unit = {
+    // subquery scope: a '(' followed by SELECT opens one; function/
+    // grouping parens don't (so round(sum(x)) still counts as a
+    // top-level aggregate while (SELECT count(*) …) scalar subqueries
+    // don't trigger)
+    def inSubquery(p: Int): Boolean = {
+      var o = t.enclosing(p)
+      while (o >= from) {
+        if (t.mask.regionMatches(true, t.skipWs(o + 1), "SELECT", 0, 6)) return true
+        o = t.enclosing(o)
       }
-      i += 1
+      false
     }
-    def topLevel(re: scala.util.matching.Regex, upTo: Int): Boolean =
-      re.findAllMatchIn(maskedHead.substring(0, upTo))
-        .exists(m => subDepth(m.start) == 0 && !insideParens(m.start))
-    // plain paren depth (for GROUP BY: must be this block's clause, not
-    // a parenthesized expression's text)
-    def insideParens(pos: Int): Boolean = {
-      var d = 0
-      var j = 0
-      while (j < pos) {
-        maskedHead.charAt(j) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        j += 1
-      }
-      d > 0
-    }
-    val grouped = topLevel(raw"(?i)\b(GROUP\s+BY|HAVING)\b".r, maskedHead.length)
-    // DISTINCT at the block's own select (subquery-depth 0 — a leading
-    // WITH clause must not hide it; CTE-internal DISTINCTs sit at
-    // subquery depth > 0 and stay inert)
-    val distinct = raw"(?i)\bSELECT\s+DISTINCT\b".r.findAllMatchIn(maskedHead)
-      .exists(m => subDepth(m.start) == 0)
+    def outsideSubqueries(re: scala.util.matching.Regex, upTo: Int): Boolean =
+      re.findAllMatchIn(t.mask.substring(from, upTo)).exists(m => !inSubquery(from + m.start))
+    // GROUP BY must be this block's clause, not a parenthesized
+    // expression's text
+    val grouped = t.find0(raw"(?i)\b(GROUP\s+BY|HAVING)\b".r, from, until).isDefined
+    // DISTINCT at the block's own select (a leading WITH clause must
+    // not hide it; CTE-internal DISTINCTs sit in subquery scope and
+    // stay inert)
+    val distinct = outsideSubqueries(raw"(?i)\bSELECT\s+DISTINCT\b".r, until)
     // aggregates AND window functions only matter in the select list
     // (before the top-level FROM) — both evaluate over the SAMPLED rows
     // in DuckDB, while the wrap evaluates the block first, so both
     // refuse
-    val fromIdx = raw"(?i)\bFROM\b".r.findAllMatchIn(maskedHead)
-      .find(m => subDepth(m.start) == 0 && !insideParens(m.start))
-      .map(_.start).getOrElse(maskedHead.length)
-    val selList = maskedHead.substring(0, fromIdx)
-    val agg = SampleAggFnRe.findAllMatchIn(selList).exists(m => subDepth(m.start) == 0) ||
-      raw"(?i)\bOVER\b".r.findAllMatchIn(selList).exists(m => subDepth(m.start) == 0)
+    val fromIdx = t.find0(raw"(?i)\bFROM\b".r, from, until).getOrElse(until)
+    val agg = outsideSubqueries(SampleAggFnRe, fromIdx) ||
+      outsideSubqueries(raw"(?i)\bOVER\b".r, fromIdx)
     if (grouped || distinct || agg)
       throw new graft.functions.expressions.DuckDialectException(
         "USING SAMPLE under aggregation/DISTINCT/GROUP BY samples the base " +
@@ -3534,29 +2871,6 @@ object GraftSqlParser {
     * [[resolvePercentReservoir]]: one base-relation count, then the
     * exact-n path).
     */
-  /** First depth-0 occurrence of `re` in masked[from, until) — paren
-    * depth measured relative to `from` (a block's own parens balance).
-    */
-  private def depth0Find(masked: String, re: scala.util.matching.Regex,
-                         from: Int, until: Int): Option[Int] = {
-    var d = 0
-    var i = from
-    val hits = re.findAllMatchIn(masked.substring(from, until))
-      .map(_.start + from).toList
-    if (hits.isEmpty) return None
-    val depths = new Array[Int](until - from)
-    while (i < until) {
-      depths(i - from) = d
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    hits.find(p => depths(p - from) == 0)
-  }
-
   /** Split a sample-carrying block at its top-level FROM/WHERE (r16):
     * Some((fromIdxAfterKeyword, whereIdx, fromPart, alias)) when the
     * block has a depth-0 WHERE before the sample — the shape where
@@ -3569,19 +2883,17 @@ object GraftSqlParser {
     * the FROM-subquery spelling. The derived alias keeps qualified refs
     * (`t.col`) resolving after the relation is wrapped.
     */
-  private def sampleSplit(sql: String, masked: String, blockStart: Int,
+  private def sampleSplit(t: SqlText, blockStart: Int,
                           sampleStart: Int): Option[(Int, Int, String, String)] = {
-    val fromIdx = depth0Find(masked, raw"(?i)\bFROM\b".r, blockStart, sampleStart)
-      .getOrElse(return None)
-    val whereIdx = depth0Find(masked, raw"(?i)\bWHERE\b".r, fromIdx + 4, sampleStart)
-      .getOrElse(return None)
-    val multi = depth0Find(masked, raw",|(?i)\bJOIN\b".r, fromIdx + 4, whereIdx).isDefined
+    val fromIdx = t.find0(raw"(?i)\bFROM\b".r, blockStart, sampleStart).getOrElse(return None)
+    val whereIdx = t.find0(raw"(?i)\bWHERE\b".r, fromIdx + 4, sampleStart).getOrElse(return None)
+    val multi = t.find0(raw",|(?i)\bJOIN\b".r, fromIdx + 4, whereIdx).isDefined
     if (multi) throw new graft.functions.expressions.DuckDialectException(
       "USING SAMPLE (exact-n form) after a WHERE over a multi-relation FROM — " +
         "DuckDB draws the sample from the pre-filter join result, which this " +
         "rewrite can't attach to a join; move the sample into a FROM subquery: " +
         "SELECT ... FROM (SELECT * FROM a JOIN b ON ... USING SAMPLE <spec>) WHERE ...")
-    val fromPart = sql.substring(fromIdx + 4, whereIdx).trim
+    val fromPart = t.sql.substring(fromIdx + 4, whereIdx).trim
     // alias: explicit trailing identifier, else the relation's own last
     // name component; subquery relations use their explicit alias
     val alias = {
@@ -3621,27 +2933,10 @@ object GraftSqlParser {
     * count cannot recurse; a name no prefix can resolve keeps the
     * guided temp-table error.
     */
-  private def cteDefsBefore(cur: String, masked: String,
-                            limit: Int): (String, Seq[String]) = {
-    val wm = raw"(?is)^\s*WITH\s+(RECURSIVE\s+)?".r.findFirstMatchIn(masked)
-      .getOrElse(return ("", Nil))
-    val rec = if (wm.group(1) != null) "RECURSIVE " else ""
-    val defs = Seq.newBuilder[(String, Int)]
-    var p = wm.end
-    var more = true
-    while (more) {
-      more = false
-      val defRe = raw"(?s)^\s*([A-Za-z_][A-Za-z0-9_]*)\s*(\([^()]*\)\s*)?(?i:AS)\s*(?:(?i:NOT\s+MATERIALIZED)\s*|(?i:MATERIALIZED)\s*)?\(".r
-      defRe.findFirstMatchIn(masked.substring(p)).foreach { dm =>
-        closeOf(masked, p + dm.end).foreach { close =>
-          defs += ((cur.substring(p, close).trim, close))
-          var q = close
-          while (q < masked.length && masked.charAt(q).isWhitespace) q += 1
-          if (q < masked.length && masked.charAt(q) == ',') { p = q + 1; more = true }
-        }
-      }
-    }
-    (rec, defs.result().filter(_._2 <= limit).map(_._1))
+  private def cteDefsBefore(t: SqlText, limit: Int): (String, Seq[String]) = {
+    val (rec, defs) = cteDefs(t)
+    (if (rec) "RECURSIVE " else "",
+      defs.collect { case (d, _, close) if close < limit => t.sql.substring(d, close + 1).trim })
   }
 
   def resolvePercentReservoir(spark: org.apache.spark.sql.SparkSession,
@@ -3651,29 +2946,19 @@ object GraftSqlParser {
     var guard = 0
     while (guard < 16) { // sibling samples resolve one per iteration
       guard += 1
-      val masked = maskQuotes(cur)
-      val hit = RsvPctRe.findFirstMatchIn(masked)
-        .orElse(RsvPctSizeRe.findFirstMatchIn(masked))
+      val t = SqlText(cur)
+      val hit = RsvPctRe.findFirstMatchIn(t.mask)
+        .orElse(RsvPctSizeRe.findFirstMatchIn(t.mask))
       hit match {
         case None => return cur
         case Some(mm) =>
           val pct = mm.group(1).toDouble
           val seedOpt = Option(mm.group(2))
-          val stack = scala.collection.mutable.Stack[Int]()
-          var i = 0
-          while (i < mm.start) {
-            masked.charAt(i) match {
-              case '(' => stack.push(i + 1)
-              case ')' => if (stack.nonEmpty) stack.pop()
-              case _ =>
-            }
-            i += 1
-          }
-          val blockStart = if (stack.isEmpty) 0 else stack.top
-          val fromIdx = depth0Find(masked, raw"(?i)\bFROM\b".r, blockStart, mm.start)
+          val blockStart = t.enclosing(mm.start) + 1
+          val fromIdx = t.find0(raw"(?i)\bFROM\b".r, blockStart, mm.start)
             .getOrElse(throw new graft.functions.expressions.DuckDialectException(
               "reservoir(n%) without a FROM relation has no cardinality to count"))
-          val baseEnd = depth0Find(masked, raw"(?i)\bWHERE\b".r, fromIdx + 4, mm.start)
+          val baseEnd = t.find0(raw"(?i)\bWHERE\b".r, fromIdx + 4, mm.start)
             .getOrElse(mm.start)
           val basePart = cur.substring(fromIdx + 4, baseEnd).trim
           // a bare identifier that names a PRECEDING same-statement CTE
@@ -3684,7 +2969,7 @@ object GraftSqlParser {
           // execution listener re-surfaces as a loud stack trace when
           // it touches the dead QueryExecution (r18; same counts, same
           // guided error for genuinely unresolvable names)
-          val (rec, defs) = cteDefsBefore(cur, masked, mm.start)
+          val (rec, defs) = cteDefsBefore(t, mm.start)
           val cteNames = defs.flatMap(d =>
             raw"(?s)^\s*([A-Za-z_]\w*)".r.findFirstMatchIn(d).map(_.group(1).toLowerCase)).toSet
           val baseIsCte = cteNames.contains(basePart.toLowerCase)
@@ -3722,7 +3007,8 @@ object GraftSqlParser {
   }
 
   def rewriteSample(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
+    val masked = t.mask
     FnSampleRe.findFirstMatchIn(masked).foreach { fm =>
       val seed = Option(fm.group(4)).map(s => s", $s").getOrElse("")
       return rewriteSample(sql.substring(0, fm.start) +
@@ -3746,18 +3032,7 @@ object GraftSqlParser {
       // rewrite must be a pure function of its input (the oracle-corpus
       // idempotency pin) and offsets are unique per sibling sample
       val h = s"__graft_rsv_${rm.start}"
-      // block start (same scan as the percentage path below)
-      val stack = scala.collection.mutable.Stack[Int]()
-      var i = 0
-      while (i < rm.start) {
-        masked.charAt(i) match {
-          case '(' => stack.push(i + 1)
-          case ')' => if (stack.nonEmpty) stack.pop()
-          case _ =>
-        }
-        i += 1
-      }
-      val blockStart = if (stack.isEmpty) 0 else stack.top
+      val blockStart = t.enclosing(rm.start) + 1
       // a depth-0 WHERE before the sample: DuckDB 1.0.0 draws the n
       // rows from the base FROM relation BEFORE the filter (probed —
       // `WHERE p USING SAMPLE reservoir(10 ROWS) REPEATABLE (42)`
@@ -3766,7 +3041,7 @@ object GraftSqlParser {
       // DISTINCT in the select list is then DuckDB-correct too (it
       // evaluates over the filtered sample), so the wrap guard is
       // bypassed on this path
-      sampleSplit(sql, masked, blockStart, rm.start).foreach {
+      sampleSplit(t, blockStart, rm.start).foreach {
         case (fromEnd, whereIdx, fromPart, alias) =>
           val rel = s"( SELECT * EXCEPT ($h) FROM (SELECT *, " +
             s"xxhash64(struct(*), $seed) AS $h FROM ( SELECT * FROM $fromPart ) " +
@@ -3775,7 +3050,7 @@ object GraftSqlParser {
             sql.substring(whereIdx, rm.start) + sql.substring(rm.end))
       }
       val head = sql.substring(blockStart, rm.start).trim
-      guardAggregatedSample(masked.substring(blockStart, rm.start).trim)
+      guardAggregatedSample(t, blockStart, rm.start)
       return rewriteSample(sql.substring(0, blockStart) +
         s"SELECT * EXCEPT ($h) FROM (SELECT *, xxhash64(struct(*), $seed) " +
         s"AS $h FROM ( $head ) ORDER BY $h LIMIT $n)" +
@@ -3817,18 +3092,7 @@ object GraftSqlParser {
           case _ => s"${m.group(1)} ROWS"
         }
         val repeatable = seed.map(sd => s"REPEATABLE ($sd) ").getOrElse("")
-        // block start (same scan as QUALIFY)
-        val stack = scala.collection.mutable.Stack[Int]()
-        var i = 0
-        while (i < m.start) {
-          masked.charAt(i) match {
-            case '(' => stack.push(i + 1)
-            case ')' => if (stack.nonEmpty) stack.pop()
-            case _ =>
-          }
-          i += 1
-        }
-        val blockStart = if (stack.isEmpty) 0 else stack.top
+        val blockStart = t.enclosing(m.start) + 1
         // exact-n (ROWS) with a depth-0 WHERE: DuckDB 1.0.0 samples the
         // base relation BEFORE the filter (probed; see sampleSplit) —
         // attach the TABLESAMPLE to the relation instead of wrapping
@@ -3838,14 +3102,14 @@ object GraftSqlParser {
         // the wrap stays for them — cross-engine row sets differ by RNG
         // either way, and the count distribution is identical.
         if (!isPercent)
-          sampleSplit(sql, masked, blockStart, m.start).foreach {
+          sampleSplit(t, blockStart, m.start).foreach {
             case (fromEnd, whereIdx, fromPart, alias) =>
               val rel = s"( SELECT * FROM $fromPart ) TABLESAMPLE ($spec) $repeatable $alias"
               return rewriteSample(sql.substring(0, fromEnd) + s" $rel " +
                 sql.substring(whereIdx, m.start) + sql.substring(m.end + consumed))
           }
         val head = sql.substring(blockStart, m.start).trim
-        guardAggregatedSample(masked.substring(blockStart, m.start).trim)
+        guardAggregatedSample(t, blockStart, m.start)
         rewriteSample(sql.substring(0, blockStart) +
           s"SELECT * FROM ( $head ) TABLESAMPLE ($spec) $repeatable" +
           sql.substring(m.end + consumed))
@@ -3892,15 +3156,15 @@ object GraftSqlParser {
     * read `t ASOF JOIN u` as table t aliased "ASOF" + inner join).
     */
   def rewriteAsof(sql: String): String = {
-    val masked = maskQuotes(sql)
-    AsofRe.findFirstMatchIn(masked) match {
+    val t = SqlText(sql)
+    AsofRe.findFirstMatchIn(t.mask) match {
       case None => sql
-      case Some(m) => rewriteAsof(rewriteOneAsof(sql, masked, m))
+      case Some(m) => rewriteAsof(rewriteOneAsof(t, m))
     }
   }
 
-  private def rewriteOneAsof(sql: String, masked: String,
-                             m: scala.util.matching.Regex.Match): String = {
+  private def rewriteOneAsof(t: SqlText, m: scala.util.matching.Regex.Match): String = {
+    val sql = t.sql
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"ASOF JOIN couldn't be auto-rewritten ($why) — use " +
@@ -3909,90 +3173,56 @@ object GraftSqlParser {
           "over the equality keys, then an equi-join bounded by it)")
     val isLeft = m.group(1) != null
     // ---- right-side relation: subquery or (dotted) table name
-    var i = m.end
-    def skipWs(): Unit =
-      while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
-    skipWs()
-    if (i >= masked.length) fail("no right-side relation")
-    val relStart = i
-    val isSubquery = masked.charAt(i) == '('
-    if (isSubquery) {
-      var d = 1; i += 1
-      while (i < masked.length && d > 0) {
-        masked.charAt(i) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (d != 0) fail("unbalanced parens in the right-side subquery")
-    } else {
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit ||
-        masked.charAt(i) == '_' || masked.charAt(i) == '.')) i += 1
+    val relStart = t.skipWs(m.end)
+    if (relStart >= t.length) fail("no right-side relation")
+    val isSubquery = t(relStart) == '('
+    var i = relStart
+    if (isSubquery)
+      i = t.closeOf(i).getOrElse(fail("unbalanced parens in the right-side subquery")) + 1
+    else {
+      while (t.isWordChar(i) || (i < t.length && t(i) == '.')) i += 1
       if (i == relStart) fail("unrecognized right-side relation")
     }
     val relText = sql.substring(relStart, i)
     // ---- optional [AS] alias, then ON
-    skipWs()
+    i = t.skipWs(i)
     var alias: String = null
-    if (i < masked.length && (masked.charAt(i).isLetter || masked.charAt(i) == '_')) {
-      val w = wordStartingAt(masked, i)
+    if (i < t.length && (t(i).isLetter || t(i) == '_')) {
+      val w = t.wordAt(i)
       if (w == "AS") {
-        i += 2; skipWs()
-        val a = wordStartingAt(masked, i)
+        i = t.skipWs(i + 2)
+        val a = t.wordAt(i)
         if (a.isEmpty || a == "ON") fail("missing alias after AS")
-        alias = sql.substring(i, i + a.length); i += a.length; skipWs()
+        alias = sql.substring(i, i + a.length); i = t.skipWs(i + a.length)
       } else if (w != "ON") {
-        alias = sql.substring(i, i + w.length); i += w.length; skipWs()
+        alias = sql.substring(i, i + w.length); i = t.skipWs(i + w.length)
       }
     }
     if (alias == null) {
       if (isSubquery) fail("a right-side subquery needs an alias")
       alias = relText.substring(relText.lastIndexOf('.') + 1)
     }
-    if (i >= masked.length || wordStartingAt(masked, i) != "ON")
+    if (i >= t.length || t.wordAt(i) != "ON")
       fail("ASOF JOIN requires an ON clause (USING has no column names to window over)")
-    i += 2
-    val condStart = i
+    val condStart = i + 2
     // ---- ON condition runs to the next same-depth clause keyword / ')'
     val condTerminators = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
       "OFFSET", "WINDOW", "QUALIFY", "UNION", "INTERSECT", "EXCEPT", "MINUS",
       "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "ASOF", "SEMI",
       "ANTI", "NATURAL", "LATERAL")
-    var condEnd = masked.length
-    var dd = 0
-    var scanning = true
-    while (i < masked.length && scanning) {
-      val c = masked.charAt(i)
-      if (c == '(') { dd += 1; i += 1 }
-      else if (c == ')') {
-        if (dd == 0) { condEnd = i; scanning = false } else { dd -= 1; i += 1 }
-      } else if (dd == 0 && c.isLetter &&
-        (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_'))) {
-        val w = wordStartingAt(masked, i)
-        if (condTerminators.contains(w)) { condEnd = i; scanning = false }
-        else i += math.max(w.length, 1)
-      } else i += 1
-    }
+    val condEnd = t.word0(condStart)(condTerminators)
     val condText = sql.substring(condStart, condEnd).trim
-    val condMasked = masked.substring(condStart, condEnd)
+    val condMasked = t.mask.substring(condStart, condEnd)
     // ---- split the condition at top-level AND; reject OR/NOT/BETWEEN/IN
     val splits = scala.collection.mutable.ArrayBuffer[Int]()
-    var j = 0
-    var d2 = 0
-    while (j < condMasked.length) {
-      val c = condMasked.charAt(j)
-      if (c == '(') { d2 += 1; j += 1 }
-      else if (c == ')') { d2 -= 1; j += 1 }
-      else if (d2 == 0 && c.isLetter &&
-        (j == 0 || (!condMasked.charAt(j - 1).isLetterOrDigit && condMasked.charAt(j - 1) != '_'))) {
-        val w = wordStartingAt(condMasked, j)
-        if (w == "AND") { splits += j; j += 3 }
-        else if (Set("OR", "NOT", "BETWEEN", "IN", "CASE").contains(w))
+    t.walk0(condStart, condEnd) { k =>
+      if (t.isWordStart(k)) t.wordAt(k) match {
+        case "AND" => splits += k - condStart
+        case w if Set("OR", "NOT", "BETWEEN", "IN", "CASE").contains(w) =>
           fail(s"$w at the top level of the ON condition")
-        else j += math.max(w.length, 1)
-      } else j += 1
+        case _ =>
+      }
+      false
     }
     val ranges = {
       val starts = 0 +: splits.map(_ + 3)
@@ -4000,14 +3230,15 @@ object GraftSqlParser {
       starts.zip(ends)
     }
     // ---- classify each conjunct by its single top-level comparison
-    def topCmp(s: String): Option[(String, Int)] = {
-      var k = 0; var d3 = 0; var found: Option[(String, Int)] = None; var n = 0
-      while (k < s.length) {
-        val c = s.charAt(k)
-        if (c == '(') d3 += 1
-        else if (c == ')') d3 -= 1
-        else if (d3 == 0 && (c == '<' || c == '>' || c == '=' || c == '!')) {
-          val two = s.substring(k, math.min(k + 2, s.length))
+    // (position relative to the conjunct start)
+    def topCmp(from: Int, until: Int): Option[(String, Int)] = {
+      var found: Option[(String, Int)] = None
+      var n = 0
+      var next = from // a two-char operator's second char is consumed
+      t.walk0(from, until) { k =>
+        val c = t(k)
+        if (k >= next && (c == '<' || c == '>' || c == '=' || c == '!')) {
+          val two = t.mask.substring(k, math.min(k + 2, until))
           val op = two match {
             case "<=" | ">=" | "<>" | "!=" | "==" => two
             case _ if c == '!' => "" // lone '!': not a comparison
@@ -4015,11 +3246,11 @@ object GraftSqlParser {
           }
           if (op.nonEmpty) {
             n += 1
-            if (found.isEmpty) found = Some((op, k))
-            k += op.length - 1
+            if (found.isEmpty) found = Some((op, k - from))
+            next = k + op.length
           }
         }
-        k += 1
+        false
       }
       if (n == 1) found else None
     }
@@ -4032,7 +3263,7 @@ object GraftSqlParser {
     for ((cs, ce) <- ranges) {
       val cm = condMasked.substring(cs, ce)
       val rawConj = sql.substring(condStart + cs, condStart + ce)
-      topCmp(cm) match {
+      topCmp(condStart + cs, condStart + ce) match {
         case None => fail(s"no single comparison in ON conjunct '${rawConj.trim}'")
         case Some((op, pos)) =>
           val lhs = rawConj.substring(0, pos).trim
@@ -4079,7 +3310,7 @@ object GraftSqlParser {
     }
     // unique helper name (several ASOF joins + star select wraps nest)
     val helper = "__graft_asof_end_" +
-      raw"__graft_asof_end_".r.findAllIn(masked).size
+      raw"__graft_asof_end_".r.findAllIn(t.mask).size
     val partition =
       if (partCols.isEmpty) "" else s"PARTITION BY ${partCols.mkString(", ")} "
     val innerFrom = if (isSubquery) s"$relText __graft_asof_src" else relText
@@ -4089,36 +3320,11 @@ object GraftSqlParser {
     val newCond = s"$condText AND ( $alias.$helper IS NULL OR " +
       s"( $leftExpr ) $boundOp $alias.$helper )"
     val replacement = s"$joinKw $newRel ON $newCond "
-    // ---- block bounds, for the star-leak wrap
-    val stack = scala.collection.mutable.Stack[Int]()
-    var p = 0
-    while (p < m.start) {
-      masked.charAt(p) match {
-        case '(' => stack.push(p + 1)
-        case ')' => if (stack.nonEmpty) stack.pop()
-        case _ =>
-      }
-      p += 1
-    }
-    val blockStart = if (stack.isEmpty) 0 else stack.top
-    val needsWrap = {
-      // FROM position at block depth 0 bounds the select list
-      var k = blockStart; var d4 = 0; var fromPos = m.start
-      var looking = true
-      while (k < m.start && looking) {
-        val c = masked.charAt(k)
-        if (c == '(') d4 += 1
-        else if (c == ')') d4 -= 1
-        else if (d4 == 0 && c.isLetter &&
-          (k == 0 || (!masked.charAt(k - 1).isLetterOrDigit && masked.charAt(k - 1) != '_'))) {
-          val w = wordStartingAt(masked, k)
-          if (w == "FROM") { fromPos = k; looking = false }
-          else k += math.max(w.length, 1) - 1
-        }
-        k += 1
-      }
-      selectListHasStar(masked, blockStart, fromPos)
-    }
+    // ---- block bounds, for the star-leak wrap; the FROM position at
+    // block depth 0 bounds the select list
+    val blockStart = t.enclosing(m.start) + 1
+    val needsWrap =
+      starQualifiers(t, blockStart, t.word0(blockStart, m.start)(_ == "FROM")).nonEmpty
     if (!needsWrap)
       sql.substring(0, m.start) + replacement + sql.substring(condEnd)
     else {
@@ -4126,23 +3332,7 @@ object GraftSqlParser {
       // may reference table aliases invisible outside the subquery; an
       // inner Sort under a bare Project survives and Project preserves
       // order) — only a set-op branch boundary or ')' ends the block
-      val tailTerminators = Set("UNION", "INTERSECT", "EXCEPT", "MINUS")
-      var q = condEnd
-      var d5 = 0
-      var blockEnd = masked.length
-      var scan2 = true
-      while (q < masked.length && scan2) {
-        val c = masked.charAt(q)
-        if (c == '(') { d5 += 1; q += 1 }
-        else if (c == ')') {
-          if (d5 == 0) { blockEnd = q; scan2 = false } else { d5 -= 1; q += 1 }
-        } else if (d5 == 0 && c.isLetter &&
-          (q == 0 || (!masked.charAt(q - 1).isLetterOrDigit && masked.charAt(q - 1) != '_'))) {
-          val w = wordStartingAt(masked, q)
-          if (tailTerminators.contains(w)) { blockEnd = q; scan2 = false }
-          else q += math.max(w.length, 1)
-        } else q += 1
-      }
+      val blockEnd = t.word0(condEnd)(Set("UNION", "INTERSECT", "EXCEPT", "MINUS"))
       val block = sql.substring(blockStart, m.start) + replacement +
         sql.substring(condEnd, blockEnd)
       sql.substring(0, blockStart) +
@@ -4152,27 +3342,6 @@ object GraftSqlParser {
 
   private val PivotStmtRe = raw"(?is)^\s*PIVOT\s".r
   private val UnpivotStmtRe = raw"(?is)^\s*UNPIVOT\s".r
-
-  /** Split `s` on depth-0 commas (parens tracked; `s` must already be
-    * quote-masked-aligned with the raw text it indexes into).
-    */
-  private def splitTopLevel(raw: String, masked: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var d = 0
-    var last = 0
-    var k = 0
-    while (k < masked.length) {
-      masked.charAt(k) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case ',' if d == 0 => out += raw.substring(last, k); last = k + 1
-        case _ =>
-      }
-      k += 1
-    }
-    out += raw.substring(last)
-    out.result()
-  }
 
   /** DuckDB's top-level `PIVOT` STATEMENT (`PIVOT rel ON col [IN (...)]
     * [USING agg(expr)] [GROUP BY ...] [ORDER BY ...] [LIMIT ...]`),
@@ -4194,57 +3363,40 @@ object GraftSqlParser {
   def rewritePivotStatement(spark: org.apache.spark.sql.SparkSession,
                             sql: String,
                             prepare: String => String = identity): String = {
-    val masked = maskQuotes(sql)
-    val m = PivotStmtRe.findFirstMatchIn(masked).getOrElse(return sql)
+    val t = SqlText(sql)
+    val m = PivotStmtRe.findFirstMatchIn(t.mask).getOrElse(return sql)
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"PIVOT statement couldn't be auto-rewritten ($why) — use Spark's " +
           "pivot clause with explicit values: SELECT * FROM t PIVOT " +
           "(agg(expr) FOR col IN ('v1', 'v2'))")
-    var i = m.end - 1
-    def skipWs(): Unit = while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
-    def balanced(open: Int): Int = { // index after the matching ')'
-      var d = 1
-      var k = open + 1
-      while (k < masked.length && d > 0) {
-        masked.charAt(k) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        k += 1
-      }
-      if (d != 0) fail("unbalanced parens")
-      k
-    }
-    skipWs()
-    val relStart = i
-    if (i < masked.length && masked.charAt(i) == '(') i = balanced(i)
+    val relStart = t.skipWs(m.end - 1)
+    var i = relStart
+    if (i < t.length && t(i) == '(') i = t.closeOf(i).getOrElse(fail("unbalanced parens")) + 1
     else {
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit ||
-        masked.charAt(i) == '.' || masked.charAt(i) == '_')) i += 1
+      while (t.isWordChar(i) || (i < t.length && t(i) == '.')) i += 1
       if (i == relStart) fail("missing relation")
     }
-    val relIsSub = masked.charAt(relStart) == '('
+    val relIsSub = t(relStart) == '('
     val relForSql =
       if (relIsSub) s"${sql.substring(relStart, i)} __graft_pvsrc"
       else sql.substring(relStart, i)
-    skipWs()
-    if (!wordStartingAt(masked, i).equalsIgnoreCase("ON")) fail("missing ON <column>")
-    i += 2; skipWs()
+    i = t.skipWs(i)
+    if (t.wordAt(i) != "ON") fail("missing ON <column>")
+    i = t.skipWs(i + 2)
     val colStart = i
-    while (i < masked.length && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) i += 1
+    while (t.isWordChar(i)) i += 1
     if (i == colStart) fail("ON must name a single plain column")
     val pcol = sql.substring(colStart, i)
-    skipWs()
-    if (i < masked.length && masked.charAt(i) == ',') fail("multiple ON columns")
-    var inBody: Option[(String, String)] = None // (raw, masked)
-    if (wordStartingAt(masked, i).equalsIgnoreCase("IN")) {
-      i += 2; skipWs()
-      if (i >= masked.length || masked.charAt(i) != '(') fail("IN without a value list")
-      val e = balanced(i)
-      inBody = Some((sql.substring(i + 1, e - 1), masked.substring(i + 1, e - 1)))
-      i = e; skipWs()
+    i = t.skipWs(i)
+    if (i < t.length && t(i) == ',') fail("multiple ON columns")
+    var inBody: Option[(Int, Int)] = None // the IN list's interior
+    if (t.wordAt(i) == "IN") {
+      i = t.skipWs(i + 2)
+      if (i >= t.length || t(i) != '(') fail("IN without a value list")
+      val e = t.closeOf(i).getOrElse(fail("unbalanced parens")) + 1
+      inBody = Some((i + 1, e - 1))
+      i = t.skipWs(e)
     }
     // USING list: `agg(expr) [AS alias], ...` (r16: aliases and multiple
     // aggregates execute — previously a guided error). DuckDB's cell
@@ -4255,72 +3407,59 @@ object GraftSqlParser {
     case class PivotAgg(fn: String, arg: String, name: String)
     var aggs = Seq(PivotAgg("count", "1", "count_star()"))
     var namedCells = false // any alias or >1 aggregate → value_name cells
-    if (wordStartingAt(masked, i).equalsIgnoreCase("USING")) {
+    if (t.wordAt(i) == "USING") {
       i += 5
       val parsed = scala.collection.mutable.ArrayBuffer[PivotAgg]()
       var more = true
       while (more) {
-        skipWs()
+        i = t.skipWs(i)
         val f0 = i
-        while (i < masked.length && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) i += 1
+        while (t.isWordChar(i)) i += 1
         if (i == f0) fail("USING needs an aggregate call")
         val fn = sql.substring(f0, i)
-        skipWs()
-        if (i >= masked.length || masked.charAt(i) != '(') fail("USING needs an aggregate call")
-        val e = balanced(i)
+        i = t.skipWs(i)
+        if (i >= t.length || t(i) != '(') fail("USING needs an aggregate call")
+        val e = t.closeOf(i).getOrElse(fail("unbalanced parens")) + 1
         var arg = sql.substring(i + 1, e - 1).trim
         val isStar = arg == "*"
         if (isStar) arg = "1"
-        i = e; skipWs()
+        i = t.skipWs(e)
         var alias: Option[String] = None
-        if (wordStartingAt(masked, i).equalsIgnoreCase("AS")) {
-          i += 2; skipWs()
+        if (t.wordAt(i) == "AS") {
+          i = t.skipWs(i + 2)
           val a0 = i
-          while (i < masked.length && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) i += 1
+          while (t.isWordChar(i)) i += 1
           if (i == a0) fail("USING ... AS needs a plain name")
           alias = Some(sql.substring(a0, i))
-          skipWs()
+          i = t.skipWs(i)
           namedCells = true
         }
         val defName =
           if (fn.equalsIgnoreCase("count") && isStar) "count_star()" else s"$fn($arg)"
         parsed += PivotAgg(fn, arg, alias.getOrElse(defName))
-        if (i < masked.length && masked.charAt(i) == ',') { i += 1; namedCells = true }
+        if (i < t.length && t(i) == ',') { i += 1; namedCells = true }
         else more = false
       }
       aggs = parsed.toSeq
     }
     var groupCols: Option[String] = None
-    if (wordStartingAt(masked, i).equalsIgnoreCase("GROUP")) {
-      i += 5; skipWs()
-      if (!wordStartingAt(masked, i).equalsIgnoreCase("BY")) fail("GROUP without BY")
-      i += 2
-      val g0 = i
-      var d = 0
-      var scanning = true
-      while (i < masked.length && scanning) {
-        val c = masked.charAt(i)
-        if (c == '(') { d += 1; i += 1 }
-        else if (c == ')') { d -= 1; i += 1 }
-        else if (d == 0 && c.isLetter &&
-          (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_')) {
-          val w = wordStartingAt(masked, i)
-          if (Set("ORDER", "LIMIT", "OFFSET").contains(w.toUpperCase)) scanning = false
-          else i += math.max(w.length, 1)
-        } else i += 1
-      }
+    if (t.wordAt(i) == "GROUP") {
+      i = t.skipWs(i + 5)
+      if (t.wordAt(i) != "BY") fail("GROUP without BY")
+      val g0 = i + 2
+      i = t.word0(g0)(Set("ORDER", "LIMIT", "OFFSET"))
       groupCols = Some(sql.substring(g0, i).trim)
     }
     val tail = sql.substring(i)
     // value list: IN-pinned, else discovered (sorted, capped)
     val vals: Seq[(String, String)] = inBody match { // (literal, columnName)
-      case Some((raw, rawMasked)) =>
-        splitTopLevel(raw, rawMasked).map(_.trim).filter(_.nonEmpty).map { t =>
+      case Some((from, until)) =>
+        t.split0(from, until).map(_.trim).filter(_.nonEmpty).map { v =>
           val nm =
-            if (t.length >= 2 && t.head == '\'' && t.last == '\'')
-              t.substring(1, t.length - 1).replace("''", "'")
-            else t
-          (t, nm)
+            if (v.length >= 2 && v.head == '\'' && v.last == '\'')
+              v.substring(1, v.length - 1).replace("''", "'")
+            else v
+          (v, nm)
         }
       case None =>
         // the pivot source may itself carry DuckDB dialect (EXCLUDE,
@@ -4468,77 +3607,51 @@ object GraftSqlParser {
     * statement text on both engines.
     */
   def rewriteUnpivotStatement(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = UnpivotStmtRe.findFirstMatchIn(masked).getOrElse(return sql)
+    val t = SqlText(sql)
+    val m = UnpivotStmtRe.findFirstMatchIn(t.mask).getOrElse(return sql)
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"UNPIVOT statement couldn't be auto-rewritten ($why) — use Spark's " +
           "unpivot clause: SELECT * FROM t UNPIVOT (v FOR n IN (c1, c2)), " +
           "or stack(): SELECT stack(2, 'c1', c1, 'c2', c2) AS (n, v) FROM t")
-    var i = m.end - 1
-    def skipWs(): Unit = while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
-    skipWs()
-    val relStart = i
-    if (i < masked.length && masked.charAt(i) == '(') {
-      var d = 1; i += 1
-      while (i < masked.length && d > 0) {
-        masked.charAt(i) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (d != 0) fail("unbalanced parens in the relation")
-    } else {
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit ||
-        masked.charAt(i) == '.' || masked.charAt(i) == '_')) i += 1
+    val relStart = t.skipWs(m.end - 1)
+    var i = relStart
+    if (i < t.length && t(i) == '(')
+      i = t.closeOf(i).getOrElse(fail("unbalanced parens in the relation")) + 1
+    else {
+      while (t.isWordChar(i) || (i < t.length && t(i) == '.')) i += 1
       if (i == relStart) fail("missing relation")
     }
-    val relIsSub = masked.charAt(relStart) == '('
+    val relIsSub = t(relStart) == '('
     val relForSql =
       if (relIsSub) s"${sql.substring(relStart, i)} __graft_upsrc"
       else sql.substring(relStart, i)
-    skipWs()
-    if (!wordStartingAt(masked, i).equalsIgnoreCase("ON")) fail("missing ON <columns>")
-    i += 2
+    i = t.skipWs(i)
+    if (t.wordAt(i) != "ON") fail("missing ON <columns>")
     // column list runs to INTO / ORDER / LIMIT / end at depth 0
-    val c0 = i
-    var d = 0
-    var scanning = true
-    while (i < masked.length && scanning) {
-      val c = masked.charAt(i)
-      if (c == '(') { d += 1; i += 1 }
-      else if (c == ')') { d -= 1; i += 1 }
-      else if (d == 0 && c.isLetter &&
-        (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_')) {
-        val w = wordStartingAt(masked, i)
-        if (Set("INTO", "ORDER", "LIMIT", "OFFSET").contains(w.toUpperCase)) scanning = false
-        else i += math.max(w.length, 1)
-      } else i += 1
-    }
+    val c0 = i + 2
+    i = t.word0(c0)(Set("INTO", "ORDER", "LIMIT", "OFFSET"))
     val colList = sql.substring(c0, i).trim
     if (colList.isEmpty) fail("ON lists no columns")
     var nameCol = "name"
     var valCol = "value"
-    if (wordStartingAt(masked, i).equalsIgnoreCase("INTO")) {
-      i += 4; skipWs()
-      if (!wordStartingAt(masked, i).equalsIgnoreCase("NAME")) fail("INTO without NAME")
-      i += 4; skipWs()
+    if (t.wordAt(i) == "INTO") {
+      i = t.skipWs(i + 4)
+      if (t.wordAt(i) != "NAME") fail("INTO without NAME")
+      i = t.skipWs(i + 4)
       val n0 = i
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) i += 1
+      while (t.isWordChar(i)) i += 1
       if (i == n0) fail("NAME without an identifier")
       nameCol = sql.substring(n0, i)
-      skipWs()
-      if (!wordStartingAt(masked, i).equalsIgnoreCase("VALUE")) fail("NAME without VALUE")
-      i += 5; skipWs()
+      i = t.skipWs(i)
+      if (t.wordAt(i) != "VALUE") fail("NAME without VALUE")
+      i = t.skipWs(i + 5)
       val v0 = i
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) i += 1
+      while (t.isWordChar(i)) i += 1
       if (i == v0) fail("VALUE without an identifier")
       valCol = sql.substring(v0, i)
-      skipWs()
-      val nextW = wordStartingAt(masked, math.min(i, masked.length - 1)).toUpperCase
-      if (i < masked.length && !Set("ORDER", "LIMIT", "OFFSET", "").contains(nextW))
+      i = t.skipWs(i)
+      if (i < t.length && !Set("ORDER", "LIMIT", "OFFSET", "").contains(t.wordAt(i)))
         fail("multiple VALUE columns (paired unpivot)")
     }
     val tail = sql.substring(i)
@@ -4565,15 +3678,15 @@ object GraftSqlParser {
     * pairing through real join keys.
     */
   def rewritePositional(sql: String): String = {
-    val masked = maskQuotes(sql)
-    PositionalRe.findFirstMatchIn(masked) match {
+    val t = SqlText(sql)
+    PositionalRe.findFirstMatchIn(t.mask) match {
       case None => sql
-      case Some(m) => rewritePositional(rewriteOnePositional(sql, masked, m))
+      case Some(m) => rewritePositional(rewriteOnePositional(t, m))
     }
   }
 
-  private def rewriteOnePositional(sql: String, masked: String,
-                                   m: scala.util.matching.Regex.Match): String = {
+  private def rewriteOnePositional(t: SqlText, m: scala.util.matching.Regex.Match): String = {
+    val sql = t.sql
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"POSITIONAL JOIN couldn't be auto-rewritten ($why) — a distributed " +
@@ -4582,120 +3695,56 @@ object GraftSqlParser {
           "POSITIONAL JOIN (SELECT ... ORDER BY k2) b; or add row_number() " +
           "indexes over a deterministic key on both sides and equi-join them")
     // ---- left side (backward): ( subquery ) [AS] [alias]
-    var i = m.start - 1
-    def skipWsBack(): Unit = while (i >= 0 && masked.charAt(i).isWhitespace) i -= 1
-    skipWsBack()
+    var i = t.skipWsBack(m.start) - 1
     if (i < 0) fail("no left-side relation")
     var leftAlias: String = null
-    if (masked.charAt(i) != ')' &&
-      (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) {
+    if (t(i) != ')' && t.isWordChar(i)) {
       // backward identifier scan (wordEndingAt rejects trailing digits —
       // it targets keywords — but `t1` is a fine alias)
       var b = i
-      while (b >= 0 && (masked.charAt(b).isLetterOrDigit || masked.charAt(b) == '_')) b -= 1
+      while (t.isWordChar(b)) b -= 1
       val w = sql.substring(b + 1, i + 1)
       if (w.isEmpty || !((w.head.isLetter || w.head == '_')) ||
         w.equalsIgnoreCase("AS")) fail("unrecognized left side")
       leftAlias = w
-      i = b
-      skipWsBack()
+      i = t.skipWsBack(b + 1) - 1
       // optional AS before the alias
-      if (i >= 0 && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_') &&
-        wordEndingAt(masked, i).equalsIgnoreCase("AS")) {
-        i -= 2; skipWsBack()
-      }
+      if (t.isWordChar(i) && t.wordEndingAt(i) == "AS") i = t.skipWsBack(i - 1) - 1
     }
-    if (i < 0 || masked.charAt(i) != ')')
+    if (i < 0 || t(i) != ')')
       fail("the left side is not a parenthesized subquery")
     val lEnd = i
-    var d = 1
-    i -= 1
-    while (i >= 0 && d > 0) {
-      masked.charAt(i) match {
-        case ')' => d += 1
-        case '(' => d -= 1
-        case _ =>
-      }
-      if (d > 0) i -= 1
-    }
-    if (d != 0) fail("unbalanced parens on the left side")
-    val lStart = i
+    val lStart = t.openOf(lEnd).getOrElse(fail("unbalanced parens on the left side"))
     // ---- right side (forward): ( subquery ) [AS] [alias]
-    var j = m.end
-    def skipWs(): Unit = while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-    skipWs()
-    if (j >= masked.length || masked.charAt(j) != '(')
+    val rStart = t.skipWs(m.end)
+    if (rStart >= t.length || t(rStart) != '(')
       fail("the right side is not a parenthesized subquery")
-    val rStart = j
-    var d2 = 1
-    j += 1
-    while (j < masked.length && d2 > 0) {
-      masked.charAt(j) match {
-        case '(' => d2 += 1
-        case ')' => d2 -= 1
-        case _ =>
-      }
-      j += 1
-    }
-    if (d2 != 0) fail("unbalanced parens on the right side")
-    val rEnd = j - 1
-    skipWs()
+    val rEnd = t.closeOf(rStart).getOrElse(fail("unbalanced parens on the right side"))
+    var j = t.skipWs(rEnd + 1)
     var rightAlias: String = null
     var tailEnd = j
-    if (j < masked.length && (masked.charAt(j).isLetter || masked.charAt(j) == '_')) {
-      var w = wordStartingAt(masked, j)
-      if (w.equalsIgnoreCase("AS")) {
-        j += 2; skipWs(); w = wordStartingAt(masked, j)
+    if (j < t.length && (t(j).isLetter || t(j) == '_')) {
+      var w = t.wordAt(j)
+      if (w == "AS") {
+        j = t.skipWs(j + 2); w = t.wordAt(j)
         if (w.isEmpty) fail("missing alias after AS")
       }
       // a clause keyword is NOT an alias
       if (!Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET", "WINDOW",
         "UNION", "INTERSECT", "EXCEPT", "MINUS", "JOIN", "INNER", "LEFT",
-        "RIGHT", "FULL", "CROSS", "ON", "USING", "POSITIONAL").contains(w.toUpperCase)) {
+        "RIGHT", "FULL", "CROSS", "ON", "USING", "POSITIONAL").contains(w)) {
         rightAlias = sql.substring(j, j + w.length)
         tailEnd = j + w.length
       }
     }
     // ---- each side's top-level trailing ORDER BY supplies the keys
     def orderKeys(start: Int, end: Int, side: String): String = {
-      val inner = masked.substring(start + 1, end)
-      var k = 0
-      var dd = 0
-      var obPos = -1
-      while (k < inner.length) {
-        val c = inner.charAt(k)
-        if (c == '(') { dd += 1; k += 1 }
-        else if (c == ')') { dd -= 1; k += 1 }
-        else if (dd == 0 && c.isLetter &&
-          (k == 0 || (!inner.charAt(k - 1).isLetterOrDigit && inner.charAt(k - 1) != '_'))) {
-          val w = wordStartingAt(inner, k)
-          if (w.equalsIgnoreCase("ORDER")) obPos = k
-          k += math.max(w.length, 1)
-        } else k += 1
-      }
-      if (obPos < 0) fail(s"the $side side has no top-level ORDER BY")
-      var p = obPos + 5
-      while (p < inner.length && inner.charAt(p).isWhitespace) p += 1
-      if (!wordStartingAt(inner, p).equalsIgnoreCase("BY")) fail(s"the $side side has no top-level ORDER BY")
-      p += 2
+      val obPos = t.findAll0(raw"(?i)\bORDER\b".r, start + 1, end).lastOption
+        .map(_.start + start + 1).getOrElse(fail(s"the $side side has no top-level ORDER BY"))
+      val p = t.skipWs(obPos + 5)
+      if (t.wordAt(p) != "BY") fail(s"the $side side has no top-level ORDER BY")
       // keys run to a depth-0 LIMIT/OFFSET or the subquery end
-      var q = p
-      var d3 = 0
-      var keysEnd = inner.length
-      var scan = true
-      while (q < inner.length && scan) {
-        val c = inner.charAt(q)
-        if (c == '(') { d3 += 1; q += 1 }
-        else if (c == ')') { d3 -= 1; q += 1 }
-        else if (d3 == 0 && c.isLetter &&
-          (!inner.charAt(q - 1).isLetterOrDigit && inner.charAt(q - 1) != '_')) {
-          val w = wordStartingAt(inner, q)
-          if (w.equalsIgnoreCase("LIMIT") || w.equalsIgnoreCase("OFFSET")) {
-            keysEnd = q; scan = false
-          } else q += math.max(w.length, 1)
-        } else q += 1
-      }
-      val keys = sql.substring(start + 1 + p, start + 1 + keysEnd).trim
+      val keys = sql.substring(p + 2, t.word0(p + 2, end)(w => w == "LIMIT" || w == "OFFSET")).trim
       if (keys.isEmpty) fail(s"the $side side's ORDER BY lists no keys")
       // ordinals (ORDER BY 1) would be CONSTANTS inside a window frame
       if (keys.split(",").exists(_.trim.matches(raw"\d+(\s+(?i:ASC|DESC))?")))
@@ -4704,7 +3753,7 @@ object GraftSqlParser {
     }
     val lKeys = orderKeys(lStart, lEnd, "left")
     val rKeys = orderKeys(rStart, rEnd, "right")
-    val n = raw"__graft_pos_l".r.findAllIn(masked).size
+    val n = raw"__graft_pos_l".r.findAllIn(t.mask).size
     val lh = s"__graft_pos_l$n"
     val rh = s"__graft_pos_r$n"
     val la = if (leftAlias != null) leftAlias else s"__graft_posa$n"
@@ -4715,61 +3764,21 @@ object GraftSqlParser {
       s"FROM ${sql.substring(rStart, rEnd + 1)} __graft_prs$n ) $ra"
     val replacement = s"$newLeft FULL OUTER JOIN $newRight ON $la.$lh = $ra.$rh "
     // ---- star-leak wrap, as in the ASOF rewrite
-    val stack = scala.collection.mutable.Stack[Int]()
-    var p = 0
-    while (p < lStart) {
-      masked.charAt(p) match {
-        case '(' => stack.push(p + 1)
-        case ')' => if (stack.nonEmpty) stack.pop()
-        case _ =>
-      }
-      p += 1
-    }
-    val blockStart = if (stack.isEmpty) 0 else stack.top
+    val blockStart = t.enclosing(lStart) + 1
     // which helper indexes leak into the output? a bare `*` leaks both;
     // a one-sided `alias.*` leaks only that side's (wrapping EXCEPT with
     // a helper the projection doesn't carry would be an analysis error)
-    val leakedHelpers: Seq[String] = {
-      var k = blockStart; var d4 = 0; var fromPos = lStart; var looking = true
-      while (k < lStart && looking) {
-        val c = masked.charAt(k)
-        if (c == '(') d4 += 1
-        else if (c == ')') d4 -= 1
-        else if (d4 == 0 && c.isLetter &&
-          (k == 0 || (!masked.charAt(k - 1).isLetterOrDigit && masked.charAt(k - 1) != '_'))) {
-          val w = wordStartingAt(masked, k)
-          if (w == "FROM") { fromPos = k; looking = false }
-          else k += math.max(w.length, 1) - 1
-        }
-        k += 1
-      }
-      starQualifiers(masked, sql, blockStart, fromPos).flatMap {
+    val leakedHelpers: Seq[String] =
+      starQualifiers(t, blockStart, t.word0(blockStart, lStart)(_ == "FROM")).flatMap {
         case None => Seq(lh, rh)
         case Some(q) if q.equalsIgnoreCase(la) => Seq(lh)
         case Some(q) if q.equalsIgnoreCase(ra) => Seq(rh)
         case _ => Nil
       }.distinct
-    }
     if (leakedHelpers.isEmpty)
       sql.substring(0, lStart) + replacement + sql.substring(tailEnd)
     else {
-      val tailTerminators = Set("UNION", "INTERSECT", "EXCEPT", "MINUS")
-      var q = tailEnd
-      var d5 = 0
-      var blockEnd = masked.length
-      var scan2 = true
-      while (q < masked.length && scan2) {
-        val c = masked.charAt(q)
-        if (c == '(') { d5 += 1; q += 1 }
-        else if (c == ')') {
-          if (d5 == 0) { blockEnd = q; scan2 = false } else { d5 -= 1; q += 1 }
-        } else if (d5 == 0 && c.isLetter &&
-          (q == 0 || (!masked.charAt(q - 1).isLetterOrDigit && masked.charAt(q - 1) != '_'))) {
-          val w = wordStartingAt(masked, q)
-          if (tailTerminators.contains(w)) { blockEnd = q; scan2 = false }
-          else q += math.max(w.length, 1)
-        } else q += 1
-      }
+      val blockEnd = t.word0(tailEnd)(Set("UNION", "INTERSECT", "EXCEPT", "MINUS"))
       val block = sql.substring(blockStart, lStart) + replacement +
         sql.substring(tailEnd, blockEnd)
       sql.substring(0, blockStart) +
@@ -4778,69 +3787,28 @@ object GraftSqlParser {
     }
   }
 
-  /** Star qualifiers at depth 0 of the select list: `None` for a bare
-    * `*`, `Some(t)` for `t.*`. (The boolean [[selectListHasStar]] stays
-    * for rewrites whose wrap is side-agnostic.)
+  /** Projection stars at depth 0 of the select list [blockStart,
+    * fromPos): `None` for a bare `*`, `Some(t)` for `t.*`. Told apart
+    * from multiplication by the preceding token: a comma, a dot, the
+    * SELECT/DISTINCT/ALL keyword, or nothing means star.
     */
-  private def starQualifiers(masked: String, sql: String, blockStart: Int,
+  private def starQualifiers(t: SqlText, blockStart: Int,
                              fromPos: Int): Seq[Option[String]] = {
     val out = Seq.newBuilder[Option[String]]
-    var k = blockStart
-    var d = 0
-    while (k < fromPos) {
-      val c = masked.charAt(k)
-      if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (d == 0 && c == '*') {
-        val prevIdx = (k - 1 to blockStart by -1).find(x => !masked.charAt(x).isWhitespace)
-        prevIdx match {
-          case None => out += None
-          case Some(x) =>
-            val pc = masked.charAt(x)
-            if (pc == ',') out += None
-            else if (pc == '.') {
-              var b = x - 1
-              while (b >= blockStart && (masked.charAt(b).isLetterOrDigit ||
-                masked.charAt(b) == '_')) b -= 1
-              val q = sql.substring(b + 1, x)
-              if (q.nonEmpty) out += Some(q)
-            } else if ((pc.isLetterOrDigit || pc == '_') &&
-              Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, x)))
-              out += None
-        }
+    t.walk0(blockStart, fromPos) { k =>
+      if (t(k) == '*') {
+        val x = t.skipWsBack(k) - 1
+        if (x < blockStart || t(x) == ',') out += None
+        else if (t(x) == '.') {
+          var b = x - 1
+          while (b >= blockStart && t.isWordChar(b)) b -= 1
+          out += Some(t.sql.substring(b + 1, x))
+        } else if (t.isWordChar(x) &&
+          Set("SELECT", "DISTINCT", "ALL").contains(t.wordEndingAt(x))) out += None
       }
-      k += 1
+      false
     }
     out.result()
-  }
-
-  /** Is there a projection star (`*`, `t.*`) at depth 0 of the select
-    * list? Distinguished from multiplication by the preceding token:
-    * a comma, a dot, or the SELECT/DISTINCT/ALL keyword means star.
-    */
-  private def selectListHasStar(masked: String, blockStart: Int, fromPos: Int): Boolean = {
-    var k = blockStart
-    var d = 0
-    while (k < fromPos) {
-      val c = masked.charAt(k)
-      if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (d == 0 && c == '*') {
-        val prevIdx = (k - 1 to blockStart by -1).find(x => !masked.charAt(x).isWhitespace)
-        val isProj = prevIdx match {
-          case None => true
-          case Some(x) =>
-            val pc = masked.charAt(x)
-            if (pc == ',' || pc == '.') true
-            else if (pc.isLetterOrDigit || pc == '_')
-              Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, x))
-            else false
-        }
-        if (isProj) return true
-      }
-      k += 1
-    }
-    false
   }
 
   private val ColumnsRe = raw"(?i)\bCOLUMNS\s*\(".r
@@ -4872,32 +3840,19 @@ object GraftSqlParser {
     */
   def rewriteColumns(sql: String, cols: Seq[String],
       resolve: String => Option[Seq[String]] = _ => None): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
+    val masked = t.mask
     ColumnsRe.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
-        val i = closeOf(masked, m.end) match {
-          case Some(e) => e
-          case None => return sql // unbalanced — let the parser report it
-        }
-        val argRaw = sql.substring(m.end, i - 1).trim
+        // unbalanced — let the parser report it
+        val close = t.closeOf(m.end - 1).getOrElse(return sql)
+        val argRaw = sql.substring(m.end, close).trim
         // expand against the ACTUAL source relation's schema when the
         // block reads one resolvable table (r16, the rewriteReplace
         // treatment) — the stage `df` contract stays the fallback
-        val srcCols = {
-          val stk = scala.collection.mutable.Stack[Int]()
-          var bj = 0
-          while (bj < m.start) {
-            masked.charAt(bj) match {
-              case '(' => stk.push(bj + 1)
-              case ')' => if (stk.nonEmpty) stk.pop()
-              case _ =>
-            }
-            bj += 1
-          }
-          val blockStart = if (stk.isEmpty) 0 else stk.top
-          blockFromRelation(sql, masked, blockStart).flatMap(resolve).getOrElse(cols)
-        }
+        val srcCols = blockFromRelation(t, t.enclosing(m.start) + 1)
+          .flatMap(resolve).getOrElse(cols)
         val matched = matchedColumns(argRaw, srcCols) match {
           case Some(ms) => ms
           case None => return sql // unsupported arg form → guided error
@@ -4905,7 +3860,7 @@ object GraftSqlParser {
         if (matched.isEmpty)
           throw new graft.functions.expressions.DuckDialectException(
             s"COLUMNS($argRaw) matches no column of [${srcCols.mkString(", ")}]")
-        val (itemStart, itemEnd) = itemSpanContaining(masked, m.start) match {
+        val (itemStart, itemEnd) = itemSpanContaining(t, m.start) match {
           case Some(s) if raw"(?i)\bSELECT\b".r
               .findFirstMatchIn(masked.substring(s._1, m.start)).isDefined =>
             // an intervening SELECT between the item start and the
@@ -4923,13 +3878,10 @@ object GraftSqlParser {
             // (`WHERE COLUMNS('a.*') > 0 OR b = 'y'` keeps rows where
             // every column satisfies the full disjunction — verified
             // against duckdb 1.0.0)
-            whereSpanContaining(masked, m.start) match {
+            whereSpanContaining(t, m.start) match {
               case None => return sql // other clause → guided error
               case Some((ws, we)) =>
-                val occs = ColumnsRe.findAllMatchIn(masked)
-                  .filter(o => o.start >= ws && o.start < we).toList
-                  .flatMap(o => closeOf(masked, o.end)
-                    .map(e => (o.start, e, sql.substring(o.end, e - 1).trim)))
+                val occs = columnsCalls(t, ws, we)
                 if (occs.exists(_._3 != argRaw))
                   throw new graft.functions.expressions.DuckDialectException(
                     "two COLUMNS(...) with different patterns in one predicate " +
@@ -4947,10 +3899,7 @@ object GraftSqlParser {
             }
         }
         // every COLUMNS inside the item must carry the SAME pattern
-        val occs = ColumnsRe.findAllMatchIn(masked)
-          .filter(o => o.start >= itemStart && o.start < itemEnd).toList
-          .flatMap(o => closeOf(masked, o.end)
-            .map(e => (o.start, e, sql.substring(o.end, e - 1).trim)))
+        val occs = columnsCalls(t, itemStart, itemEnd)
         if (occs.exists(_._3 != argRaw))
           throw new graft.functions.expressions.DuckDialectException(
             "two COLUMNS(...) with different patterns in one select-list item " +
@@ -4962,10 +3911,7 @@ object GraftSqlParser {
         // expression (not a literal/keyword/interval unit; CAST(x AS t)
         // never matches: its AS sits inside parens).
         val itemMasked = masked.substring(itemStart, itemEnd)
-        def topLevel(end: Int): Boolean = {
-          val prefix = itemMasked.substring(0, end)
-          prefix.count(_ == '(') == prefix.count(_ == ')')
-        }
+        def topLevel(end: Int): Boolean = t.enclosing(itemStart + end) < itemStart
         val asM = raw"""(?is)\s+AS\s+(?:([A-Za-z_]\w*)|"([^"]+)"|`([^`]+)`)\s*$$""".r
           .findFirstMatchIn(itemMasked).filter(a => topLevel(a.start))
         val implicitM =
@@ -4992,7 +3938,7 @@ object GraftSqlParser {
               val prevOk = {
                 val c = itemMasked.charAt(prevEnd)
                 if (c.isLetterOrDigit || c == '_') {
-                  val pw = wordEndingAt(itemMasked, prevEnd)
+                  val pw = t.wordEndingAt(itemStart + prevEnd)
                   !Set("AND", "OR", "NOT", "IN", "IS", "LIKE", "ILIKE",
                     "RLIKE", "DIV", "MOD", "BETWEEN", "THEN", "WHEN",
                     "ELSE", "ESCAPE", "DISTINCT", "ALL", "OVER",
@@ -5038,22 +3984,12 @@ object GraftSqlParser {
     }
   }
 
-  /** Index just past the ')' matching the '(' that `afterOpen` follows;
-    * None when unbalanced.
+  /** The COLUMNS(...) calls starting in [from, until): (start, index
+    * past the close paren, argument text).
     */
-  private def closeOf(masked: String, afterOpen: Int): Option[Int] = {
-    var i = afterOpen
-    var d = 1
-    while (i < masked.length && d > 0) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (d == 0) Some(i) else None
-  }
+  private def columnsCalls(t: SqlText, from: Int, until: Int): List[(Int, Int, String)] =
+    ColumnsRe.findAllMatchIn(t.mask).filter(o => o.start >= from && o.start < until).toList
+      .flatMap(o => t.closeOf(o.end - 1).map(c => (o.start, c + 1, t.sql.substring(o.end, c).trim)))
 
   /** Column set matched by a COLUMNS(...) argument; None when the form
     * isn't supported (→ guided error).
@@ -5473,29 +4409,12 @@ object GraftSqlParser {
   /** The [start, end) span of the WHERE clause body containing position
     * `p` (innermost WHERE wins); None when `p` is in no WHERE clause.
     */
-  private def whereSpanContaining(masked: String, p: Int): Option[(Int, Int)] = {
-    val WhereRe = raw"(?i)\bWHERE\b".r
+  private def whereSpanContaining(t: SqlText, p: Int): Option[(Int, Int)] = {
     val enders = Set("GROUP", "ORDER", "HAVING", "LIMIT", "QUALIFY",
       "WINDOW", "UNION", "INTERSECT", "EXCEPT")
-    var best: Option[(Int, Int)] = None
-    for (wm <- WhereRe.findAllMatchIn(masked) if wm.end <= p) {
-      var j = wm.end
-      var depth = 0
-      var scanning = true
-      while (scanning && j < masked.length) {
-        val c = masked.charAt(j)
-        if (c == '(') { depth += 1; j += 1 }
-        else if (c == ')') {
-          if (depth == 0) scanning = false else { depth -= 1; j += 1 }
-        } else if (depth == 0 && (c.isLetter || c == '_')) {
-          val w = wordStartingAt(masked, j)
-          if (enders.contains(w)) scanning = false
-          else j += math.max(1, w.length)
-        } else j += 1
-      }
-      if (wm.end <= p && p < j) best = Some((wm.end, j))
-    }
-    best
+    raw"(?i)\bWHERE\b".r.findAllMatchIn(t.mask).filter(_.end <= p)
+      .map(wm => (wm.end, t.word0(wm.end)(enders)))
+      .filter { case (s0, e) => s0 <= p && p < e }.toSeq.lastOption
   }
 
   /** The [start, end) span of the select-list item containing position
@@ -5503,38 +4422,27 @@ object GraftSqlParser {
     * `p` sits in no select list (WHERE handled separately; ON/... →
     * guided error).
     */
-  private def itemSpanContaining(masked: String, p: Int): Option[(Int, Int)] = {
-    val SelectRe = raw"(?i)\bSELECT\b".r
+  private def itemSpanContaining(t: SqlText, p: Int): Option[(Int, Int)] = {
     var best: Option[(Int, Int)] = None
-    for (sm <- SelectRe.findAllMatchIn(masked) if sm.end <= p) {
-      var j = sm.end
-      var depth = 0
-      var itemStart = j
-      var scanning = true
-      while (scanning && j < masked.length) {
-        val c = masked.charAt(j)
-        if (c == '(') { depth += 1; j += 1 }
-        else if (c == ')') {
-          if (depth == 0) { // the paren enclosing this SELECT closes
-            if (itemStart <= p && p < j) best = Some((itemStart, j))
-            scanning = false
-          } else { depth -= 1; j += 1 }
-        } else if (c == ',' && depth == 0) {
-          if (itemStart <= p && p < j) { best = Some((itemStart, j)); scanning = false }
-          else { j += 1; itemStart = j }
-        } else if (depth == 0 && (c.isLetter || c == '_')) {
-          val w = wordStartingAt(masked, j)
-          if (w == "FROM") {
-            if (itemStart <= p && p < j) best = Some((itemStart, j))
-            scanning = false
-          } else if ((w == "DISTINCT" || w == "ALL") &&
-              masked.substring(itemStart, j).trim.isEmpty) {
-            j += w.length; itemStart = j
-          } else j += math.max(1, w.length)
-        } else j += 1
+    for (sm <- raw"(?i)\bSELECT\b".r.findAllMatchIn(t.mask) if sm.end <= p) {
+      var itemStart = sm.end
+      // the list ends at its depth-0 FROM, at the comma closing the
+      // item that holds `p`, or where the paren enclosing SELECT closes
+      val end = t.walk0(sm.end) { j =>
+        if (t(j) == ',') {
+          val hit = itemStart <= p && p < j
+          if (!hit) itemStart = j + 1
+          hit
+        } else if (!t.isWordStart(j)) false
+        else t.wordAt(j) match {
+          case "FROM" => true
+          case w @ ("DISTINCT" | "ALL") if t.mask.substring(itemStart, j).trim.isEmpty =>
+            itemStart = j + w.length; false
+          case _ => false
+        }
       }
-      if (scanning && itemStart <= p && p <= j) // list ran to string end
-        best = Some((itemStart, j))
+      if (itemStart <= p && (p < end || (end == t.length && p == end)))
+        best = Some((itemStart, end))
     }
     best
   }
@@ -5549,52 +4457,12 @@ object GraftSqlParser {
     try parse
     catch {
       case e: org.apache.spark.sql.catalyst.parser.ParseException =>
-        graft.functions.expressions.DuckDialect.hintFor(maskQuotes(sql)) match {
+        graft.functions.expressions.DuckDialect.hintFor(SqlText(sql).mask) match {
           case Some(hint) => throw new graft.functions.expressions.DuckDialectException(
             s"DuckDB-dialect construct in sql stage: $hint", e)
           case None => throw e
         }
     }
-
-  /** Replace the contents of single-quoted literals with '_' and SQL
-    * comments (`--` to end-of-line, `/* */`) with spaces, in place
-    * (positions preserved; '' escapes and newlines kept). Comment
-    * MARKERS are blanked too, so a ';' — or any dialect marker — inside
-    * a comment is invisible to every masked-text rewrite, and
-    * [[splitStatements]] can't split a batch mid-comment (r9 review).
-    * One state machine so quotes and comments shadow each other the way
-    * the parser sees them: `--` inside a literal is text, `'` inside a
-    * comment is not a quote.
-    */
-  private[graft] def maskQuotes(s: String): String = {
-    val a = s.toCharArray
-    var i = 0
-    var inQ = false
-    var inLine = false
-    var inBlock = false
-    while (i < a.length) {
-      val c = a(i)
-      if (inQ) {
-        if (c == '\'') {
-          if (i + 1 < a.length && a(i + 1) == '\'') { a(i) = '_'; a(i + 1) = '_'; i += 1 }
-          else inQ = false
-        } else a(i) = '_'
-      } else if (inLine) {
-        if (c == '\n' || c == '\r') inLine = false else a(i) = ' '
-      } else if (inBlock) {
-        if (c == '*' && i + 1 < a.length && a(i + 1) == '/') {
-          a(i) = ' '; a(i + 1) = ' '; i += 1; inBlock = false
-        } else if (c != '\n' && c != '\r') a(i) = ' '
-      } else if (c == '\'') inQ = true
-      else if (c == '-' && i + 1 < a.length && a(i + 1) == '-') {
-        a(i) = ' '; a(i + 1) = ' '; i += 1; inLine = true
-      } else if (c == '/' && i + 1 < a.length && a(i + 1) == '*') {
-        a(i) = ' '; a(i + 1) = ' '; i += 1; inBlock = true
-      }
-      i += 1
-    }
-    new String(a)
-  }
 
   private val StarReplaceRe =
     raw"(?is)\*\s*(?:(?:EXCLUDE|EXCEPT)\s*\(([^)]*)\)\s*)?REPLACE\s*\(".r
@@ -5621,37 +4489,22 @@ object GraftSqlParser {
     * `SELECT * REPLACE (…) FROM lineitem` previously refused because
     * the replaced name wasn't a stage-input column).
     */
-  private def blockFromRelation(sql: String, masked: String, pos: Int): Option[String] = {
-    var i = pos
-    var d = 0
-    var fromAt = -1
-    var blockEnd = masked.length
-    while (i < masked.length && blockEnd == masked.length) {
-      val c = masked.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') { d -= 1; if (d < 0) blockEnd = i }
-      else if (d == 0 && fromAt < 0 && c.isLetter &&
-        (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_'))) {
-        val w = wordStartingAt(masked, i)
-        if (w == "FROM") fromAt = i
-        else i += math.max(w.length, 1) - 1
-      }
-      i += 1
-    }
-    if (fromAt < 0) return None
-    val fromEnd = depth0Find(masked,
+  private def blockFromRelation(t: SqlText, pos: Int): Option[String] = {
+    val fromAt = t.word0(pos)(_ == "FROM")
+    if (t.wordAt(fromAt) != "FROM") return None
+    val blockEnd = t.walk0(fromAt)(_ => false)
+    val fromEnd = t.find0(
       raw"(?i)\b(WHERE|GROUP|ORDER|LIMIT|HAVING|QUALIFY|WINDOW|UNION|INTERSECT|EXCEPT|USING|JOIN|LEFT|RIGHT|FULL|INNER|CROSS|SEMI|ANTI)\b|,".r,
       fromAt + 4, blockEnd) match {
       // a JOIN-family keyword or comma INSIDE the from-part → multi-relation
       case Some(p) =>
-        val w = if (masked.charAt(p) == ',') "," else wordStartingAt(masked, p)
-        if (w == "," || !Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
-          "QUALIFY", "WINDOW", "UNION", "INTERSECT", "EXCEPT").contains(w))
+        if (!Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
+          "QUALIFY", "WINDOW", "UNION", "INTERSECT", "EXCEPT").contains(t.wordAt(p)))
           return None
         p
       case None => blockEnd
     }
-    val fromPart = sql.substring(fromAt + 4, fromEnd).trim
+    val fromPart = t.sql.substring(fromAt + 4, fromEnd).trim
     raw"(?is)^([A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?[A-Za-z_]\w*)?$$".r
       .findFirstMatchIn(fromPart).map(_.group(1))
   }
@@ -5659,15 +4512,15 @@ object GraftSqlParser {
   /** [[blockFromRelation]]'s (name, explicit alias) twin — the
     * qualified-star paths need the alias to match the qualifier.
     */
-  private def blockFromRelationParts(sql: String, masked: String,
+  private def blockFromRelationParts(t: SqlText,
       pos: Int): Option[(String, Option[String])] =
-    blockFromRelation(sql, masked, pos).map { name =>
+    blockFromRelation(t, pos).map { name =>
       // re-extract the alias from the same single-relation from-part
       // shape blockFromRelation just validated
       val aliasRe =
         (raw"(?is)\bFROM\s+" + java.util.regex.Pattern.quote(name) +
           raw"\s+(?:AS\s+)?([A-Za-z_]\w*)").r
-      (name, aliasRe.findFirstMatchIn(sql).map(_.group(1))
+      (name, aliasRe.findFirstMatchIn(t.sql).map(_.group(1))
         .filterNot(a => Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
           "QUALIFY", "WINDOW", "UNION", "INTERSECT", "EXCEPT", "USING",
           "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "SEMI",
@@ -5676,20 +4529,16 @@ object GraftSqlParser {
 
   def rewriteReplace(sql: String, cols: Seq[String],
       resolve: String => Option[Seq[String]] = _ => None): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
     // `replace(...)` is also the string function and `*` is also
     // multiplication (`a * replace(b, 'x', 'y')`), so a match only counts
     // when the star sits in select-item position: start of text, after
     // `,`/`(`, after SELECT/DISTINCT/ALL, or after `.` (qualified star —
     // star context, but guided-error below).
-    val m0 = StarReplaceRe.findAllMatchIn(masked).find { m =>
-      (m.start - 1 to 0 by -1).find(j => !masked.charAt(j).isWhitespace) match {
-        case None => true
-        case Some(j) =>
-          val c = masked.charAt(j)
-          c == ',' || c == '(' || c == '.' ||
-            Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, j))
-      }
+    val m0 = StarReplaceRe.findAllMatchIn(t.mask).find { m =>
+      val j = t.skipWsBack(m.start) - 1
+      j < 0 || ",(.".contains(t(j)) ||
+        Set("SELECT", "DISTINCT", "ALL").contains(t.wordEndingAt(j))
     }
     m0 match {
       case None => sql
@@ -5700,32 +4549,21 @@ object GraftSqlParser {
         // blocks make the qualifier redundant, so the bare expansion is
         // exact); anything else keeps the guided error
         val qual: Option[(String, Int)] =
-          (m.start - 1 to 0 by -1).find(j => !masked.charAt(j).isWhitespace)
-            .filter(j => masked.charAt(j) == '.')
+          Some(t.skipWsBack(m.start) - 1).filter(j => j >= 0 && t(j) == '.')
             .map { j =>
-              val w = wordEndingAt(masked, j - 1)
+              val w = t.wordEndingAt(j - 1)
               if (w.isEmpty)
                 throw new graft.functions.expressions.DuckDialectException(
                   "qualified-star REPLACE: could not read the qualifier — " +
                     "list the columns explicitly")
               (w, j - w.length)
             }
-        var i = m.end
-        var d = 1
-        while (i < masked.length && d > 0) {
-          masked.charAt(i) match {
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (d > 0) return sql // unbalanced — let the parser report it
-        val close = i - 1
+        // unbalanced — let the parser report it
+        val close = t.closeOf(m.end - 1).getOrElse(return sql)
         // prefer the ACTUAL source relation's schema (r16): a star over
         // `FROM <table>` expands against that table; the stage `df`
         // contract stays the fallback for df-sourced and complex FROMs
-        val relParts = blockFromRelationParts(sql, masked, close + 1)
+        val relParts = blockFromRelationParts(t, close + 1)
         val resolved = relParts.map(_._1).flatMap(resolve)
         val srcCols = resolved.getOrElse(cols)
         qual.foreach { case (q, _) =>
@@ -5742,7 +4580,7 @@ object GraftSqlParser {
         val byLower = srcCols.map(c => c.toLowerCase -> c).toMap
         val itemRe = raw"(?is)^(.*\S)\s+AS\s+(`[^`]+`|\x22[^\x22]+\x22|[A-Za-z_]\w*)\s*$$".r
         val repl: Map[String, String] =
-          splitTopLevel(sql.substring(m.end, close), masked.substring(m.end, close))
+          t.split0(m.end, close)
             .map { item =>
               item.trim match {
                 case itemRe(expr, name0) =>
@@ -5760,7 +4598,7 @@ object GraftSqlParser {
             }.toMap
         val excluded: Set[String] = Option(m.group(1)) match {
           case None => Set.empty
-          case Some(list) => list.split(',').iterator.map(_.trim)
+          case Some(_) => sql.substring(m.start(1), m.end(1)).split(',').iterator.map(_.trim)
             .filter(_.nonEmpty)
             .map(_.stripPrefix("`").stripSuffix("`")
               .stripPrefix("\"").stripSuffix("\"").toLowerCase).toSet
@@ -5779,7 +4617,7 @@ object GraftSqlParser {
         // a matched qualifier is consumed with the star (the expansion's
         // bare names resolve in the single-relation block)
         val expStart = qual.map(_._2).getOrElse(m.start)
-        rewriteReplace(sql.substring(0, expStart) + expansion + sql.substring(i), cols, resolve)
+        rewriteReplace(sql.substring(0, expStart) + expansion + sql.substring(close + 1), cols, resolve)
     }
   }
 
@@ -5988,17 +4826,15 @@ object GraftSqlParser {
     * without OR REPLACE raises, matching DuckDB's catalog error.
     */
   def registerMacro(spark: org.apache.spark.sql.SparkSession, sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = CreateMacroHeadRe.findFirstMatchIn(masked).getOrElse(
+    val t = SqlText(sql)
+    val m = CreateMacroHeadRe.findFirstMatchIn(t.mask).getOrElse(
       macroFail("not a CREATE MACRO statement"))
     val orReplace = m.group(1) != null
     val name = m.group(2)
-    val close = closeOf(masked, m.end).getOrElse(macroFail("unbalanced parameter list"))
-    val paramsRaw = sql.substring(m.end, close - 1)
-    val paramsMasked = masked.substring(m.end, close - 1)
+    val close = t.closeOf(m.end - 1).getOrElse(macroFail("unbalanced parameter list"))
     val items =
-      if (paramsRaw.trim.isEmpty) Nil
-      else splitTopLevel(paramsRaw, paramsMasked).map(_.trim)
+      if (sql.substring(m.end, close).trim.isEmpty) Nil
+      else t.split0(m.end, close).map(_.trim)
     val parsed = items.map { it =>
       raw"(?s)^([A-Za-z_]\w*)\s*(?::=\s*(.+))?$$".r.findFirstMatchIn(it) match {
         case Some(pm) => (pm.group(1), Option(pm.group(2)).map(_.trim))
@@ -6008,10 +4844,10 @@ object GraftSqlParser {
     if (parsed.map(_._1.toLowerCase).distinct.size != parsed.size)
       macroFail("duplicate parameter name")
     val AsRe = raw"(?is)^\s*AS\s+(TABLE\s+)?".r
-    val tail = masked.substring(close)
-    val asM = AsRe.findFirstMatchIn(tail).getOrElse(macroFail("missing AS <body>"))
+    val asM = AsRe.findFirstMatchIn(t.mask.substring(close + 1))
+      .getOrElse(macroFail("missing AS <body>"))
     val isTable = asM.group(1) != null
-    val body = sql.substring(close + asM.end).trim.stripSuffix(";").trim
+    val body = sql.substring(close + 1 + asM.end).trim.stripSuffix(";").trim
     if (body.isEmpty) macroFail("empty body")
     val reg = macrosOf(spark)
     val key = name.toLowerCase
@@ -6039,7 +4875,7 @@ object GraftSqlParser {
     val reg = macrosIfAny(spark).getOrElse(return sql)
     val CallRe = raw"(?i)(?<![\w.`])([A-Za-z_]\w*)\s*\(".r
     var cur = sql
-    var depth = 0
+    var depth = 0 // expansion rounds (macros calling macros), not brackets
     var changed = true
     while (changed) {
       if (depth > 10)
@@ -6047,17 +4883,15 @@ object GraftSqlParser {
           "macro expansion exceeded depth 10 — recursive macro? DuckDB macros " +
             "cannot recurse; unroll the recursion or use an iterative operator")
       changed = false
-      val masked = maskQuotes(cur)
+      val t = SqlText(cur)
       val sb = new StringBuilder
       var pos = 0
-      CallRe.findAllMatchIn(masked).foreach { mm =>
+      CallRe.findAllMatchIn(t.mask).foreach { mm =>
         if (mm.start >= pos) reg.get(mm.group(1).toLowerCase).foreach { mac =>
-          closeOf(masked, mm.end).foreach { close =>
-            val argsRaw = cur.substring(mm.end, close - 1)
-            val argsMasked = masked.substring(mm.end, close - 1)
+          t.closeOf(mm.end - 1).foreach { close =>
             sb.append(cur.substring(pos, mm.start))
-              .append(expandOneMacro(mac, argsRaw, argsMasked))
-            pos = close
+              .append(expandOneMacro(mac, t, mm.end, close))
+            pos = close + 1
             changed = true
           }
         }
@@ -6075,17 +4909,14 @@ object GraftSqlParser {
     * then substitute each bound param identifier in the body with the
     * parenthesized argument text.
     */
-  private def expandOneMacro(mac: DuckMacro, argsRaw: String, argsMasked: String): String = {
+  private def expandOneMacro(mac: DuckMacro, t: SqlText, from: Int, until: Int): String = {
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"macro ${mac.name}(${mac.params.mkString(", ")}): $why")
+    // (raw, masked) per argument
     val args =
-      if (argsRaw.trim.isEmpty) Nil
-      else {
-        val raws = splitTopLevel(argsRaw, argsMasked)
-        val maskeds = splitTopLevel(argsMasked, argsMasked)
-        raws.zip(maskeds)
-      }
+      if (t.sql.substring(from, until).trim.isEmpty) Nil
+      else t.spans0(from, until).map { case (a, b) => (t.sql.substring(a, b), t.mask.substring(a, b)) }
     val NamedRe = raw"(?s)^\s*([A-Za-z_]\w*)\s*:=(.*)$$".r
     val (named, positional) = args.partition { case (_, mk) => NamedRe.findFirstIn(mk).isDefined }
     val positionalParams = mac.params.filterNot(p => mac.defaults.contains(p.toLowerCase))
@@ -6107,25 +4938,14 @@ object GraftSqlParser {
       bound(pname) = nm.group(2).trim
     }
     mac.defaults.foreach { case (p, d) => if (!bound.contains(p)) bound(p) = d }
-    val body = mac.body
-    val bodyMasked = maskQuotes(body)
+    val bt = SqlText(mac.body)
     val IdentRe = raw"(?i)(?<![\w.`])([A-Za-z_]\w*)\b".r
-    val sb = new StringBuilder
-    var pos = 0
-    IdentRe.findAllMatchIn(bodyMasked).foreach { im =>
-      bound.get(im.group(1).toLowerCase).foreach { arg =>
-        // an identifier followed by '(' is a function CALL named like the
-        // param — DuckDB params don't shadow function names; leave it
-        var j = im.end
-        while (j < bodyMasked.length && bodyMasked.charAt(j).isWhitespace) j += 1
-        if (j >= bodyMasked.length || bodyMasked.charAt(j) != '(') {
-          sb.append(body.substring(pos, im.start)).append("(").append(arg).append(")")
-          pos = im.end
-        }
-      }
-    }
-    sb.append(body.substring(pos))
-    "(" + sb.toString + ")"
+    // an identifier followed by '(' is a function CALL named like the
+    // param — DuckDB params don't shadow function names; leave it
+    "(" + bt.replaceAll(IdentRe)(im =>
+      bound.get(im.group(1).toLowerCase)
+        .filter(_ => !bt.mask.startsWith("(", bt.skipWs(im.end)))
+        .map(arg => s"($arg)")) + ")"
   }
 
   // ── DuckDB file I/O through sql stages (r9): read_* + COPY TO ──────
@@ -6160,28 +4980,6 @@ object GraftSqlParser {
     case other => throw new graft.functions.expressions.DuckDialectException(
       s"DuckDB type '$other' has no Spark mapping " +
         "- use VARCHAR/INTEGER/BIGINT/DOUBLE/FLOAT/BOOLEAN/DATE/TIMESTAMP/DECIMAL(p,s)")
-  }
-
-  /** Split read-fn arguments on top-level commas, tracking () AND {}/[]
-    * (the `columns={'a':'T','b':'U'}` struct literal carries commas
-    * that [[splitTopLevel]]'s paren-only depth would split on).
-    */
-  private def splitReadArgs(raw: String, masked: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var d = 0
-    var last = 0
-    var k = 0
-    while (k < masked.length) {
-      masked.charAt(k) match {
-        case '(' | '{' | '[' => d += 1
-        case ')' | '}' | ']' => d -= 1
-        case ',' if d == 0 => out += raw.substring(last, k); last = k + 1
-        case _ =>
-      }
-      k += 1
-    }
-    out += raw.substring(last)
-    out.result().map(_.trim).filter(_.nonEmpty)
   }
 
   /** Rewrite DuckDB's `read_csv_auto('p') / read_csv / read_parquet /
@@ -6223,11 +5021,11 @@ object GraftSqlParser {
     * views; always re-registered (see below).
     */
   def rewriteReadFns(spark: org.apache.spark.sql.SparkSession, sql: String): String = {
-    val masked = maskQuotes(sql)
+    val t = SqlText(sql)
     val sb = new StringBuilder
     var pos = 0
-    ReadFnRe.findAllMatchIn(masked).foreach { mm =>
-      if (mm.start >= pos) closeOf(masked, mm.end).foreach { close =>
+    ReadFnRe.findAllMatchIn(t.mask).foreach { mm =>
+      if (mm.start >= pos) t.closeOf(mm.end - 1).foreach { close =>
         val fn = mm.group(1).toLowerCase
         def fail(why: String): Nothing =
           throw new graft.functions.expressions.DuckDialectException(
@@ -6237,17 +5035,9 @@ object GraftSqlParser {
               "filename, union_by_name]); declare the file as a pipeline " +
               "`input` (reference O1) for anything else, or read it with " +
               "the Dataset API")
-        val argsRaw = sql.substring(mm.end, close - 1)
-        val args = splitReadArgs(argsRaw, masked.substring(mm.end, close - 1))
+        val args = t.split0(mm.end, close).map(_.trim).filter(_.nonEmpty)
         if (args.isEmpty) fail("needs a path argument")
-        def strLit(s: String): Option[String] = {
-          val t = s.trim
-          if (t.length >= 2 && t.head == '\'' && t.last == '\'' &&
-            !maskQuotes(t).drop(1).dropRight(1).contains('\''))
-            Some(t.substring(1, t.length - 1).replace("''", "'"))
-          else None
-        }
-        val path = strLit(args.head).getOrElse(fail("path must be a string literal"))
+        val path = singleLiteral(args.head).getOrElse(fail("path must be a string literal"))
         val OptRe = raw"(?s)^([A-Za-z_]\w*)\s*(?::?=)\s*(.+)$$".r
         // arguments may carry leading comments (`read_csv(p, /* n; */
         // header = false)`) — strip like statement heads (r13 fuzz)
@@ -6278,11 +5068,11 @@ object GraftSqlParser {
           if (!(body.startsWith("{") && body.endsWith("}")))
             fail("columns needs a {'name': 'TYPE', ...} struct")
           val inner = body.substring(1, body.length - 1)
-          val pairs = splitReadArgs(inner, maskQuotes(inner)).map { p =>
+          val pairs = SqlText(inner).split0().map(_.trim).filter(_.nonEmpty).map { p =>
             val kv = p.split(":", 2)
             if (kv.length != 2) fail(s"columns entry '$p' isn't 'name': 'TYPE'")
-            val cn = strLit(kv(0)).getOrElse(fail(s"columns name '${kv(0)}' must be a string"))
-            val ct = strLit(kv(1)).getOrElse(fail(s"columns type '${kv(1)}' must be a string"))
+            val cn = singleLiteral(kv(0)).getOrElse(fail(s"columns name '${kv(0)}' must be a string"))
+            val ct = singleLiteral(kv(1)).getOrElse(fail(s"columns type '${kv(1)}' must be a string"))
             s"`$cn` ${duckTypeToSpark(ct)}"
           }
           if (pairs.isEmpty) fail("columns struct is empty")
@@ -6312,7 +5102,7 @@ object GraftSqlParser {
           }
           else if (isJson) k match {
             case "columns" => parseColumns(v)
-            case "format" => strLit(v).map(_.toLowerCase) match {
+            case "format" => singleLiteral(v).map(_.toLowerCase) match {
               case Some("newline_delimited") | Some("nd") | Some("auto") => () // lines mode = Spark default
               case Some("array") => jsonMultiline = true
               case other => fail(s"format must be 'newline_delimited'/'nd'/'auto'/'array', got '${other.getOrElse(v)}'")
@@ -6327,14 +5117,14 @@ object GraftSqlParser {
           }
           else k match {
             case "delim" | "sep" | "delimiter" =>
-              readerOpts += "delimiter" -> strLit(v).getOrElse(fail(s"$k needs a string"))
+              readerOpts += "delimiter" -> singleLiteral(v).getOrElse(fail(s"$k needs a string"))
             case "header" => readerOpts += "header" -> boolOf(v)
             case "quote" =>
-              readerOpts += "quote" -> strLit(v).getOrElse(fail("quote needs a string"))
+              readerOpts += "quote" -> singleLiteral(v).getOrElse(fail("quote needs a string"))
             case "escape" =>
-              readerOpts += "escape" -> strLit(v).getOrElse(fail("escape needs a string"))
+              readerOpts += "escape" -> singleLiteral(v).getOrElse(fail("escape needs a string"))
             case "nullstr" =>
-              readerOpts += "nullValue" -> strLit(v).getOrElse(fail("nullstr needs a string"))
+              readerOpts += "nullValue" -> singleLiteral(v).getOrElse(fail("nullstr needs a string"))
             case "skip" =>
               // Spark's CSV reader has no skip-lines option (r10 mapped
               // this to a nonexistent `skipLines` key — silently ignored,
@@ -6349,7 +5139,7 @@ object GraftSqlParser {
               // (`compression` is a write option). Accept values that
               // agree with extension-based decode; anything else would
               // silently misread, so it stays a guided error (ADVICE r10).
-              val cv = strLit(v).getOrElse(fail("compression needs a string")).toLowerCase
+              val cv = singleLiteral(v).getOrElse(fail("compression needs a string")).toLowerCase
               val extOk = cv match {
                 case "none" | "auto" | "uncompressed" => true
                 case "gzip" => path.endsWith(".gz") || path.endsWith(".gzip")
@@ -6360,17 +5150,17 @@ object GraftSqlParser {
                 s"(Spark decodes by file extension; '$path' doesn't carry the " +
                 "matching extension) - rename the file or decompress it first")
             case "dateformat" | "date_format" =>
-              readerOpts += "dateFormat" -> strLit(v).getOrElse(fail(s"$k needs a string"))
+              readerOpts += "dateFormat" -> singleLiteral(v).getOrElse(fail(s"$k needs a string"))
             case "timestampformat" | "timestamp_format" =>
-              readerOpts += "timestampFormat" -> strLit(v).getOrElse(fail(s"$k needs a string"))
+              readerOpts += "timestampFormat" -> singleLiteral(v).getOrElse(fail(s"$k needs a string"))
             case "columns" => parseColumns(v)
             case "names" | "column_names" =>
               val body = v.trim
               if (!(body.startsWith("[") && body.endsWith("]")))
                 fail(s"$k needs a ['a', 'b', ...] list")
               val innerN = body.substring(1, body.length - 1)
-              names = splitReadArgs(innerN, maskQuotes(innerN))
-                .map(s => strLit(s).getOrElse(fail(s"$k entry '$s' must be a string")))
+              names = SqlText(innerN).split0().map(_.trim).filter(_.nonEmpty)
+                .map(s => singleLiteral(s).getOrElse(fail(s"$k entry '$s' must be a string")))
             case "auto_detect" => boolOf(v) // inference is Spark's default; accept
             case "sample_size" =>
               // DuckDB's sample_size bounds how many rows type
@@ -6495,7 +5285,7 @@ object GraftSqlParser {
           else rdf
         rdf2.createOrReplaceTempView(view)
         sb.append(sql.substring(pos, mm.start)).append(view)
-        pos = close
+        pos = close + 1
       }
     }
     if (pos == 0) sql else { sb.append(sql.substring(pos)); sb.toString }
@@ -6526,7 +5316,8 @@ object GraftSqlParser {
     * (.parquet/.json/else csv), DuckDB's rule.
     */
   def copyTarget(sql: String): Option[CopySpec] = {
-    val masked = maskQuotes(sql)
+    val st = SqlText(sql)
+    val masked = st.mask
     val m = CopyHeadRe.findFirstMatchIn(masked).getOrElse(return None)
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
@@ -6537,9 +5328,9 @@ object GraftSqlParser {
     var srcSql: Option[String] = None
     var srcTable: Option[String] = None
     if (masked.charAt(i) == '(') {
-      val close = closeOf(masked, i + 1).getOrElse(fail("unbalanced source subquery"))
-      srcSql = Some(sql.substring(i + 1, close - 1))
-      i = close
+      val close = st.closeOf(i).getOrElse(fail("unbalanced source subquery"))
+      srcSql = Some(sql.substring(i + 1, close))
+      i = close + 1
     } else {
       val t = raw"(?s)^([A-Za-z_][\w.]*)".r.findFirstMatchIn(masked.substring(i))
         .getOrElse(fail("missing source"))
@@ -6572,11 +5363,10 @@ object GraftSqlParser {
       if (!(restMasked.startsWith("(") && restMasked.stripSuffix(";").trim.endsWith(")")))
         fail(s"unexpected trailing text '${rest0.take(30)}'")
       val inner = rest0.stripSuffix(";").trim.stripPrefix("(").stripSuffix(")").trim
-      val innerMasked = maskQuotes(inner)
       // options may carry leading comments (`(FORMAT CSV, /* note; */
       // HEADER, ...)`) — strip them per option like statement heads
       // (r13 option-fuzz finding)
-      splitTopLevel(inner, innerMasked).map(o => stripLeadingComments(o).trim)
+      SqlText(inner).split0().map(o => stripLeadingComments(o).trim)
         .filter(_.nonEmpty).foreach { opt =>
         val parts = opt.split(raw"\s+", 2)
         parts(0).toUpperCase match {
@@ -6759,29 +5549,16 @@ object GraftSqlParser {
     * through untouched.
     */
   def stripReturning(sql: String): (String, Option[String]) = {
-    val masked = maskQuotes(sql)
-    if (raw"(?is)^\s*(INSERT|UPDATE|DELETE)\b".r.findFirstIn(masked).isEmpty)
+    val t = SqlText(sql)
+    if (raw"(?is)^\s*(INSERT|UPDATE|DELETE)\b".r.findFirstIn(t.mask).isEmpty)
       return (sql, None)
-    var d = 0
-    var i = 0
-    while (i < masked.length) {
-      val c = masked.charAt(i)
-      if (c == '(') { d += 1; i += 1 }
-      else if (c == ')') { d -= 1; i += 1 }
-      else if (d == 0 && c.isLetter &&
-        (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_'))) {
-        val w = wordStartingAt(masked, i)
-        if (w.equalsIgnoreCase("RETURNING")) {
-          val proj = sql.substring(i + w.length).replaceAll(";\\s*$", "").trim
-          if (proj.isEmpty)
-            throw new graft.functions.expressions.DuckDialectException(
-              "RETURNING needs a projection list (columns, expressions, or *)")
-          return (sql.substring(0, i), Some(proj))
-        }
-        i += math.max(w.length, 1)
-      } else i += 1
-    }
-    (sql, None)
+    val i = t.word0(0)(_ == "RETURNING")
+    if (t.wordAt(i) != "RETURNING") return (sql, None)
+    val proj = sql.substring(i + "RETURNING".length).replaceAll(";\\s*$", "").trim
+    if (proj.isEmpty)
+      throw new graft.functions.expressions.DuckDialectException(
+        "RETURNING needs a projection list (columns, expressions, or *)")
+    (sql.substring(0, i), Some(proj))
   }
 
   /** A parsed `UPDATE table SET col = expr[, ...] [FROM tables]
@@ -6802,30 +5579,16 @@ object GraftSqlParser {
     * temp-table rebuild route rather than silently mis-parsing.
     */
   def updateTarget(sql: String): Option[UpdateSpec] = {
-    val m = UpdateStmtRe.findFirstMatchIn(maskQuotes(sql)).getOrElse(return None)
+    val m = UpdateStmtRe.findFirstMatchIn(SqlText(sql).mask).getOrElse(return None)
     val table = sql.substring(m.start(1), m.end(1))
     val rest = sql.substring(m.start(2)).replaceAll(";\\s*$", "")
-    val restMasked = maskQuotes(rest)
+    val rt = SqlText(rest)
     // depth-0 keyword scan: FROM (joined update) and WHERE end the SET
     // list, WHERE ends the FROM list
-    var d = 0
-    var whereAt = -1
-    var fromAt = -1
-    var k = 0
-    while (k < restMasked.length && whereAt < 0) {
-      val c = restMasked.charAt(k)
-      if (c == '(') { d += 1; k += 1 }
-      else if (c == ')') { d -= 1; k += 1 }
-      else if (d == 0 && c.isLetter &&
-        (k == 0 || (!restMasked.charAt(k - 1).isLetterOrDigit && restMasked.charAt(k - 1) != '_'))) {
-        val w = wordStartingAt(restMasked, k)
-        if (w == "WHERE") whereAt = k
-        else if (w == "FROM" && fromAt < 0) fromAt = k
-        k += math.max(w.length, 1)
-      } else k += 1
-    }
+    val whereAt = rt.find0(raw"(?i)\bWHERE\b".r).getOrElse(-1)
+    val fromAt = rt.find0(raw"(?i)\bFROM\b".r, 0, if (whereAt >= 0) whereAt else rt.length)
+      .getOrElse(-1)
     val setEnd = if (fromAt >= 0) fromAt else if (whereAt >= 0) whereAt else rest.length
-    val setPart = rest.substring(0, setEnd)
     val fromPart =
       if (fromAt < 0) None
       else Some(rest.substring(fromAt + "FROM".length,
@@ -6836,9 +5599,9 @@ object GraftSqlParser {
     val wherePart =
       if (whereAt < 0) None
       else Some(rest.substring(whereAt + "WHERE".length).trim)
-    val assigns = splitTopLevel(setPart, maskQuotes(setPart)).map { a =>
-      val am = maskQuotes(a)
-      val eq = am.indexOf('=')
+    val assigns = rt.spans0(0, setEnd).map { case (a0, a1) =>
+      val a = rest.substring(a0, a1)
+      val eq = rt.mask.substring(a0, a1).indexOf('=')
       if (eq < 0)
         throw new graft.functions.expressions.DuckDialectException(
           s"UPDATE $table: malformed assignment '${a.trim}' — need col = expr")
@@ -6859,8 +5622,7 @@ object GraftSqlParser {
     * form is claimed (DuckDB itself only deletes from base tables).
     */
   def deleteTarget(sql: String): Option[(String, Option[String])] = {
-    val masked = maskQuotes(sql)
-    val m = DeleteStmtRe.findFirstMatchIn(masked).getOrElse(return None)
+    val m = DeleteStmtRe.findFirstMatchIn(SqlText(sql).mask).getOrElse(return None)
     val table = sql.substring(m.start(1), m.end(1))
     val pred = if (m.group(2) == null) None
       else Some(sql.substring(m.start(2), m.end(2)).trim).filter(_.nonEmpty)
@@ -6895,7 +5657,7 @@ object GraftSqlParser {
     * catalog table falls through to Spark's own ALTER TABLE untouched.
     */
   def alterTarget(sql: String): Option[(String, Option[AlterSpec])] = {
-    val m = AlterHeadRe.findFirstMatchIn(maskQuotes(sql)).getOrElse(return None)
+    val m = AlterHeadRe.findFirstMatchIn(SqlText(sql).mask).getOrElse(return None)
     val table = sql.substring(m.start(1), m.end(1))
     val action = sql.substring(m.start(2), m.end(2)).trim
     val spec = action match {
@@ -7285,16 +6047,8 @@ object GraftSqlParser {
     sessionSeed(spark) match {
       case None => sql
       case Some(seed) =>
-        val re = raw"(?i)\b(random|rand)\s*\(\s*\)".r
-        val masked = maskQuotes(sql)
-        val out = new StringBuilder
-        var last = 0
-        re.findAllMatchIn(masked).foreach { m =>
-          out ++= sql.substring(last, m.start)
-          out ++= s"rand(${java.lang.Double.doubleToLongBits(seed)}L)"
-          last = m.end
-        }
-        if (last == 0) sql else { out ++= sql.substring(last); out.toString }
+        SqlText(sql).replaceAll(raw"(?i)\b(random|rand)\s*\(\s*\)".r)(_ =>
+          Some(s"rand(${java.lang.Double.doubleToLongBits(seed)}L)"))
     }
 
   private def attachMap(spark: org.apache.spark.sql.SparkSession)
@@ -7386,10 +6140,10 @@ object GraftSqlParser {
   }
 
   /** Rewrite `alias.tbl` references onto the attached temp views —
-    * string literals are skipped via [[maskQuotes]]; only (alias, tbl)
-    * pairs actually attached in THIS session rewrite, so ordinary
-    * schema-qualified names (global_temp.x, catalog tables) never
-    * match.
+    * literals, comments and quoted identifiers are skipped via
+    * [[SqlText]]; only (alias, tbl) pairs actually attached in THIS
+    * session rewrite, so ordinary schema-qualified names
+    * (global_temp.x, catalog tables) never match.
     */
   def rewriteAttachedRefs(spark: org.apache.spark.sql.SparkSession,
                           sql: String): String = {
@@ -7400,16 +6154,7 @@ object GraftSqlParser {
     reg.foreach { case (alias, ts) => ts.foreach { t =>
       val re = ("(?i)(?<![\\w.`])" + java.util.regex.Pattern.quote(alias) +
         "\\s*\\.\\s*" + java.util.regex.Pattern.quote(t) + "(?![\\w.`])").r
-      var changed = true
-      while (changed) {
-        changed = false
-        val masked = maskQuotes(out)
-        re.findFirstMatchIn(masked).foreach { m =>
-          out = out.substring(0, m.start) + attachViewName(alias, t) +
-            out.substring(m.end)
-          changed = true
-        }
-      }
+      out = SqlText(out).replaceAll(re)(_ => Some(attachViewName(alias, t)))
     }}
     out
   }
@@ -7431,21 +6176,19 @@ object GraftSqlParser {
     * Inside the claimed form, malformed column definitions fail loudly.
     */
   def createTableDefTarget(sql: String): Option[CreateTableDef] = {
-    val masked = maskQuotes(sql)
-    val m = CreateDefHeadRe.findFirstMatchIn(masked).getOrElse(return None)
-    val close = closeOf(masked, m.end).getOrElse(
+    val t = SqlText(sql)
+    val m = CreateDefHeadRe.findFirstMatchIn(t.mask).getOrElse(return None)
+    val close = t.closeOf(m.end - 1).getOrElse(
       createDefFail("unbalanced column-definition parens"))
-    val tail = masked.substring(close).trim
+    val tail = t.mask.substring(close + 1).trim
     if (tail.nonEmpty && tail != ";")
-      createDefFail(s"unexpected trailing text '${sql.substring(close).trim.take(40)}'")
-    val body = sql.substring(m.end, close - 1)
-    val bodyMasked = masked.substring(m.end, close - 1)
-    if (body.trim.isEmpty) createDefFail("empty column list")
+      createDefFail(s"unexpected trailing text '${sql.substring(close + 1).trim.take(40)}'")
+    if (sql.substring(m.end, close).trim.isEmpty) createDefFail("empty column list")
     // DuckDB's own EXPORT DATABASE schema.sql double-quotes column
     // names that shadow keywords ("name" VARCHAR — r15 interop
     // fixture); plain-identifier quotes strip, anything needing real
     // quoting keeps the loud failure below
-    val items = splitTopLevel(body, bodyMasked).map(
+    val items = t.split0(m.end, close).map(
       _.trim.replaceAll("^\"([A-Za-z_]\\w*)\"", "$1"))
     val TablePkRe = raw"(?is)^PRIMARY\s+KEY\s*\(([^)]*)\)$$".r
     val ColRe = raw"(?is)^([A-Za-z_]\w*)\s+([A-Za-z_]\w*(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*(.*)$$".r
@@ -7477,7 +6220,7 @@ object GraftSqlParser {
           else if (dfM.isDefined) {
             val rest = mods.substring(dfM.get.end)
             val stop = raw"(?is)\s+(PRIMARY\s+KEY|NOT\s+NULL)\b".r.findFirstMatchIn(
-              maskQuotes(rest))
+              SqlText(rest).mask)
             val (d, after) = stop match {
               case Some(s) => (rest.substring(0, s.start), rest.substring(s.start))
               case None => (rest, "")
@@ -7540,46 +6283,29 @@ object GraftSqlParser {
     * DO NOTHING).
     */
   def insertSpec(sql: String): Option[InsertSpec] = {
-    val masked = maskQuotes(sql)
-    val m = InsertHeadRe.findFirstMatchIn(masked).getOrElse(return None)
+    val m = InsertHeadRe.findFirstMatchIn(SqlText(sql).mask).getOrElse(return None)
     val table = sql.substring(m.start(2), m.end(2))
     val orClause = Option(m.group(1)).map(_.trim.toUpperCase match {
       case s if s.startsWith("OR REPLACE") || s.matches("(?is)OR\\s+REPLACE") => "REPLACE"
       case _ => "IGNORE"
     })
     var rest = sql.substring(m.start(4)).replaceAll(";\\s*$", "")
-    var restMasked = masked.substring(m.start(4)).replaceAll(";\\s*$", "")
     // optional explicit column list: a leading parenthesized pure
     // identifier list (a leading parenthesized QUERY keeps rest as-is)
     var cols: Option[Seq[String]] = None
     if (rest.trim.startsWith("(")) {
       val open = rest.indexOf('(')
-      closeOf(restMasked, open + 1).foreach { cl =>
-        val inner = rest.substring(open + 1, cl - 1)
-        val items = inner.split(',').map(_.trim)
+      SqlText(rest).closeOf(open).foreach { cl =>
+        val items = rest.substring(open + 1, cl).split(',').map(_.trim)
         if (items.nonEmpty && items.forall(_.matches("[A-Za-z_]\\w*")) &&
           !items.head.matches("(?i)SELECT|FROM|WITH|VALUES|TABLE")) {
           cols = Some(items.toSeq)
-          rest = rest.substring(cl).trim
-          restMasked = restMasked.substring(cl).trim
+          rest = rest.substring(cl + 1).trim
         }
       }
     }
     // depth-0 scan for the ON CONFLICT clause
-    var d = 0
-    var confAt = -1
-    var k = 0
-    while (k < restMasked.length && confAt < 0) {
-      val c = restMasked.charAt(k)
-      if (c == '(') { d += 1; k += 1 }
-      else if (c == ')') { d -= 1; k += 1 }
-      else if (d == 0 && (c == 'O' || c == 'o') &&
-        (k == 0 || (!restMasked.charAt(k - 1).isLetterOrDigit && restMasked.charAt(k - 1) != '_')) &&
-        raw"(?is)^ON\s+CONFLICT\b".r.findFirstIn(restMasked.substring(k)).isDefined) {
-        confAt = k
-      } else k += 1
-    }
-    if (confAt < 0) {
+    val confAt = SqlText(rest).find0(raw"(?is)\bON\s+CONFLICT\b".r).getOrElse {
       if (rest.trim.isEmpty) insertFail(table, "missing source query")
       return Some(InsertSpec(table, m.group(3) != null, cols, rest.trim,
         None, orClause.map(o => if (o == "IGNORE") DoNothing
@@ -7590,17 +6316,15 @@ object GraftSqlParser {
     val query = rest.substring(0, confAt).trim
     if (query.isEmpty) insertFail(table, "missing source query")
     var clause = rest.substring(confAt).replaceFirst(raw"(?is)^ON\s+CONFLICT\s*", "")
-    var clauseMasked = maskQuotes(clause)
     var target: Option[Seq[String]] = None
     if (clause.startsWith("(")) {
-      val cl = closeOf(clauseMasked, 1).getOrElse(
+      val cl = SqlText(clause).closeOf(0).getOrElse(
         insertFail(table, "unbalanced conflict-target parens"))
-      val items = clause.substring(1, cl - 1).split(',').map(_.trim).toSeq
+      val items = clause.substring(1, cl).split(',').map(_.trim).toSeq
       if (items.exists(!_.matches("[A-Za-z_]\\w*")))
-        insertFail(table, s"bad conflict target '${clause.substring(0, cl)}'")
+        insertFail(table, s"bad conflict target '${clause.substring(0, cl + 1)}'")
       target = Some(items)
-      clause = clause.substring(cl).trim
-      clauseMasked = maskQuotes(clause)
+      clause = clause.substring(cl + 1).trim
     }
     val action =
       if (clause.matches(raw"(?is)^DO\s+NOTHING\s*$$")) DoNothing
@@ -7608,26 +6332,13 @@ object GraftSqlParser {
         val upM = raw"(?is)^DO\s+UPDATE\s+SET\s+".r.findFirstMatchIn(clause)
           .getOrElse(insertFail(table,
             s"unclaimed conflict action '${clause.take(30)}'"))
-        val setPart0 = clause.substring(upM.end)
-        val setMasked0 = clauseMasked.substring(upM.end)
+        val ct = SqlText(clause)
         // depth-0 WHERE ends the SET list (the updateTarget scan)
-        var d2 = 0; var whereAt = -1; var j = 0
-        while (j < setMasked0.length && whereAt < 0) {
-          val c = setMasked0.charAt(j)
-          if (c == '(') { d2 += 1; j += 1 }
-          else if (c == ')') { d2 -= 1; j += 1 }
-          else if (d2 == 0 && c.isLetter &&
-            (j == 0 || (!setMasked0.charAt(j - 1).isLetterOrDigit && setMasked0.charAt(j - 1) != '_')) &&
-            wordStartingAt(setMasked0, j) == "WHERE") whereAt = j
-          else j += 1
-        }
-        val (setPart, wherePart) =
-          if (whereAt < 0) (setPart0, None)
-          else (setPart0.substring(0, whereAt),
-            Some(setPart0.substring(whereAt + "WHERE".length).trim))
-        val assigns = splitTopLevel(setPart, maskQuotes(setPart)).map { a =>
-          val am = maskQuotes(a)
-          val eq = am.indexOf('=')
+        val whereAt = ct.find0(raw"(?i)\bWHERE\b".r, upM.end)
+        val wherePart = whereAt.map(w => clause.substring(w + "WHERE".length).trim)
+        val assigns = ct.spans0(upM.end, whereAt.getOrElse(clause.length)).map { case (a0, a1) =>
+          val a = clause.substring(a0, a1)
+          val eq = ct.mask.substring(a0, a1).indexOf('=')
           if (eq < 0) insertFail(table, s"malformed assignment '${a.trim}'")
           val cn = a.substring(0, eq).trim
           if (!cn.matches("[A-Za-z_]\\w*"))
@@ -7647,19 +6358,11 @@ object GraftSqlParser {
     * strings containing the words stay untouched.
     */
   def rewriteUpsertRefs(expr: String, table: String): String = {
-    val masked = maskQuotes(expr)
     val re = raw"(?i)(?<![\w.])(excluded|${java.util.regex.Pattern.quote(table)})\s*\.\s*([A-Za-z_]\w*)".r
-    val sb = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(masked).foreach { m =>
-      sb.append(expr.substring(last, m.start))
-      val qual = expr.substring(m.start(1), m.end(1))
+    SqlText(expr).replaceAll(re) { m =>
       val c = expr.substring(m.start(2), m.end(2))
-      sb.append(if (qual.equalsIgnoreCase("excluded")) s"__exc_$c" else c)
-      last = m.end
+      Some(if (m.group(1).equalsIgnoreCase("excluded")) s"__exc_$c" else c)
     }
-    sb.append(expr.substring(last))
-    sb.toString
   }
 
   /** Split multi-statement sql-stage code on top-level (quote-masked)
@@ -7685,22 +6388,16 @@ object GraftSqlParser {
     * result, ALL keeps everything.
     */
   def unionByNameTarget(sql: String): Option[UnionByNameSpec] = {
-    val masked = maskQuotes(sql)
-    def depth0(p: Int): Boolean = {
-      val pre = masked.substring(0, p)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }
-    val bounds = raw"(?i)\bUNION\s+(ALL\s+)?BY\s+NAME\b".r
-      .findAllMatchIn(masked).filter(m => depth0(m.start)).toList
+    val t = SqlText(sql)
+    val bounds = t.findAll0(raw"(?i)\bUNION\s+(ALL\s+)?BY\s+NAME\b".r)
     if (bounds.isEmpty) return None
     // leading CTE prefix: everything before the first depth-0 SELECT
     // (or FROM-first FROM) — replicated onto every side
     // CTE bodies live inside parens, so the first depth-0 SELECT (or
     // FROM-first FROM) marks where the union's first side begins
     val bodyStart =
-      if (raw"(?is)^\s*WITH\b".r.findFirstIn(masked).isDefined)
-        raw"(?i)\bSELECT\b|\bFROM\b".r.findAllMatchIn(masked)
-          .find(m => depth0(m.start)).map(_.start).getOrElse(0)
+      if (raw"(?is)^\s*WITH\b".r.findFirstIn(t.mask).isDefined)
+        t.find0(raw"(?i)\bSELECT\b|\bFROM\b".r).getOrElse(0)
       else 0
     val prefix = sql.substring(0, bodyStart)
     val cuts = bounds.map(m => (m.start, m.end, m.group(1) != null))
@@ -7711,13 +6408,7 @@ object GraftSqlParser {
       last = e0
     }
     // the LAST side may carry whole-union ORDER BY / LIMIT / OFFSET
-    val lastMasked = masked.substring(last)
-    val tailPos = raw"(?i)\bORDER\s+BY\b|\bLIMIT\b|\bOFFSET\b".r
-      .findAllMatchIn(lastMasked)
-      .find(m => {
-        val pre = lastMasked.substring(0, m.start)
-        pre.count(_ == '(') == pre.count(_ == ')')
-      }).map(_.start)
+    val tailPos = t.find0(raw"(?i)\bORDER\s+BY\b|\bLIMIT\b|\bOFFSET\b".r, last).map(_ - last)
     val (lastSide, tail) = tailPos match {
       case Some(tp) => (sql.substring(last, last + tp), sql.substring(last + tp))
       case None => (sql.substring(last), "")
@@ -7742,7 +6433,7 @@ object GraftSqlParser {
     * scale operators, it never blocks execution.
     */
   def deepRecursionWarning(sql: String): Option[String] = {
-    val masked = maskQuotes(sql)
+    val masked = SqlText(sql).mask
     if (raw"(?i)\bWITH\s+RECURSIVE\b".r.findFirstIn(masked).isEmpty) return None
     val cmp = raw"[<>]=?\s*(\d+)".r.findAllMatchIn(masked).map(_.group(1).toLong) ++
       raw"(\d+)\s*[<>]=?".r.findAllMatchIn(masked).map(_.group(1).toLong) ++
@@ -7772,7 +6463,7 @@ object GraftSqlParser {
   }
 
   def splitStatements(sql: String): Seq[String] = {
-    val masked = maskQuotes(sql)
+    val masked = SqlText(sql).mask
     val out = Seq.newBuilder[String]
     var last = 0
     var i = 0

@@ -583,7 +583,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
           GraftSqlParser.rewriteReplace(stmt, df.columns.toSeq, resolveRel),
           df.columns.toSeq, resolveRel), grpResolve))
     graft.functions.expressions.DuckDialect.rejectSilentTraps(
-      GraftSqlParser.maskQuotes(rewritten))
+      GraftSqlParser.SqlText(rewritten).mask)
     // deep/unbounded WITH RECURSIVE: warn about the one-job-per-level
     // cost model and name the iterative operators — never blocks
     GraftSqlParser.warnDeepRecursion(rewritten)

@@ -1230,7 +1230,7 @@ class DialectSpec extends SparkSpec {
     }
   }
 
-  test("maskQuotes blanks SQL comments: ';' inside -- or /* */ never splits a batch") {
+  test("SqlText mask blanks SQL comments: ';' inside -- or /* */ never splits a batch") {
     // r9 review: splitStatements only masked quoted strings, so a ';'
     // inside a comment split the batch mid-comment into garbage
     val lineSql = "SELECT 1 AS a -- trailing; not a split; really\nFROM df;\nSELECT 2 AS b FROM df"
@@ -1244,7 +1244,7 @@ class DialectSpec extends SparkSpec {
       "SELECT '--;' AS a FROM df; SELECT 2 AS b FROM df").size == 2)
     assert(GraftSqlParser.splitStatements(
       "SELECT 1 -- it's fine; honest\n, 2 FROM df").size == 1)
-    val masked = GraftSqlParser.maskQuotes("a 'x;y' -- c;\n/* d;'e */ b")
+    val masked = GraftSqlParser.SqlText("a 'x;y' -- c;\n/* d;'e */ b").mask
     assert(!masked.substring(masked.indexOf("a") + 1).takeWhile(_ != 'b').contains(';'))
     assert(masked.length == "a 'x;y' -- c;\n/* d;'e */ b".length) // positions preserved
     // end-to-end: a commented batch runs, comments intact per statement
@@ -1255,6 +1255,34 @@ class DialectSpec extends SparkSpec {
         |SELECT SUM(id) AS s -- sum; of ids
         |FROM df""".stripMargin).apply(spark, df).collect()
     assert(out.head.getLong(0) == 6L)
+  }
+
+  test("rewrites never fire inside quoted identifiers, comments or literals") {
+    // every DuckDB-ism below sits only inside a backtick or double-quoted
+    // identifier, a comment or a string literal, so the chain is identity
+    Seq(
+      "SELECT 1 AS `a::int`",
+      "SELECT 1 AS \"b^2\"",
+      "SELECT 1 AS `x.trim()`",
+      "SELECT 1 AS `a // b`",
+      "SELECT 1 AS `regexp_replace(x`",
+      "SELECT 1 AS a -- x::int, y ** 2, z.trim(), log(10), l[1], {'k': 1}\n" +
+        ", '--' AS b, 'c // d ^ e' AS c /* 2 ^ 3 // 4, regexp_replace(s, 'a', 'b') */"
+    ).foreach(sql => assert(GraftSqlParser.rewriteAll(sql) == sql, sql))
+  }
+
+  test("no DuckDB hint when the only DuckDB syntax sits inside a quoted identifier") {
+    def parse(sql: String) =
+      GraftSqlParser.withDialectHint(sql)(spark.sessionState.sqlParser.parsePlan(sql))
+    // an unclosed paren makes each statement a parse error
+    Seq("SELECT (`s USING SAMPLE 10%` FROM t",
+      "SELECT (\"s USING SAMPLE 10%\" FROM t").foreach { sql =>
+      val e = intercept[Exception](parse(sql))
+      assert(!e.isInstanceOf[DuckDialectException], sql)
+      assert(e.isInstanceOf[org.apache.spark.sql.catalyst.parser.ParseException], sql)
+    }
+    // the same construct outside the quotes still gets its hint
+    intercept[DuckDialectException](parse("SELECT (s FROM t USING SAMPLE 10%"))
   }
 
   test("UPDATE/DELETE mutate session temp tables with DuckDB semantics (r13)") {
@@ -1821,7 +1849,7 @@ class DialectSpec extends SparkSpec {
     // rewriters must pass every byte through untouched (no false fires)
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       if (raw"(?i)\bASOF\b|\bDISTINCT\s+ON\b|\bUSING\s+SAMPLE\b|\bjson_extract|\*\s*(?:(?:EXCLUDE|EXCEPT)\s*\([^)]*\)\s*)?REPLACE\s*\(|\[[^\[\]']*:[^\]]*\]|\[[^\]]*\bFOR\b|//|\*\*|^\s*FROM\b|\bMAP\s*\{|\b(?:string_agg|group_concat|array_agg|list|first|last)\s*\([^;()]*(?:\([^()]*\)[^;()]*)*ORDER\s+BY|\bformat\s*\(|\b(?:IGNORE|RESPECT)\s+NULLS\s*\)|\b(?:date_diff|datediff)\s*\(\s*'|\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)|\bSIMILAR\s+TO\b|\bregexp_replace\s*\(|[\w)\]]\s*\[|\^|\blog\s*\(|\bFILTER\s*\(|\b(?:AS\s+|::\s*)(?:VARCHAR|TEXT|BPCHAR|CHAR|BLOB|BYTEA|VARBINARY|UBIGINT|HUGEINT|UTINYINT|USMALLINT|UINTEGER|INT1|INT2|INT4|INT8|SIGNED|LOGICAL|FLOAT4|FLOAT8|DATETIME|BIGINT|INT|INTEGER|SMALLINT|TINYINT|LONG|SHORT|BYTE)\b".r
-          .findFirstIn(GraftSqlParser.maskQuotes(sql)).isEmpty)
+          .findFirstIn(GraftSqlParser.SqlText(sql).mask).isEmpty)
         // identity modulo rewriteRawLiterals (r13): backslashes inside
         // literals double ON PURPOSE (DuckDB-raw → Spark-escaped)
         assert(GraftSqlParser.rewriteAll(sql) == GraftSqlParser.rewriteRawLiterals(sql),
@@ -2878,7 +2906,7 @@ class DialectSpec extends SparkSpec {
     // `//`/`**`, slices and nested lambdas, split across batches with
     // semicolon-bearing comments, and assert every batch produces
     // EXACTLY what the hand-inlined SQL produces — a mangle anywhere in
-    // maskQuotes / splitStatements / expandMacros / the rewrite chain
+    // SqlText / splitStatements / expandMacros / the rewrite chain
     // breaks the equality, not just the no-crash property.
     val df = Seq(
       (1L, "the tiny transform", """{"a": {"b": 3}, "l": [10, 20]}"""),
@@ -3921,7 +3949,7 @@ class DialectSpec extends SparkSpec {
     val sib = q("""SELECT (SELECT count(*) FROM (SELECT * FROM rsv_w USING SAMPLE reservoir(10%)))
                    + (SELECT count(*) FROM (SELECT * FROM rsv_w USING SAMPLE reservoir(20%))) AS n""")
     assert(sib.head.getLong(0) == 30L, sib.head.getLong(0))
-    // a reservoir(n%) inside a string literal never resolves (maskQuotes)
+    // a reservoir(n%) inside a string literal never resolves (SqlText mask)
     val lit = q("SELECT 'USING SAMPLE reservoir(10%)' AS s FROM rsv_w WHERE r = 0")
     assert(lit.head.getString(0) == "USING SAMPLE reservoir(10%)")
     spark.catalog.dropTempView("rsv_w")
@@ -4336,7 +4364,7 @@ class DialectSpec extends SparkSpec {
       SqlStage("t", "ATTACH '/tmp/nonexistent_graft.db' AS x").apply(s2, s2.range(1).toDF("z")))
     assert(bad.getMessage.contains("EXPORT DATABASE"))
     assert(df.count() == 1) // base session untouched
-    // alias.tbl inside STRING LITERALS never rewrites (maskQuotes)
+    // alias.tbl inside STRING LITERALS never rewrites (SqlText mask)
     val alias = new java.io.File(dir).getName
     val lit = SqlStage("t",
       s"SELECT '$alias.att_src' AS s, count(*) AS n FROM $alias.att_src")

@@ -161,7 +161,7 @@ object FuzzDiff {
       only: Option[Set[Int]] = None): Seq[(String, String)] =
     (1 to n).map { i =>
       val name = f"fz$i%03d"
-      val tpl = Iterator.continually(r.nextInt(66))
+      val tpl = Iterator.continually(r.nextInt(67))
         .find(t => only.forall(_.contains(t))).get
       val sql = tpl match {
         case 0 => // plain projection + filter, pinned order
@@ -751,6 +751,24 @@ object FuzzDiff {
               replace(printf('%,.${p}d', ${intExpr(r, 1)}), '0', '_') AS d,
               concat(format('{:.${p}e}', $d2), '|', printf('%.*g', CAST(${1 + r.nextInt(8)} AS INT), $d2)) AS e
               FROM lineitem WHERE l_orderkey < ${150 + r.nextInt(250)}"""
+        case 66 => // DuckDB syntax that must stay INERT: every rewrite
+          // trigger sits inside a string literal and inside a `--` or
+          // /* */ comment, never in live SQL — any rewrite firing there
+          // changes a literal's value or breaks the statement
+          val frags = r.shuffle(Seq("2 ^ 3", "2 ** 3", "7 // 2", "x::int",
+            "log(100)", "regexp_replace(s, 'a', 'b')", "s.trim()", "l[1]",
+            "{'a': 1}"))
+          val (a, rest) = frags.splitAt(3)
+          val (b, c) = rest.splitAt(3)
+          def lit(fs: Seq[String]) = "'" + fs.mkString(" ").replace("'", "''") + "'"
+          s"""SELECT l_orderkey AS k, l_linenumber AS ln,
+              ${lit(a)} AS s1, -- ${b.mkString(", ")}
+              CAST(length(${lit(c)}) AS INT) AS n1,
+              ${intExpr(r, 1)} /* ${c.mkString(" ")} ${a.mkString(" ")} */ AS e1,
+              ${lit(b)} || l_returnflag AS s2 -- ${a.mkString(" ")}
+              FROM lineitem /* ${b.mkString(" ")} */
+              WHERE l_orderkey < ${100 + r.nextInt(300)} -- ${c.mkString(" ")}
+              ORDER BY k, ln"""
         case 61 => // CTE-scoped percentage reservoir (r18): both engines
           // draw their own rows, so the comparison pins the DuckDB-
           // guaranteed invariants — exact round-half-up(p% × CTE count)
