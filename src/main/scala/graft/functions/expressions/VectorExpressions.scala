@@ -296,7 +296,7 @@ object GraftFunctions {
     * list so every registration path (per-session register, extensions
     * injector) carries the full surface.
     */
-  private val fns: Seq[(String, Seq[Expression] => Expression)] =
+  private[graft] val fns: Seq[(String, Seq[Expression] => Expression)] =
     base ++ DuckDialect.aliases
 
   /** Sessions already registered (weak so stopped sessions collect).
@@ -1112,27 +1112,12 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectParser((_, delegate) => new graft.operators.GraftSqlParser(delegate))
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      es => CosineSimilarity(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      es => DotProduct(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("lsh_signature"),
-      new ExpressionInfo(classOf[LshSignatures].getName, "lsh_signature"),
-      es => LshSignatures(es(0), es(1), es(2))))
-    e.injectFunction((FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[VectorNorm].getName, "vec_norm"),
-      es => VectorNorm(es.head)))
-    e.injectFunction((FunctionIdentifier("norm_fingerprint"),
-      new ExpressionInfo(classOf[NormFingerprint].getName, "norm_fingerprint"),
-      es => NormFingerprint(es.head)))
-    // DuckDB-dialect aliases (string_split, list_transform, strftime, …)
-    // so extension-built sessions resolve them without a register() call
-    DuckDialect.aliases.foreach { case (name, builder) =>
+    // the same list GraftFunctions.register installs, so an
+    // extension-built session resolves every native and dialect alias
+    // without a register() call
+    GraftFunctions.fns.foreach { case (name, builder) =>
       e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(DuckDialect.getClass.getName, name), builder))
+        new ExpressionInfo(GraftFunctions.getClass.getName, name), builder))
     }
   }
 }

@@ -17,12 +17,10 @@ trait Stage extends Serializable {
 
 /** `sql` stage (reference O12, filefilter.py:340-342): the current
   * pipeline state is exposed as view `df`, the user's SQL replaces it.
-  * DuckDB's `SELECT * EXCLUDE(a, b)` star modifier (used by
-  * examples/fullExample/fullExample.yml:100-104) is rewritten to
-  * Spark-native `* EXCEPT (a, b)` — here textually for sessions built
-  * without extensions, and in [[GraftSqlParser]] (injectParser) for
-  * sessions with [[graft.functions.expressions.GraftExtensions]], where
-  * it also covers subqueries/CTEs.
+  * The user's DuckDB-dialect SQL (e.g. the `SELECT * EXCLUDE(a, b)` of
+  * examples/fullExample/fullExample.yml:100-104) goes through
+  * [[GraftSqlParser.rewriteAll]] here, exactly once per statement, in
+  * every session; `spark.sql` itself is stock Spark SQL.
   *
   * Concurrency: `df` (and the read-function / CTAS views this stage
   * registers) live in the SESSION temp-view catalog, so concurrent pipelines must
@@ -571,17 +569,15 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // schema (its FROM spelling is the literal name `df`)
     val grpResolve: String => Option[Seq[String]] = t =>
       if (t.equalsIgnoreCase("df")) Some(df.columns.toSeq) else resolveRel(t)
+    // the schema-aware star rewrites, then the dialect layer: the one
+    // translation a statement gets before Spark parses it
+    val translate: String => String = s => GraftSqlParser.rewriteAll(
+      GraftSqlParser.rewriteColumns(
+        GraftSqlParser.rewriteReplace(s, df.columns.toSeq, resolveRel),
+        df.columns.toSeq, resolveRel), grpResolve)
     val stmt = GraftSqlParser.rewritePivotStatement(spark,
-      GraftSqlParser.rewriteUnpivotStatement(code3),
-      s => GraftSqlParser.rewriteAll(
-        GraftSqlParser.rewriteColumns(
-          GraftSqlParser.rewriteReplace(s, df.columns.toSeq, resolveRel),
-          df.columns.toSeq, resolveRel), grpResolve))
-    val rewritten = GraftSqlParser.rewriteSeededRandom(spark,
-      GraftSqlParser.rewriteAll(
-        GraftSqlParser.rewriteColumns(
-          GraftSqlParser.rewriteReplace(stmt, df.columns.toSeq, resolveRel),
-          df.columns.toSeq, resolveRel), grpResolve))
+      GraftSqlParser.rewriteUnpivotStatement(code3), translate)
+    val rewritten = GraftSqlParser.rewriteSeededRandom(spark, translate(stmt))
     graft.functions.expressions.DuckDialect.rejectSilentTraps(
       GraftSqlParser.SqlText(rewritten).mask)
     // deep/unbounded WITH RECURSIVE: warn about the one-job-per-level
@@ -594,19 +590,21 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // the typed-NULL global-aggregate arm, renamed+cast to the plain
     // statement's exact schema. Any failure falls back silently to the
     // plain statement (the pre-r17 Spark behavior).
+    def emptyArm(spec: GraftSqlParser.EmptyGroupingSpec,
+                 plain: DataFrame): Option[DataFrame] =
+      if (spark.sql(spec.probeSql).isEmpty) {
+        val types = spec.groupingExprs.map(e =>
+          e -> spark.sql(spec.typeProbe(e)).schema.head.dataType.sql).toMap
+        val arm = spark.sql(spec.buildArm(types))
+        Some(arm.select(arm.columns.zip(plain.schema.fields).map {
+          case (c, f) =>
+            org.apache.spark.sql.functions.col(s"`${c.replace("`", "``")}`")
+              .cast(f.dataType).as(f.name)
+        }.toSeq: _*))
+      } else None
     GraftSqlParser.emptyGroupingSetsSpec(rewritten).foreach { spec =>
       scala.util.Try {
-        val plain = GraftSqlParser.withDialectHint(code)(spark.sql(rewritten))
-        if (spark.sql(spec.probeSql).isEmpty) {
-          val types = spec.groupingExprs.map(e =>
-            e -> spark.sql(spec.typeProbe(e)).schema.head.dataType.sql).toMap
-          val arm = spark.sql(spec.buildArm(types))
-          Some(arm.select(arm.columns.zip(plain.schema.fields).map {
-            case (c, f) =>
-              org.apache.spark.sql.functions.col(s"`${c.replace("`", "``")}`")
-                .cast(f.dataType).as(f.name)
-          }.toSeq: _*))
-        } else None
+        emptyArm(spec, GraftSqlParser.withDialectHint(code)(spark.sql(rewritten)))
       } match {
         case scala.util.Success(Some(armDf)) => return armDf
         case _ =>
@@ -622,23 +620,13 @@ final case class SqlStage(name: String, code: String) extends Stage {
       val views = scala.collection.mutable.ListBuffer.empty[String]
       scala.util.Try {
         val repls = cteSites.flatMap { case (bs, be, spec) =>
-          val body = rewritten.substring(bs, be)
-          val plain = spark.sql(body)
-          if (spark.sql(spec.probeSql).isEmpty) {
-            val types = spec.groupingExprs.map(e =>
-              e -> spark.sql(spec.typeProbe(e)).schema.head.dataType.sql).toMap
-            val arm = spark.sql(spec.buildArm(types))
-            val aligned = arm.select(arm.columns.zip(plain.schema.fields).map {
-              case (c, f) =>
-                org.apache.spark.sql.functions.col(s"`${c.replace("`", "``")}`")
-                  .cast(f.dataType).as(f.name)
-            }.toSeq: _*)
+          emptyArm(spec, spark.sql(rewritten.substring(bs, be))).map { aligned =>
             val vn = "graft_empty_gs_" +
               java.util.UUID.randomUUID().toString.replace("-", "")
             aligned.createOrReplaceTempView(vn)
             views += vn
-            Some((bs, be, s"SELECT * FROM $vn"))
-          } else None
+            (bs, be, s"SELECT * FROM $vn")
+          }
         }
         if (repls.isEmpty) None
         else {

@@ -4788,4 +4788,41 @@ class DialectSpec extends SparkSpec {
     fails("printf('%*d', 8)", "out of range")
   }
 
+  // ---- the dialect layer runs once per statement, in every session shape.
+  // TestSpark is a plain session; graft.Main and library users build
+  // theirs with GraftSession (extensions on). A fresh GraftSession shares
+  // the test SparkContext, so these never stop() it.
+  private def graftSession(): org.apache.spark.sql.SparkSession =
+    GraftSession.builder("local[2]").create()
+
+  test("a sql stage translates once in a GraftSession: backslash literals keep DuckDB's meaning") {
+    val code = """SELECT t, regexp_replace(t, '\s+', '_', 'g') AS r,
+      |len(regexp_extract_all(t, '\w+')) AS n FROM df""".stripMargin
+    val texts = Seq("a  b", "one two\tthree", "x")
+    def run(s: org.apache.spark.sql.SparkSession): Seq[Row] = {
+      import s.implicits._
+      SqlStage("re", code).apply(s, texts.toDF("t")).collect().toSeq.sortBy(_.getString(0))
+    }
+    val plain = run(spark)
+    assert(plain.map(_.getString(1)) == Seq("a_b", "one_two_three", "x"))
+    assert(plain.map(_.getAs[Number](2).intValue) == Seq(2, 3, 1))
+    assert(run(graftSession()) == plain)
+  }
+
+  test("spark.sql over a rewriteAll text is stock Spark in a GraftSession") {
+    val sql = GraftSqlParser.rewriteAll(
+      """SELECT '\d+' AS lit, regexp_replace('a1b22', '\d+', '#') AS r""")
+    val plain = spark.sql(sql).collect().toSeq
+    assert(plain == Seq(Row("\\d+", "a#b22"))) // no 'g': first match only
+    assert(graftSession().sql(sql).collect().toSeq == plain)
+  }
+
+  test("a GraftSession resolves the whole graft function list without register()") {
+    val gs = graftSession()
+    val missing = graft.functions.expressions.GraftFunctions.fns.map(_._1).filterNot(n =>
+      gs.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"unresolved in an extension-built session: $missing")
+  }
+
 }
