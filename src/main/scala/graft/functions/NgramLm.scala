@@ -258,8 +258,6 @@ object NgramLm {
 
   /** Persist a trained [[BigramLmModel]] (any order — empty tri/quad
     * tables round-trip as empty) under `path` as five parquet tables.
-    * `meta` is written LAST, so `meta/_SUCCESS` marks a complete save
-    * (the build-if-absent pattern checks it).
     */
   def save(spark: SparkSession, model: BigramLmModel, path: String): Unit = {
     val sLong = (n: String) => StructField(n, LongType, nullable = false)
@@ -361,7 +359,7 @@ object NgramLm {
       Seq("uni", "bi", "tri", "quad", "meta")))
 
   /** Persist [[kneserNey]]'s derived statistics alongside their base
-    * model (the base saves first; `knmeta` last = completion marker).
+    * model under `path`.
     */
   def saveKn(spark: SparkSession, model: KnModel, path: String): Unit = {
     save(spark, model.base, path)

@@ -57,13 +57,18 @@ object ConfigLoader {
         }
       case _ => Nil
     }
+    // Sources.load applies it as a Spark LIMIT, which takes an Int
+    val sampleLines = num(root.toMap, "sampleLines", 0L)
+    if (sampleLines > Int.MaxValue)
+      throw new IllegalArgumentException(
+        s"sampleLines: $sampleLines exceeds the maximum row limit ${Int.MaxValue}")
     PipelineConfig(
       // "" = not declared → Sources.load sniffs the delimiter, matching
       // the reference's read_csv_auto path (countries.yml declares none
       // but ships a ';' CSV)
       inDelimiter = str(root.toMap, "inDelimiter", ""),
       outDelimiter = str(root.toMap, "outDelimiter", ","),
-      sampleLines = num(root.toMap, "sampleLines", 0L),
+      sampleLines = sampleLines,
       reloadConfigEverySeconds = num(root.toMap, "reloadConfigEverySeconds",
         num(root.toMap, "reloadConfigEvery", 0L)).toInt,
       filters = filters)

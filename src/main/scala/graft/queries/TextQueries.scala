@@ -1051,30 +1051,6 @@ object TextQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** Content-keyed tmpdir path for a persisted LM (the q104/q168-q170
-    * index scheme): SF dir + corpus count + training parameters, so
-    * different SFs, regenerated corpora and differently-parameterized
-    * trainers never load each other's model; under tmpdir — never
-    * inside the repo or testdata.
-    */
-  private def lmPath(kind: String, key: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_${kind}_lm_$tag"
-  }
-
-  /** Snapshot id for the corpus behind `d` — file metadata only (size +
-    * mtime of documents.parquet), zero Spark jobs (VERDICT r15 nit: the
-    * previous `docs.count()` keying paid a full column-pruned scan per
-    * invocation; at 100 TB the snapshot id is the catalog/table-version
-    * string, exactly this role). An in-place rewrite of the parquet
-    * still changes the key, so a stale model can't serve a new corpus.
-    */
-  private def snapshotId(d: String): String = {
-    val f = new java.io.File(s"$d/documents.parquet")
-    s"$d|len=${f.length()}|mt=${f.lastModified()}"
-  }
-
   /** PERSISTED-LM probe (r15, VERDICT r14 #1): the q104/q168-q170
     * amortization applied to the LM family — [[graft.functions.NgramLm
     * .trainQuadgramLm]]'s full order-4 model is written once per
@@ -1088,14 +1064,18 @@ object TextQueries {
     * matter which run populated the model; the oracle is q166's FULL
     * order-4 replay, so the persisted path is hash-anchored end to
     * end, not sentinel-waved.
+    *
+    * Memo: the model is a [[graft.Tables.persisted]] artifact keyed on
+    * the documents files' (length, mtime) snapshot and the training
+    * parameters, so different SFs, corpora rewritten in place and
+    * differently-parameterized trainers never load each other's model.
     */
   def q179LmPersisted(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val toksCol = split(col("text"), " ")
-    val path = lmPath("quad", s"${snapshotId(d)}|v=24|mc=2|o=4")
-    if (!new java.io.File(s"$path/meta/_SUCCESS").exists())
+    val path = graft.Tables.persisted("lm_quad", "v=24|mc=2|o=4", Seq(docs))(
       graft.functions.NgramLm.save(s, graft.functions.NgramLm.trainQuadgramLm(
-        docs, toksCol, maxVocab = 24, minCount = 2), path)
+        docs, toksCol, maxVocab = 24, minCount = 2), _))
     val lm = graft.functions.NgramLm.load(s, path)
     val ppl = graft.functions.NgramLm.perplexity(docs, lm, toksCol,
       lambda = 0.9, lambda3 = 0.5, lambda4 = 0.5)
@@ -1116,16 +1096,17 @@ object TextQueries {
     * Same exact-Long round-trip argument as [[q179LmPersisted]]; the
     * oracle is q151's full KN replay, so election, prune+cap, derived
     * statistics and the discounted probability all stay hash-anchored
-    * through the persistence round-trip.
+    * through the persistence round-trip. Memo: a
+    * [[graft.Tables.persisted]] artifact keyed on the documents files'
+    * snapshot and the training parameters, as q179.
     */
   def q175KnPersisted(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val toksCol = split(col("text"), " ")
-    val path = lmPath("kn", s"${snapshotId(d)}|v=24|mc=2|mb=500|kn")
-    if (!new java.io.File(s"$path/knmeta/_SUCCESS").exists())
+    val path = graft.Tables.persisted("lm_kn", "v=24|mc=2|mb=500", Seq(docs))(
       graft.functions.NgramLm.saveKn(s, graft.functions.NgramLm.kneserNey(
         graft.functions.NgramLm.trainBigramLm(
-          docs, toksCol, maxVocab = 24, minCount = 2, maxBigrams = 500)), path)
+          docs, toksCol, maxVocab = 24, minCount = 2, maxBigrams = 500)), _))
     val kn = graft.functions.NgramLm.loadKn(s, path)
     val ppl = graft.functions.NgramLm.knPerplexity(docs, kn, toksCol, discount = 0.75)
     docs.select(col("doc_id"), size(toksCol).cast("long").as("n_toks"),

@@ -9,15 +9,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  /** Load a tabular file by extension. CSV/TSV/TXT get header + schema
-    * inference with the configured delimiter (Database.py:77-78); parquet
-    * is native (Database.py:79-80); `s3://` becomes `s3a://` and is read
-    * through the Hadoop S3A connector with the default credential chain —
-    * the Spark analog of the reference's httpfs + CREDENTIAL_CHAIN secret
-    * (Database.py:72-75). Unknown extensions fail fast (Database.py:81-82).
-    * `sampleLines > 0` limits rows exactly once at the source (the
-    * reference leaks its LIMIT into later cursors — SURVEY §2 O5).
-    */
   /** `TAB`/`tab` mean a tab character (reference loaders.py:10-13,
     * "use TAB or tab por tabs" in the example YAML comments).
     */
@@ -51,6 +42,15 @@ object Sources {
       header.split(java.util.regex.Pattern.quote(d), -1).length)
   }
 
+  /** Load a tabular file by extension. CSV/TSV/TXT get header + schema
+    * inference with the configured delimiter (Database.py:77-78); parquet
+    * is native (Database.py:79-80); `s3://` becomes `s3a://` and is read
+    * through the Hadoop S3A connector with the default credential chain —
+    * the Spark analog of the reference's httpfs + CREDENTIAL_CHAIN secret
+    * (Database.py:72-75). Unknown extensions fail fast (Database.py:81-82).
+    * `sampleLines > 0` limits rows exactly once at the source (the
+    * reference leaks its LIMIT into later cursors — SURVEY §2 O5).
+    */
   def load(spark: SparkSession, path: String, inDelimiter: String = ",",
            sampleLines: Long = 0L): DataFrame = {
     val p = if (path.startsWith("s3://")) "s3a://" + path.stripPrefix("s3://") else path

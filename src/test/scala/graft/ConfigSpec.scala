@@ -86,4 +86,14 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg.filters.head.filterThreads == 1)   // filefilter.py:198
     assert(cfg.filters.head.chunkSize == 10000)   // filefilter.py:312
   }
+
+  test("sampleLines above Int.MaxValue is rejected with the key named") {
+    val e = intercept[IllegalArgumentException] {
+      ConfigLoader.fromYaml("sampleLines: 3000000000\nfilters: []\n")
+    }
+    assert(e.getMessage.contains("sampleLines") && e.getMessage.contains("3000000000"))
+    // the largest limit Spark can take still loads
+    assert(ConfigLoader.fromYaml(s"sampleLines: ${Int.MaxValue}\nfilters: []\n")
+      .sampleLines == Int.MaxValue)
+  }
 }

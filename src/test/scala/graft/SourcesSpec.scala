@@ -79,18 +79,23 @@ class SourcesSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == Tables.documents(spark, sf).count())
   }
 
-  test("Tables.rowCount keys its memo on the file-metadata snapshot, not the bare path") {
-    // the memo is load-bearing for the persisted-index cache keys
-    // (q104/q168-q170): an in-process rewrite of the parquet MUST
-    // change the key, or a stale count silently keys a stale index
-    // (VERDICT r18 #4 / ADVICE — the dc3f8d4 persisted-LM pattern)
-    val path = tmp("rowcount_rewrite")
+  test("the store keys an artifact on the file-metadata snapshot, not the bare path") {
+    // the key is load-bearing for every persisted artifact (q104/q168-q170
+    // indexes, q175/q179 models, the exact references): an in-place
+    // rewrite of the parquet MUST change it, or a stale artifact is served
+    val path = tmp("store_rewrite")
+    def key(): String = Tables.storePath("spec", "", Seq(spark.read.parquet(path)))
     spark.range(3).toDF("id").repartition(1).write.mode("overwrite").parquet(path)
-    assert(Tables.rowCount(spark, path) == 3L)
+    val k3 = key()
     spark.range(7).toDF("id").repartition(1).write.mode("overwrite").parquet(path)
-    assert(Tables.rowCount(spark, path) == 7L,
-      "rewritten parquet must re-key the memo (stale-count hazard)")
-    // and the memo still memoizes: same snapshot → same cached value
-    assert(Tables.rowCount(spark, path) == 7L)
+    val k7 = key()
+    assert(k7 != k3, "rewritten parquet must re-key the artifact (stale-artifact hazard)")
+    // and the key is stable: same snapshot, same path
+    assert(key() == k7)
+    // a derived input (a filtered batch) keys apart from its source
+    assert(Tables.storePath("spec", "", Seq(spark.read.parquet(path).filter(col("id") < 2))) != k7)
+    // a cached input still keys on its files (its optimized plan has none)
+    val cached = spark.read.parquet(path).cache()
+    try assert(key() == k7) finally cached.unpersist()
   }
 }

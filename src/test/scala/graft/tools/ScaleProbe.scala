@@ -115,16 +115,11 @@ object ScaleProbe {
             hashKeys = true)
             .agg(sum(length(col("clean_text")))).collect()(0).getLong(0)),
         // persisted-index probe (q104's steady state): build+save once
-        // per corpus dir, load+probe timed
+        // per corpus snapshot, load+probe timed
         "q104_ivf_probe" -> (() => {
-          // same tag scheme as the q104 gate query: dir + corpus count +
-          // build parameters, so differently-sized builds never collide
-          val key = s"$d|n=$nEmb|nlist=$nlist|refine=1"
-          val tag = java.security.MessageDigest.getInstance("MD5")
-            .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-          val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_$tag"
-          if (!new java.io.File(s"$path/assigned/_SUCCESS").exists())
-            VF.saveIvf(VF.buildIvf(emb, nlist = nlist, refine = 1), path)
+          // the q104 gate's store kind: at nlist = 16 both share one index
+          val path = graft.Tables.persisted("ivf", s"nlist=$nlist|refine=1", Seq(emb))(
+            VF.saveIvf(VF.buildIvf(emb, nlist = nlist, refine = 1), _))
           VF.ivfProbe(emb.filter(col("vec_id") < 10),
             VF.loadIvf(spark, path), k = 5, nprobe = VF.autoNprobe(nlist)).count()
         }),
@@ -244,34 +239,31 @@ object ScaleProbe {
             .agg(sum(length(col("clean_text")))).collect()(0).getLong(0)),
         // r15 persisted compressed probes (VERDICT r14 #8): the
         // q104_ivf_probe scheme for the whole compression family —
-        // build+save once per corpus dir (untimed via the marker
-        // check), load+probe timed, so the slope prices SERVING; the
+        // build+save once per corpus snapshot (the store's untimed
+        // warm-up run), load+probe timed, so the slope prices SERVING; the
         // probe should scale with the corpus only through the
         // posting-list / encoded-scan side
         "q168_sq_probe" -> (() => {
-          val path = probePath("sq", s"$d|n=$nEmb|sq8")
-          if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
-            VF.saveSq(VF.buildSq(emb), path)
+          val path = graft.Tables.persisted("sq", "sq8", Seq(emb))(
+            VF.saveSq(VF.buildSq(emb), _))
           val idx = VF.SqIndex(graft.Tables.raw(spark, s"$path/params"),
             graft.Tables.raw(spark, s"$path/encoded"))
           VF.sqProbe(emb.filter(col("vec_id") < 10), idx, emb,
             k = 5, rerank = 64).count()
         }),
         "q169_pq_probe" -> (() => {
-          val path = probePath("pq", s"$d|n=$nEmb|m=16|ksub=64|iters=1")
-          if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
-            VF.savePq(VF.buildPq(emb, m = 16, ksub = 64, iters = 1), path)
+          val path = graft.Tables.persisted("pq", "m=16|ksub=64|iters=1", Seq(emb))(
+            VF.savePq(VF.buildPq(emb, m = 16, ksub = 64, iters = 1), _))
           val idx = VF.PqIndex(graft.Tables.raw(spark, s"$path/codebooks"),
             graft.Tables.raw(spark, s"$path/encoded"))
           VF.pqProbe(emb.filter(col("vec_id") < 10), idx, emb,
             k = 5, rerank = 128).count()
         }),
         "q170_ivfpq_probe" -> (() => {
-          val path = probePath("ivfpq",
-            s"$d|n=$nEmb|nlist=$nlist|refine=1|m=16|ksub=64|iters=1|residual=1")
-          if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
+          val path = graft.Tables.persisted("ivfpq",
+            s"nlist=$nlist|refine=1|m=16|ksub=64|iters=1|residual=1", Seq(emb))(
             VF.saveIvfPq(VF.buildIvfPq(emb, nlist = nlist, refine = 1,
-              m = 16, ksub = 64, iters = 1, residual = true), path)
+              m = 16, ksub = 64, iters = 1, residual = true), _))
           val idx = VF.IvfPqIndex(graft.Tables.raw(spark, s"$path/centroids"),
             graft.Tables.raw(spark, s"$path/codebooks"),
             graft.Tables.raw(spark, s"$path/encoded"))
@@ -284,24 +276,16 @@ object ScaleProbe {
         // grows with the corpus
         "q179_lm_score" -> (() => {
           val t = split(col("text"), " ")
-          val path = probePath("lm4", s"$d|n=$nDocs|v=65536|mc=2|o=4")
-          if (!new java.io.File(s"$path/meta/_SUCCESS").exists())
+          val path = graft.Tables.persisted("lm_quad", "v=65536|mc=2|o=4", Seq(docs))(
             graft.functions.NgramLm.save(spark,
               graft.functions.NgramLm.trainQuadgramLm(docs, t,
-                maxVocab = 65536, minCount = 2), path)
+                maxVocab = 65536, minCount = 2), _))
           val lm = graft.functions.NgramLm.load(spark, path)
           docs.select(graft.functions.NgramLm.perplexity(docs, lm, t,
             lambda = 0.9, lambda3 = 0.5, lambda4 = 0.5)
             .as("p")).agg(count(col("p"))).collect()(0).getLong(0)
         }),
       )
-    }
-
-    /** content-keyed tmp path, the q104 gate's tag scheme. */
-    def probePath(kind: String, key: String): String = {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      s"${sys.props("java.io.tmpdir")}/graft_scale_${kind}_$tag"
     }
 
     val results = scala.collection.mutable.LinkedHashMap[String,
